@@ -990,7 +990,7 @@ object Dedup {
     // maintenance op (or explicit [[compactSignatures]]) folds; the
     // count check is one directory listing, no Spark job.
     if (committedTombstonePaths(spark, live).size >=
-        spark.conf.get("spark.graft.autoCompactPendingBatches", "8").toInt)
+        MaintainedComponents.autoCompactPendingBatches(spark))
       compactSignatures(spark, rootPath)
   }
 

@@ -230,7 +230,7 @@ object MaintainedComponents {
     * Shared with the signature tombstones ([[Dedup
     * .deleteSignaturesDeferred]]) — the same merge-on-read seam.
     */
-  private def autoCompactPendingBatches(spark: SparkSession): Int =
+  private[operators] def autoCompactPendingBatches(spark: SparkSession): Int =
     spark.conf.get("spark.graft.autoCompactPendingBatches", "8").toInt
 
   private def relabelBatchDir(live: String, batchId: Long): Path =

@@ -237,10 +237,10 @@ object MaintainedSample {
     val bgRows = MaintainedAgg.withAggPart(
       rem.select(groupCol).union(addSk.select(groupCol)).distinct(),
       Seq(groupCol)).collect()
-    val parts = bgRows.map(_.getInt(1)).distinct.toSeq
+    val parts = bgRows.map(_.getAs[Int]("agg_part")).distinct.toSeq
     val batchGroups = spark.createDataFrame(
       java.util.Arrays.asList(bgRows.map(r =>
-        org.apache.spark.sql.Row(r.get(0))): _*), bgSchema)
+        org.apache.spark.sql.Row(r.getAs[Any](groupCol))): _*), bgSchema)
     if (parts.isEmpty) {
       PartCommit.markApplied(spark, path, batchId)
       return

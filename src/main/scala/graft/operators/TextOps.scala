@@ -1205,7 +1205,7 @@ object TextOps {
     // view); the corpus-count view is independent of both and overlaps
     // them (guide §2.6) — its tiny count job back-fills the tf write's
     // straggler tail
-    parallel2(
+    graft.Par.par2(
       () => {
         graft.io.MaintainedAgg.write(
           termContribs(df, idCol, textCol, groupCol)
@@ -1243,12 +1243,12 @@ object TextOps {
     // tables applied and some not, exactly like the sequential form —
     // a replay with the same batchId no-ops on the applied ones and
     // completes the rest (each table's exactly-once is its own mark).
-    val (rem, add) = parallel2(
+    val (rem, add) = graft.Par.par2(
       () => termContribs(removedDocs, idCol, textCol, groupCol)
         .localCheckpoint(),
       () => termContribs(addedDocs, idCol, textCol, groupCol)
         .localCheckpoint())
-    parallel3(
+    graft.Par.map(Seq[() => Unit](
       () => graft.io.MaintainedAgg.deltaRefresh(spark, s"$dir/tf",
         rem, add, Seq(groupCol, "tok"), Seq("tf"), "n_docs", batchId),
       () => graft.io.MaintainedAgg.deltaRefresh(spark, s"$dir/df",
@@ -1257,14 +1257,9 @@ object TextOps {
       () => graft.io.MaintainedAgg.deltaRefresh(spark, s"$dir/n",
         removedDocs.select(lit("corpus").as("scope")),
         addedDocs.select(lit("corpus").as("scope")),
-        Seq("scope"), Seq.empty, "n_docs", batchId))
+        Seq("scope"), Seq.empty, "n_docs", batchId)), 3)(_())
+    ()
   }
-
-  private def parallel2[A, B](fa: () => A, fb: () => B): (A, B) =
-    graft.Par.par2(fa, fb)
-
-  private def parallel3(fs: (() => Unit)*): Unit =
-    graft.Par.par3(fs: _*)
 
   /** Serve the characteristic-terms report FROM THE STORED STATE —
     * the [[topTerms]] output shape and the exact same ×/÷-only score

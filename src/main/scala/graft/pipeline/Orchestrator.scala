@@ -4,6 +4,7 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Par
 import graft.io.Csv
 import graft.model.{Catalogs, TableCatalog}
 
@@ -17,8 +18,7 @@ import graft.model.{Catalogs, TableCatalog}
   * layer. Step 2 (renames) is absorbed by the name→path catalog
   * ([[graft.model.TableCatalog.pathFor]]). Step 6 (JDBC) is
   * [[graft.io.Jdbc]], pluggable as the sink. Step 7 (report merge) is
-  * [[RunReport.toJson]]. Dated-run layout/cleanup is
-  * [[graft.io.RunPaths]].
+  * [[Reports]]. Dated-run layout/cleanup is [[graft.io.RunPaths]].
   */
 object Orchestrator {
 
@@ -86,66 +86,13 @@ object Orchestrator {
     def topEliminated(n: Int = 5): Seq[Steps.FilterStats] =
       filterStats.sortBy(s => (-s.stationsEliminated, s.table)).take(n)
 
-    def toJson: String = {
-      // full RFC-8259 escape: error messages routinely carry newlines
-      // (Spark embeds plan fragments), which would otherwise make the
-      // report unparseable exactly when it matters most
-      def q(s: String): String = "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-      def pct(x: Double) = math.round(x * 100.0) / 100.0
-      val viewsJson = views.map { v =>
-        s"""{"view":${q(v.name)},"status":${q(v.status)},"rows":${v.rows},""" +
-          s""""columns":[${v.columns.map(q).mkString(",")}]""" +
-          v.error.map(e => s""","error":${q(e)}""").getOrElse("") + "}"
-      }.mkString("[", ",", "]")
-      val statsJson = filterStats.map { s =>
-        s"""{"table":${q(s.table)},"rows_before":${s.rowsBefore},""" +
-          s""""null_station_rows":${s.nullStationRows},""" +
-          s""""rows_eliminated":${s.rowsEliminated},"rows_after":${s.rowsAfter},""" +
-          s""""stations_before":${s.stationsBefore},""" +
-          s""""stations_eliminated":${s.stationsEliminated},""" +
-          s""""stations_after":${s.stationsAfter}}"""
-      }.mkString("[", ",", "]")
-      val topJson = topEliminated().map(s =>
-        s"""{"table":${q(s.table)},"stations_eliminated":${s.stationsEliminated},""" +
-          s""""rows_eliminated":${s.rowsEliminated}}""").mkString("[", ",", "]")
-      val totalRowsBefore = filterStats.map(_.rowsBefore).sum
-      val totalRowsElim = filterStats.map(_.rowsEliminated).sum
-      val elimPct =
-        if (totalRowsBefore == 0) 0.0
-        else totalRowsElim.toDouble / totalRowsBefore * 100
-      val removeJson = removeStats.map { r =>
-        s"""{"archivo":${q(r.table)},""" +
-          s""""columnas_originales":[${r.colsOriginal.map(q).mkString(",")}],""" +
-          s""""columnas_eliminadas":[${r.colsRemoved.map(q).mkString(",")}],""" +
-          s""""num_columnas_original":${r.colsOriginal.size},""" +
-          s""""num_columnas_final":${r.colsFinal.size}}"""
-      }.mkString("[", ",", "]")
-      s"""{"views":$viewsJson,""" +
-        s""""resumen":{"vistas_totales":${views.size},""" +
-        s""""vistas_exitosas":${successes.size},""" +
-        s""""vistas_fallidas":${views.size - successes.size},""" +
-        s""""tasa_exito":${pct(successRate)}},""" +
-        s""""remocion_columnas":{"archivos":${removeStats.size},""" +
-        s""""archivos_con_columnas":${removeStats.count(_.colsRemoved.nonEmpty)},""" +
-        s""""total_columnas_eliminadas":${removeStats.map(_.colsRemoved.size).sum},""" +
-        s""""detalle":$removeJson},""" +
-        s""""filtrado":{"archivos":${filterStats.size},""" +
-        s""""umbral_minimo":${Steps.MinRecords},""" +
-        s""""total_estaciones_eliminadas":${filterStats.map(_.stationsEliminated).sum},""" +
-        s""""total_registros_eliminados":$totalRowsElim,""" +
-        s""""total_registros_null":${filterStats.map(_.nullStationRows).sum},""" +
-        s""""porcentaje_registros_eliminados":${pct(elimPct)},""" +
-        s""""top_eliminadas":$topJson,""" +
-        s""""archivos_detalle":$statsJson}}"""
-    }
+    /** Step-4 totals over every filtered file
+      * (steps/step4_filter_stations.py:247-295).
+      */
+    def rowsBefore: Long = filterStats.map(_.rowsBefore).sum
+    def rowsEliminated: Long = filterStats.map(_.rowsEliminated).sum
+    def eliminatedPct: Double =
+      if (rowsBefore == 0) 0.0 else rowsEliminated.toDouble / rowsBefore * 100
   }
 
   /** Run stages 3–5 over a loader (table name → raw DataFrame),
@@ -166,13 +113,18 @@ object Orchestrator {
     *   re-scanning CSV per subtree dominated the wall-clock;
     * - each view DataFrame is persisted so the CSV write and the
     *   report count() execute the plan once, not twice;
-    * - views run on `parallelism` driver threads: the per-view jobs
-    *   are small, so concurrent scheduling keeps the executor pool
-    *   busy instead of paying 33 × sequential job latency.
+    * - all views (consolidated, simple, both catalogs) are one task
+    *   list run by one [[graft.Par.map]] of width `parallelism`: the
+    *   per-view jobs are small, so `parallelism` views in flight keep
+    *   the executor pool busy instead of paying 33 × sequential job
+    *   latency, and with no barrier between view kinds a thread freed
+    *   by a short view takes the next at once — the 13-member entity
+    *   catalog overlaps the last views. A member shared by several
+    *   views is loaded once, by whichever view asks first.
     *
     * Failure semantics mirror the reference: any view task error is
-    * captured as a status=error row and the run continues; the thread
-    * pool and persisted frames are released in a finally block.
+    * captured as a status=error row and the run continues; persisted
+    * frames are released in a finally block.
     */
   def run(spark: SparkSession, loadRaw: String => Option[DataFrame],
           outDir: String, filterStations: Boolean = true,
@@ -211,16 +163,6 @@ object Orchestrator {
           cleaned.persist()
         })
 
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = Executors.newFixedThreadPool(parallelism)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-
-    def inParallel[A](items: Seq[A])(f: A => ViewResult): Seq[ViewResult] =
-      Await.result(
-        Future.sequence(items.map(a => Future(f(a)))), Duration.Inf)
-
     /** One persisted view → CSV + counted result, errors captured.
       * Single-file mode writes exactly `{view}.csv` like the reference
       * (steps/step5_create_views.py:416-423); multi-part mode writes a
@@ -249,34 +191,32 @@ object Orchestrator {
             Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
       }
 
-    try {
-      val consolidated =
-        inParallel(Views.airViews ++ Views.waterConsolidatedViews) { v =>
-          emit(v.name, Consolidate.consolidate(v, load))
-        }
-      val simple = inParallel(Views.waterSimpleTables) { t =>
-        emit(s"v_$t", load(t).map(Consolidate.simpleWaterView))
-      }
-
-      // catalogs: v_estaciones from the dictionary (exact reference
-      // column order), v_entidades_agua from the CLEANED members — the
-      // reference rewrites raw/ in place at steps 3-4, so its step-5
-      // entity extraction only ever sees filtered data; building from
-      // loadRaw would leak sparse-eliminated stations into the catalog
-      val estaciones = dictDir.toSeq.map { d =>
-        emit("v_estaciones", Some(Catalogs.stationCatalog(spark, d)))
-      }
-      val entities = emit("v_entidades_agua",
-        Steps.entityCatalog(entitySources.flatMap {
-          case (table, colName, tipo, desc) =>
+    // one task per view, in report order; the catalogs close the list:
+    // v_estaciones from the dictionary (exact reference column
+    // order), v_entidades_agua from the CLEANED members — the
+    // reference rewrites raw/ in place at steps 3-4, so its step-5
+    // entity extraction only ever sees filtered data; building from
+    // loadRaw would leak sparse-eliminated stations into the catalog
+    val views: Seq[(String, () => Option[DataFrame])] =
+      (Views.airViews ++ Views.waterConsolidatedViews).map(v =>
+        v.name -> (() => Consolidate.consolidate(v, load))) ++
+        Views.waterSimpleTables.map(t =>
+          s"v_$t" -> (() => load(t).map(Consolidate.simpleWaterView))) ++
+        dictDir.toSeq.map(d =>
+          "v_estaciones" -> (() => Some(Catalogs.stationCatalog(spark, d)))) :+
+        ("v_entidades_agua" -> (() => Steps.entityCatalog(
+          entitySources.flatMap { case (table, colName, tipo, desc) =>
             load(table).map(df => (df, colName, tipo, desc))
-        }))
+          })))
 
-      RunReport(consolidated ++ simple ++ estaciones :+ entities,
+    try {
+      RunReport(
+        Par.map(views, parallelism) { case (name, build) =>
+          emit(name, build())
+        },
         statsMap.values.toSeq.sortBy(_.table),
         removeMap.values.toSeq.sortBy(_.table))
     } finally {
-      pool.shutdown()
       import scala.jdk.CollectionConverters._
       cache.values.asScala.flatten.foreach(_.unpersist(blocking = false))
     }

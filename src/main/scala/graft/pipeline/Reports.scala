@@ -109,9 +109,7 @@ object Reports {
   }
 
   /** The step-4 report (steps/step4_filter_stations.py:247-295). */
-  def step4Json(report: RunReport): JObject = {
-    val totalRowsBefore = report.filterStats.map(_.rowsBefore).sum
-    val totalElim = report.filterStats.map(_.rowsEliminated).sum
+  def step4Json(report: RunReport): JObject =
     JObject(
       "metadata" -> JObject(
         "etapa" -> jstr("filter_stations"),
@@ -120,12 +118,11 @@ object Reports {
         "archivos" -> JInt(report.filterStats.size),
         "total_estaciones_eliminadas" -> JInt(
           report.filterStats.map(_.stationsEliminated.toInt).sum),
-        "total_registros_eliminados" -> JLong(totalElim),
+        "total_registros_eliminados" -> JLong(report.rowsEliminated),
         "total_registros_null" -> JLong(
           report.filterStats.map(_.nullStationRows).sum),
-        "porcentaje_registros_eliminados" -> JDouble(round2(
-          if (totalRowsBefore == 0) 0.0
-          else totalElim.toDouble / totalRowsBefore * 100))),
+        "porcentaje_registros_eliminados" -> JDouble(
+          round2(report.eliminatedPct))),
       "top_eliminadas" -> JArray(report.topEliminated().map { s =>
         JObject("table" -> jstr(s.table),
           "stations_eliminated" -> JLong(s.stationsEliminated),
@@ -143,7 +140,6 @@ object Reports {
       }.toList),
       "tiempos" -> JObject(
         "total_segundos" -> JDouble(0.0), "nota" -> jstr(FusedNote)))
-  }
 
   /** The step-5 report (steps/step5_create_views.py report section);
     * carries the fused run's wall-clock.

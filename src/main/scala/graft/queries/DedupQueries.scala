@@ -333,7 +333,7 @@ object DedupQueries {
       // checkpointed baseSigs — overlap them (guide §2.6): the sig
       // write's tasks back-fill the closure's per-round straggler
       // tails instead of waiting for the whole iteration to finish
-      graft.Par.par3(
+      graft.Par.par2(
         () => Dedup.writeSignatures(baseSigs, "doc_id", sigPath),
         () => MaintainedComponents.write(
           Dedup.connectedComponents(basePairs, base.select("doc_id"),
@@ -356,7 +356,7 @@ object DedupQueries {
       // merge touches only the label store, append only the signature
       // store (parquet append: immutable files, and merge's scans ride
       // the pre-append listing above) — independent, overlapped
-      graft.Par.par3(
+      graft.Par.par2(
         () => MaintainedComponents.merge(s, labelPath,
           cross.unionByName(intra), batch.select("doc_id"), "doc_id",
           batchId = 1L),

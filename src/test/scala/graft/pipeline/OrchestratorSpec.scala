@@ -2,7 +2,10 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path}
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.DataFrame
+import org.json4s.JObject
+import org.json4s.jackson.JsonMethods
 
 import graft.SparkSpec
 import graft.io.Csv
@@ -45,6 +48,10 @@ class OrchestratorSpec extends SparkSpec {
     if (Files.exists(p)) Some(Csv.read(spark, p.toString)) else None
   }
 
+  /** A step report as written to disk, parsed back. */
+  private def parsed(step: JObject): JsonNode =
+    new ObjectMapper().readTree(JsonMethods.compact(JsonMethods.render(step)))
+
   test("orchestrator produces views + report over fixture CSVs") {
     val outDir = Files.createTempDirectory("graft_ine_out").toString
     val report = Orchestrator.run(spark, load, outDir, filterStations = true,
@@ -77,7 +84,8 @@ class OrchestratorSpec extends SparkSpec {
     assert(byName("v_mp25_anual").status == "error")
 
     // report JSON is parseable shape
-    assert(report.toJson.startsWith("""{"views":["""))
+    val vistas = parsed(Reports.step5Json(report, 0.0)).at("/vistas")
+    assert(vistas.isArray && vistas.size == report.views.size)
   }
 
   test("dictionary run: v_estaciones emitted, detailed step-4/7 report") {
@@ -105,10 +113,11 @@ class OrchestratorSpec extends SparkSpec {
     assert(st.nullStationRows == 0)
 
     // consolidated step-7 merge carries the reference's summary fields
-    val json = report.toJson
-    assert(json.contains(""""resumen":{"vistas_totales":33"""))
-    assert(json.contains(""""umbral_minimo":3"""))
-    assert(json.contains(""""top_eliminadas":["""))
+    val step4 = parsed(Reports.step4Json(report))
+    assert(parsed(Reports.step5Json(report, 0.0))
+      .at("/resumen/vistas_totales").asInt == 33)
+    assert(step4.at("/metadata/umbral_minimo").asInt == 3)
+    assert(step4.at("/top_eliminadas").isArray)
     assert(report.successRate > 0 && report.successRate < 100)
     assert(report.topEliminated().head.table == "temp_max_absoluta")
   }
@@ -127,7 +136,8 @@ class OrchestratorSpec extends SparkSpec {
     val rm = report.removeStats.find(_.table == "temp_max_absoluta").get
     assert(rm.colsRemoved == Seq("Flag Codes", "Flags"))
     assert(rm.colsFinal.size == rm.colsOriginal.size - 2)
-    assert(report.toJson.contains(""""remocion_columnas":{"archivos":"""))
+    assert(parsed(Reports.step3Json(report)).at("/resumen/total_archivos")
+      .asInt == report.removeStats.size)
 
     Reports.writeStepReports(spark, base, today, report,
       elapsedSeconds = 12.34)
@@ -214,7 +224,8 @@ class OrchestratorSpec extends SparkSpec {
     // where Spark failures actually surface
     val poison: String => Option[DataFrame] = {
       case "temp_max_absoluta" => load("temp_max_absoluta")
-        .map(_.withColumn("Value", expr("raise_error('task boom')")))
+        .map(_.withColumn("Value",
+          expr("raise_error('task boom\\nsecond line')")))
       case name => load(name)
     }
     val report = Orchestrator.run(spark, poison, outDir,
@@ -223,8 +234,31 @@ class OrchestratorSpec extends SparkSpec {
     assert(byName("v_temperatura").status == "error",
       "runtime task failures must degrade to an error row, not abort")
     assert(byName("v_volumen_del_embalse_por_embalse").status == "success")
-    // the consolidated report stays VALID JSON even with a multi-line
+    // the step-5 report stays VALID JSON even with a multi-line
     // Spark error message embedded
-    new com.fasterxml.jackson.databind.ObjectMapper().readTree(report.toJson)
+    val error = byName("v_temperatura").error.get
+    assert(error.contains("\n"), "fixture must embed a multi-line error")
+    val rows = parsed(Reports.step5Json(report, 0.0)).at("/vistas")
+    assert((0 until rows.size).map(rows.get).exists(r =>
+      r.at("/view").asText == "v_temperatura" &&
+        r.at("/error").asText == error))
+  }
+
+  test("one-thread and four-thread schedules give the same report") {
+    def runWith(parallelism: Int): Orchestrator.RunReport =
+      Orchestrator.run(spark, load,
+        Files.createTempDirectory(s"graft_ine_par$parallelism").toString,
+        filterStations = true, singleFileCsv = true,
+        parallelism = parallelism, detailedStats = true)
+    def shape(r: Orchestrator.RunReport) =
+      r.views.map(v => (v.name, v.status, v.rows, v.columns))
+    val serial = runWith(1)
+    val parallel = runWith(4)
+    assert(shape(parallel) == shape(serial))
+    assert(parallel.filterStats == serial.filterStats)
+    assert(parallel.removeStats == serial.removeStats)
+    // report order is task order, whichever view finishes first
+    assert(parallel.views.map(_.name) == Views.all.map(_.name) ++
+      Views.waterSimpleTables.map(t => s"v_$t") :+ "v_entidades_agua")
   }
 }
