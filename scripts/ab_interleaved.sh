@@ -9,10 +9,15 @@
 # per-query medians + spread.
 #
 # usage: ab_interleaved.sh <jarA> <jarB> <sfDir> <sweeps> [queryCsv]
-# env:   AB_TOOL       main class (default graft.Bench)
+# env:   AB_TOOL       main class: graft.Bench (default) or
+#                      graft.tools.LifecycleBench, the two mains that
+#                      print a one-line result
 #        AB_TOOL_ARGS  args for AB_TOOL (overrides queryCsv; e.g.
 #                      "/tmp/graft_sf10 5" for graft.tools.LifecycleBench)
-#        SPARK_GRAFT_CPUS  (default 32)
+#        SPARK_GRAFT_CPUS  (default 32; every main sizes its session
+#                      from it through Sessions.local)
+# LifecycleBench legs also carry a "jobs" object (Spark jobs per op);
+# ab_aggregate.py reduces the "ops" seconds and ignores it.
 set -u
 JARA=$1; JARB=$2; SF=$3; N=$4; QUERIES=${5:-}
 TOOL=${AB_TOOL:-graft.Bench}

@@ -1,11 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.annotation.tailrec
+import scala.util.{Failure, Success, Try}
 
 /** Benchmark main: every SparkEntry query timed on
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
-  * Hygiene for round-over-round comparability: the session goes
-  * through [[Sessions.tuned]] (UTC, AQE, extensions — identical to
+  * Hygiene for round-over-round comparability: the session comes from
+  * [[Sessions.local]] (UTC, AQE, extensions — identical to
   * Verify/tests), CPUs default to the real machine instead of an
   * arbitrary constant, and each query reports best-of-3 so a JIT/page-
   * cache cold first run can't masquerade as a regression.
@@ -13,20 +15,31 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   private val Runs = 3
 
+  /** Best of `runs` timed runs of `body`, or the first failure: a query
+    * with any run that throws gets no time, because a failure timed as
+    * ~0 s reads as a fast query. `between` runs after every run,
+    * outside the clock; no run follows a failed one.
+    */
+  private[graft] def bestOf(runs: Int)(body: => Unit)(
+      between: => Unit): Try[Double] = {
+    @tailrec def loop(i: Int, best: Double): Try[Double] =
+      if (i == runs) Success(best)
+      else {
+        val t0 = System.nanoTime()
+        val r = try { body; None } catch { case e: Throwable => Some(e) }
+        val dt = (System.nanoTime() - t0) / 1e9
+        between
+        r match {
+          case Some(e) => Failure(e)
+          case None => loop(i + 1, best.min(dt))
+        }
+      }
+    loop(0, Double.PositiveInfinity)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().min(32).toString)
-    // SPARK_GRAFT_MASTER overrides (e.g. local-cluster[2,2,2048] for
-    // the multi-JVM bench record — with SPARK_GRAFT_JARS set so the
-    // engine classes ship to the executor JVMs)
-    val spark = Sessions.tuned(Sessions.withJars(
-      SparkSession.builder()
-        .master(Sessions.master(cpus.toInt))
-        .appName("graft-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-    )).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // absorb JVM/codegen/scheduler startup so the first measured query
     // isn't charged ~2s of warmup
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -35,42 +48,26 @@ object Bench {
     val only = if (args.nonEmpty) Some(args(0).split(",").toSet) else None
     val selected = SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val results = selected.map { case (name, fn) =>
-      val times = (1 to Runs).map { _ =>
-        val t0 = System.nanoTime()
-        // toRdd.count(), not count(): a Dataset count lets Catalyst
-        // PRUNE the final projection, so a row-local query (langid,
-        // normalize, fingerprint) benches as a near-no-op scan — the
-        // q_langid_confusion regression hid behind exactly this. The
-        // RDD action demands the query's full output schema, so every
-        // column the user would read is actually computed.
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case e: Throwable =>
-          // stderr only — the stdout JSON line's shape is the driver
-          // contract; a silent swallow would let a broken query
-          // masquerade as a fast one (bench times a failure as ~0 s)
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          -1L
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // drop query-internal persists so a repeat can't shortcut the
-        // actual compute through the previous run's cache
-        spark.sharedState.cacheManager.clearCache()
-        // and free lingering localCheckpoint blocks: they unpersist
-        // only at RDD GC, so a 200+-query sweep accumulates gigabytes
-        // of dead storage-memory blocks whose eviction/GC pressure
-        // slows LATER queries 4× (q_forget measured 14.8 s late in a
-        // full sweep vs 3.4 s isolated; with this, sweep ≈ isolated).
-        // Memo-held frames are SPARED: their lineage stops at the
-        // checkpoint, so dropping their blocks strands the entry
-        val live = Memo.liveRddIds
-        spark.sparkContext.getPersistentRDDs.values
-          .filter(r => !live.contains(r.id))
-          .foreach(_.unpersist(blocking = false))
-        dt
+    val timed = selected.map { case (name, fn) =>
+      // toRdd.count(), not count(): a Dataset count lets Catalyst
+      // PRUNE the final projection, so a row-local query (langid,
+      // normalize, fingerprint) benches as a near-no-op scan — the
+      // q_langid_confusion regression hid behind exactly this. The
+      // RDD action demands the query's full output schema, so every
+      // column the user would read is actually computed.
+      val t = bestOf(Runs)(fn(spark, sfDir).queryExecution.toRdd.count()) {
+        // drop query-internal persists and dead checkpoint blocks so a
+        // repeat can't shortcut the compute through the previous run's
+        // cache, sparing Memo-held frames
+        Memo.releaseUnheld(spark)
       }
-      name -> times.min
+      // stderr only: the stdout line keeps its one-line shape
+      t.failed.foreach(e =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"))
+      name -> t
     }
+    val results = timed.collect { case (n, Success(t)) => n -> t }
+    val failed = timed.collect { case (n, Failure(_)) => n }.toSeq.sorted
     // Millisecond precision, deliberately: 241 queries at raw double
     // precision made a ~10 KB line, and round 14's stdout capture
     // truncated mid-line — the driver's round-over-round comparison
@@ -82,7 +79,12 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs_per_query":$Runs}""")
+    // failed queries are left out of `queries` and `total`; the key
+    // appears only when some query failed
+    val failedJson =
+      if (failed.isEmpty) ""
+      else failed.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs_per_query":$Runs$failedJson}""")
     spark.stop()
   }
 }

@@ -43,7 +43,6 @@ object ScaleSmoke {
     val n = sys.env.getOrElse("GRAFT_SMOKE_N", "5000").toLong
     val maxRatio = sys.env.getOrElse("GRAFT_SMOKE_MAX_RATIO", "40").toDouble
     val spark = Sessions.local()
-    spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect() // warmup
 
     def pagerank(rows: Long): Long = {

@@ -90,15 +90,8 @@ object ScaleUp {
     val Array(src, out, factorStr) = args.take(3)
     val factor = factorStr.toInt
     val skew = args.length > 3 && args(3) == "skew"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().min(32).toString)
-    val spark = Sessions.tuned(
-      SparkSession.builder()
-        .master(Sessions.master(cpus.toInt))
-        .appName("graft-scaleup")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = Sessions.defaultCores
+    val spark = Sessions.local(cores)
 
     // key-family strides from the owning tables
     val strides = Map(
@@ -158,7 +151,7 @@ object ScaleUp {
       scaled
         // spread replicas across output files so downstream scans see
         // balanced splits, not one file per replica of the source order
-        .repartition(cpus.toInt * 2)
+        .repartition(cores * 2)
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
       println(s"[scaleup] $t x$factor done")
     }
@@ -168,7 +161,7 @@ object ScaleUp {
     // shapes instead of re-deriving a corpus-sized relation per sweep
     graft.model.Tables.derivePartsupp(
       spark.read.parquet(s"$out/lineitem.parquet"))
-      .repartition(cpus.toInt * 2)
+      .repartition(cores * 2)
       .write.mode("overwrite").parquet(s"$out/partsupp.parquet")
     println(s"[scaleup] partsupp derived+stored")
     spark.stop()

@@ -38,15 +38,24 @@ object Sessions {
     * application classes must ship to executors: set `SPARK_GRAFT_JARS`
     * to the packaged graft jar (sbt package output).
     */
-  def master(cores: Int): String =
+  private def master(cores: Int): String =
     sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]")
 
-  private[graft] def withJars(b: SparkSession.Builder): SparkSession.Builder =
+  private def withJars(b: SparkSession.Builder): SparkSession.Builder =
     sys.env.get("SPARK_GRAFT_JARS").fold(b)(j => b.config("spark.jars", j))
 
-  /** Local session for tests / tools. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors().min(32))
-      : SparkSession = {
+  /** Core count for local sessions: `SPARK_GRAFT_CPUS` when set, else
+    * the machine's processors capped at 32. The only read of that
+    * variable: every main sizes its session through here.
+    */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors().min(32))
+
+  /** The session every main and test builds: [[tuned]] configs,
+    * `master`, `SPARK_GRAFT_JARS`, one shuffle partition per core,
+    * WARN logging.
+    */
+  def local(cores: Int = defaultCores): SparkSession = {
     val s = tuned(withJars(
       SparkSession.builder()
         .master(master(cores))

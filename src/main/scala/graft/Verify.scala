@@ -1,9 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** `{"<query>":"<oracle sql>",…}`, escaped by json4s — a tab, CR or
+    * other control char in an oracle's SQL must not make the
+    * correctness check's `json.load` (scripts/check.py) fail and
+    * silently zero the round's correctness.
+    */
+  private[graft] def oracleJson(entries: Iterable[(String, String)]): String =
+    JsonMethods.compact(JsonMethods.render(
+      JObject(entries.map { case (k, v) => k -> JString(v) }.toList)))
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names — dump (and emit
@@ -11,15 +23,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().min(32).toString)
-    val builder = SparkSession.builder()
-      .master(Sessions.master(cpus.toInt))
-      .appName("graft-verify")
-      .config("spark.sql.shuffle.partitions", cpus)
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => builder.config("spark.jars", j))
-    val spark = Sessions.tuned(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -27,34 +31,14 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally {
-        // queries that persist internally (minhash/simhash pairs)
-        // must not leave cached plans pressuring later queries
-        spark.sharedState.cacheManager.clearCache()
-        // localCheckpoint blocks only free at RDD GC — drop them
-        // explicitly so a 200+-query dump doesn't accumulate dead
-        // storage blocks that slow later queries; Memo-held frames
-        // are spared (lineage stops at their checkpoint — see Bench)
-        val live = Memo.liveRddIds
-        spark.sparkContext.getPersistentRDDs.values
-          .filter(r => !live.contains(r.id))
-          .foreach(_.unpersist(blocking = false))
+        // queries that persist internally (minhash/simhash pairs) must
+        // not leave cached plans or dead checkpoint blocks pressuring
+        // later queries; Memo-held frames are spared
+        Memo.releaseUnheld(spark)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql.filter(kv => keep(kv._1))))
     spark.stop()
   }
 }

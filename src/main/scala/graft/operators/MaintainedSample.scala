@@ -131,7 +131,7 @@ object MaintainedSample {
     // code's assumption — a broadcast IS a driver collect + ship; the
     // localCheckpoint + isEmpty pair this replaces paid two blocking
     // jobs per sketch for the same bytes, ×3 sketches per view
-    // lifecycle — measured by tools/ViewProbe)
+    // lifecycle — job counts in LifecycleBench's `jobs`)
     val crowdedRows = canon.groupBy(col(groupCol))
       .agg(count(lit(1)).as("__nk"))
       .join(win.groupBy(col(groupCol)).agg(count(lit(1)).as("__nb")),

@@ -1,5 +1,9 @@
 package graft.tools
 
+import java.util.concurrent.{Semaphore, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -7,18 +11,21 @@ import graft.Sessions
 import graft.model.Tables
 import graft.operators.{Dedup, MaintainedComponents, Similarity, TextOps}
 
-/** STANDING-TABLE pricing for the three stored lifecycles (components,
-  * PQ index, tf-idf term stats) — the r14 verdict's ask #7: the
-  * single-shot q_*_lifecycle queries bundle bootstrap with the
-  * maintenance ops they exist to price, so a maintenance-side
-  * improvement shows up diluted (the bloom-sidecar trade measured +8%
-  * on the bundled query while winning on the standing shape). This
-  * main bootstraps each store ONCE, then runs N maintenance rounds
-  * over disjoint batch slices and reports the bootstrap cost and the
-  * per-op MEDIANS of the steady-state rounds.
+/** STANDING-TABLE pricing for the stored lifecycles (components, PQ
+  * index, sample/quantile and distinct views, tf-idf term stats) — the
+  * r14 verdict's ask #7: the single-shot q_*_lifecycle queries bundle
+  * bootstrap with the maintenance ops they exist to price, so a
+  * maintenance-side improvement shows up diluted (the bloom-sidecar
+  * trade measured +8% on the bundled query while winning on the
+  * standing shape). This main bootstraps each store ONCE, then runs N
+  * maintenance rounds over disjoint batch slices and reports the
+  * bootstrap cost and the per-op MEDIANS of the steady-state rounds,
+  * in seconds and in Spark jobs started (the view lifecycles are
+  * job-count-bound at small scale: each localCheckpoint / isEmpty /
+  * collect is one scheduling round trip).
   *
   * One JSON line on stdout:
-  *   {"metric":"lifecycle_steady","sf":…,"rounds":N,"ops":{…}}
+  *   {"metric":"lifecycle_steady","sf":…,"rounds":N,"ops":{…},"jobs":{…}}
   *
   * Usage: runMain graft.tools.LifecycleBench <sfDir> [rounds]
   * (also runnable from a packaged jar against an OLDER engine jar by
@@ -36,41 +43,84 @@ object LifecycleBench {
   private val PqCodes = 16
   private val TopK = 5
 
+  private def median[T: Ordering](xs: Seq[T]): T = xs.sorted.apply(xs.size / 2)
+
+  /** Wall seconds and Spark jobs started per named operation; per-round
+    * operations keep the median over rounds of each.
+    */
+  private[tools] final class Ops(spark: SparkSession, rounds: Int) {
+    private val secs = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val jobs = scala.collection.mutable.LinkedHashMap[String, Int]()
+
+    private val sc = spark.sparkContext
+    private val FenceGroup = "lifecycle-bench-fence"
+    private val started = new AtomicInteger
+    private val fencesSeen = new Semaphore(0)
+    private val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        if (Option(s.properties).exists(
+            _.getProperty("spark.jobGroup.id") == FenceGroup))
+          fencesSeen.release()
+        else started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+
+    /** Jobs started so far, read once the listener has received every
+      * event posted before this call: a one-task fence job goes
+      * through the same in-order listener queue, so once its start
+      * arrives, so has every earlier job's.
+      */
+    private def settledJobs(): Int = {
+      sc.setJobGroup(FenceGroup, "listener fence")
+      try sc.parallelize(Seq(0), 1).count() finally sc.clearJobGroup()
+      require(fencesSeen.tryAcquire(5, TimeUnit.MINUTES),
+        "listener bus never delivered the fence job")
+      started.get()
+    }
+
+    private def measure(f: => Unit): (Double, Int) = {
+      val j0 = settledJobs()
+      val t0 = System.nanoTime()
+      f
+      val dt = (System.nanoTime() - t0) / 1e9
+      (dt, settledJobs() - j0)
+    }
+
+    def once(name: String)(f: => Unit): Unit = {
+      val (dt, n) = measure(f)
+      secs(name) = dt
+      jobs(name) = n
+      System.err.println(f"[lifecycle] $name: $dt%.2f s, $n jobs")
+    }
+
+    def perRound(name: String)(f: Int => Unit): Unit = {
+      val runs = (0 until rounds).map { r =>
+        val (dt, n) = measure(f(r))
+        System.err.println(f"[lifecycle] $name round $r: $dt%.2f s, $n jobs")
+        (dt, n)
+      }
+      secs(name) = median(runs.map(_._1))
+      jobs(name) = median(runs.map(_._2))
+    }
+
+    def close(): Unit = sc.removeSparkListener(listener)
+
+    /** `"ops":{…},"jobs":{…}` for the stdout line. */
+    def json: String = {
+      def obj(m: Iterable[(String, Any)]) =
+        m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+      s""""ops":${obj(secs)},"jobs":${obj(jobs)}"""
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val rounds = args.lift(1).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().min(32).toString)
-    val spark = Sessions.tuned(SparkSession.builder()
-      .master(Sessions.master(cpus.toInt))
-      .appName("lifecycle-bench")
-      .config("spark.sql.shuffle.partitions", cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
-    val ops = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def once[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      ops(name) = dt
-      System.err.println(f"[lifecycle] $name: $dt%.2f s")
-      r
-    }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      s(s.size / 2)
-    }
-    def perRound(name: String)(f: Int => Unit): Unit = {
-      val times = (0 until rounds).map { r =>
-        val t0 = System.nanoTime()
-        f(r)
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[lifecycle] $name round $r: $dt%.2f s")
-        dt
-      }
-      ops(name) = median(times)
-    }
+    val ops = new Ops(spark, rounds)
+    import ops.{once, perRound}
 
     val root = java.nio.file.Files
       .createTempDirectory("lifecycle_bench_").toString
@@ -273,9 +323,8 @@ object LifecycleBench {
         .queryExecution.toRdd.count()
     }
 
-    val json = ops.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"lifecycle_steady","sf":"$sfDir","rounds":$rounds,"ops":$json}""")
+    ops.close()
+    println(s"""{"metric":"lifecycle_steady","sf":"$sfDir","rounds":$rounds,${ops.json}}""")
     spark.stop()
   }
 }

@@ -3,9 +3,7 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{Sessions, SparkEntry}
+import graft.{Memo, Sessions, SparkEntry}
 
 /** Dump `.explain("formatted")` for declared queries to files — the
   * optimization-round evidence trail (plans/rNN/<query>_{before,after}
@@ -27,15 +25,7 @@ object PlanDump {
     val exec = suffix.endsWith("_exec")
     val only = if (args.length > 2) Some(args(2).split(",").toSet) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().min(32).toString)
-    val spark = Sessions.tuned(Sessions.withJars(
-      SparkSession.builder()
-        .master(Sessions.master(cpus.toInt))
-        .appName("graft-plandump")
-        .config("spark.sql.shuffle.partitions", cpus)
-    )).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     Files.createDirectories(Paths.get(outDir))
     val selected = SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
@@ -54,11 +44,7 @@ object PlanDump {
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
       }
-      spark.sharedState.cacheManager.clearCache()
-      val live = graft.Memo.liveRddIds
-      spark.sparkContext.getPersistentRDDs.values
-        .filter(r => !live.contains(r.id))
-        .foreach(_.unpersist(blocking = false))
+      Memo.releaseUnheld(spark)
     }
     spark.stop()
   }

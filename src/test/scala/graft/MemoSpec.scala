@@ -126,6 +126,23 @@ class MemoSpec extends SparkSpec {
     Memo.clear()
   }
 
+  test("releaseUnheld leaves only memo-held RDDs persisted") {
+    Memo.clear()
+    val docs = graft.model.Tables.documents(spark, sf).limit(50)
+    val held = Memo.shared(Memo.dfKey(docs, "releaseTest")) {
+      docs.select("doc_id").localCheckpoint()
+    }
+    docs.select("text").localCheckpoint() // a query's dead checkpoint
+    val live = Memo.liveRddIds
+    assert(spark.sparkContext.getPersistentRDDs.keySet.exists(!live(_)),
+      "the unheld checkpoint must be persisted before the release")
+    Memo.releaseUnheld(spark)
+    val left = spark.sparkContext.getPersistentRDDs.keySet
+    assert(left.subsetOf(live), s"unheld RDDs survived: ${left -- live}")
+    assert(held.count() == 50, "the release must not strand the memo entry")
+    Memo.clear()
+  }
+
   test("liveRddIds walks NOVEL memo value shapes, not just df/(df,df)") {
     Memo.clear()
     val docs = graft.model.Tables.documents(spark, sf).limit(40)

@@ -110,11 +110,7 @@ class CodegenAuditSpec extends SparkSpec {
       if (all.nonEmpty && !pinned.contains(name)) bad(name) = all
       // the Verify-style between-query cleanup: cached plans and dead
       // localCheckpoint blocks must not pressure later queries
-      spark.sharedState.cacheManager.clearCache()
-      val live = graft.Memo.liveRddIds
-      spark.sparkContext.getPersistentRDDs.values
-        .filter(r => !live.contains(r.id))
-        .foreach(_.unpersist(blocking = false))
+      graft.Memo.releaseUnheld(spark)
     }
     assert(bad.isEmpty,
       s"${bad.size} queries run capable operators interpreted " +
