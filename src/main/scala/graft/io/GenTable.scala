@@ -87,7 +87,7 @@ object GenTable {
     * Yes where the backend's rename is non-atomic (zero-gap serving is
     * the correct default there) or where the table already is one.
     */
-  def shouldGen(spark: SparkSession, root: String): Boolean = {
+  private def shouldGen(spark: SparkSession, root: String): Boolean = {
     val fs = fsOf(spark, root)
     !AtomicIo.renameIsAtomic(fs) || fs.exists(genMark(root))
   }
@@ -97,8 +97,8 @@ object GenTable {
     * must fully produce the new table (data + marks) at the dir it is
     * handed. Single-writer, like every maintenance op here.
     */
-  def swapGen(spark: SparkSession, root: String)
-             (write: String => Unit): Unit = {
+  private def swapGen(spark: SparkSession, root: String)
+                     (write: String => Unit): Unit = {
     val fs = fsOf(spark, root)
     val cur = currentGen(spark, root)
     val next = cur.fold(0L)(_ + 1L)
@@ -123,4 +123,24 @@ object GenTable {
       if (n != s"g$next" && n != "_gen") fs.delete(st.getPath, true)
     }
   }
+
+  /** BOOTSTRAP (create or re-create) the table at `root`: `write`
+    * produces the complete table at the dir it is handed — the next
+    * generation where [[shouldGen]] holds, the flat root itself
+    * otherwise (a whole-dir overwrite in place).
+    */
+  def bootstrap(spark: SparkSession, root: String)
+               (write: String => Unit): Unit =
+    if (shouldGen(spark, root)) swapGen(spark, root)(write)
+    else write(root)
+
+  /** REPLACE an existing table wholesale (compaction): a generation
+    * root writes the next generation and flips its pointer; a flat
+    * table takes the [[StagedSwap]] swap. `write` produces the
+    * complete new table at the dir it is handed. Single-writer.
+    */
+  def replace(spark: SparkSession, root: String)
+             (write: String => Unit): Unit =
+    if (isGenRoot(spark, root)) swapGen(spark, root)(write)
+    else StagedSwap.swap(spark, root)(write)
 }

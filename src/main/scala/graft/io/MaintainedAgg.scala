@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * and re-reads the whole previous aggregate for its carry-over
   * anti-join; fine when the view is 25 nations, a wall when it is
   * 10⁸ customers on 100 TB of facts. Here the view lives on disk
-  * under `agg_part = hash(groupCols) % AggParts`, so a refresh batch:
+  * under `agg_part = hash(groupCols) % AggParts` ([[ViewTable]] — the
+  * layout, commit and delta protocol this view shares with the
+  * distinct and sample views), so a refresh batch:
   *
   *   1. computes per-group DELTAS from the changed rows alone
   *      (sum/count aggregates are SELF-MAINTAINABLE — the classic MV
@@ -19,14 +21,14 @@ import org.apache.spark.sql.functions._
   *      strategy, whose "touched groups" recompute still scans every
   *      fact of a touched group);
   *   2. maps the delta groups to their `agg_part` values — ≤
-  *      [[AggParts]] distinct ints, bounded driver work — and reads
+  *      [[ViewTable.AggParts]] distinct ints, bounded driver work — and reads
   *      ONLY those partitions of the stored view (static partition
   *      filter, ScanAudit-measured in MaintainedAggSpec);
   *   3. merges slice + deltas with one partial-agg-friendly union
   *      (groups whose count hits zero drop out — the group-deletion
-  *      case), and rewrites ONLY the touched partitions (dynamic
-  *      partition overwrite; a partition whose every group vanished
-  *      is deleted explicitly, since an empty write emits no files).
+  *      case), and rewrites ONLY the touched partitions (a staged
+  *      touched-partition commit; a partition whose every group
+  *      vanished is deleted).
   *
   * Refresh cost is O(batch + touched/AggParts of the view): at 100 TB
   * a daily 0.1 % CDC batch touches a bounded slice of a 64-way
@@ -48,96 +50,26 @@ import org.apache.spark.sql.functions._
   */
 object MaintainedAgg {
 
-  /** Layout fan-out. 64 partitions keeps per-partition view slices
-    * ≈ view/64 (rewrite unit) while a typical batch touches most
-    * parts only once the batch has ≥ ~64 distinct groups — the same
-    * sizing logic as Dedup.SigParts.
-    */
-  val AggParts = 64
-
   private val MeasureType =
     org.apache.spark.sql.types.DecimalType(38, 6)
-
-  /** The layout column: reader-side recomputable from the group
-    * columns alone, so any batch knows which partitions its groups
-    * can live in without consulting the table.
-    *
-    * Hash convention differs from Dedup's `sig_part` ON PURPOSE — do
-    * not port one formula to the other: here `hash()` (Murmur3 over
-    * possibly-many, possibly-null group columns) is signed, so `pmod`
-    * is required for non-negative parts; Dedup.withSigPart uses the
-    * engine's PORTABLE `hash32` (md5 prefix, already non-negative, a
-    * single id column) so a plain `%` is safe there AND the oracle
-    * can recompute it in SQL. This layout never needs oracle-side
-    * recomputation (the partition column is engine-internal), so the
-    * cheaper codegen'd Murmur3 is the right choice.
-    */
-  def withAggPart(df: DataFrame, groupCols: Seq[String]): DataFrame =
-    df.withColumn("agg_part",
-      pmod(hash(groupCols.map(col): _*), lit(AggParts)).cast("int"))
 
   /** Materialize a freshly computed aggregate as the stored view.
     * `measureCols` are cast to the canonical decimal; `countCol` must
     * be a long count of contributing rows (drives group deletion).
-    *
-    * Layout split ([[GenTable]]): on non-atomic-rename backends the
-    * table bootstraps GENERATION-ROOTED (`path/_gen` + `path/g0/…`),
-    * so every later whole-table swap (compaction) is a zero-gap
-    * pointer flip instead of a delete+copy window; atomic-rename
-    * backends keep the flat in-place layout. Every entry point of
-    * this object resolves [[GenTable.live]] first, so callers always
-    * address the ROOT path.
+    * Generation-rooted or flat by backend ([[ViewTable.bootstrap]]);
+    * callers always address the ROOT path.
     */
   def write(agg: DataFrame, groupCols: Seq[String], path: String,
-            measureCols: Seq[String], countCol: String): Unit = {
-    val spark = agg.sparkSession
-    if (GenTable.shouldGen(spark, path))
-      GenTable.swapGen(spark, path)(st =>
-        writeFlat(agg, groupCols, st, measureCols, countCol))
-    else writeFlat(agg, groupCols, path, measureCols, countCol)
-  }
-
-  /** The concrete-dir write body: `path` here is a LIVE data dir (a
-    * generation dir, a compaction stage, or a legacy flat root) —
-    * never re-resolved.
-    */
-  private def writeFlat(agg: DataFrame, groupCols: Seq[String],
-                        path: String, measureCols: Seq[String],
-                        countCol: String): Unit = {
-    val keyed = withAggPart(normalize(agg, measureCols, countCol),
-      groupCols)
-    keyed
-      // align tasks with the layout: one writer per agg_part → one
-      // file per partition dir, not tasks × AggParts small files
-      .repartition(AggParts, col("agg_part"))
-      .write.mode("overwrite").partitionBy("agg_part").parquet(path)
-    // persist the schema OUT of band: a refresh that deletes every
-    // surviving group leaves the table with zero parquet files, and a
-    // schema-inference read of that state throws instead of returning
-    // the empty view — the stored schema keeps reads total
-    SchemaFile.write(agg.sparkSession, path, keyed.schema)
-  }
+            measureCols: Seq[String], countCol: String): Unit =
+    ViewTable.bootstrap(agg.sparkSession, path, groupCols)(
+      normalize(agg, measureCols, countCol))
 
   /** Read the full view back (layout column dropped). Completes any
     * crashed refresh first — a half-applied commit must never be
     * served.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val t = GenTable.live(spark, path)
-    PartCommit.recover(spark, t)
-    readKeyed(spark, t).drop("agg_part")
-  }
-
-  /** Schema-pinned read including the layout column: total on a
-    * fully-emptied view (zero parquet files → empty frame, not a
-    * schema-inference error). Falls back to inference for tables
-    * written before the schema file existed.
-    */
-  private def readKeyed(spark: SparkSession, path: String): DataFrame =
-    SchemaFile.read(spark, path) match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None    => spark.read.parquet(path)
-    }
+  def read(spark: SparkSession, path: String): DataFrame =
+    ViewTable.read(spark, path)
 
   private def normalize(df: DataFrame, measureCols: Seq[String],
                         countCol: String): DataFrame = {
@@ -146,6 +78,20 @@ object MaintainedAgg {
     df.select(keep.map(col) ++
       measureCols.map(m => col(m).cast(MeasureType).as(m)) :+
       col(countCol).cast("long").as(countCol): _*)
+  }
+
+  /** Merged sums per group; groups whose count is not positive drop
+    * out (the group-deletion case).
+    */
+  private def sumGroups(rows: DataFrame, groupCols: Seq[String],
+                        measureCols: Seq[String],
+                        countCol: String): DataFrame = {
+    val mAggs = measureCols.map(m =>
+      sum(col(m)).cast(MeasureType).as(m)) :+
+      sum(col(countCol)).as(countCol)
+    rows.groupBy(groupCols.map(col): _*)
+      .agg(mAggs.head, mAggs.tail: _*)
+      .filter(col(countCol) > 0)
   }
 
   /** Apply a CDC batch to the stored view. `removed` / `added` are
@@ -159,94 +105,52 @@ object MaintainedAgg {
     * Invariant (spec-pinned and the q_incr_joinagg oracle): after the
     * refresh the view ≡ the same aggregation over the new snapshot.
     *
-    * CRASH CONTRACT (via [[PartCommit]]): the refresh stages the
-    * merged touched partitions OUT of the table's visible tree,
-    * publishes an atomic commit marker, and only then swaps staged
-    * partitions in one by one — each swap idempotent under the marker.
-    * A crash before the marker leaves the view intact (retry
-    * recomputes); a crash after it is completed by [[PartCommit
-    * .recover]], which every entry point of this object runs first. So
-    * the refresh is EXACTLY-ONCE under retry, keyed by `batchId`: a
-    * replay of a batch at or below the table's applied mark no-ops.
-    * Callers with no natural batch numbering use the id-free overload,
-    * which allocates mark+1 — retry-safe mid-flight (recovery is
-    * marker-driven, not id-driven) but NOT replay-detecting across
-    * successful runs; unattended at-least-once ingest belongs on the
-    * streaming path ([[writeDeltaPartial]] + [[compactDeltas]]).
+    * Crash and replay contract: [[ViewTable.refresh]] — exactly-once
+    * under retry keyed by `batchId`, a crashed predecessor's commit
+    * completed first. The id-free overload allocates the applied mark
+    * + 1 after that recovery: safe against a mid-flight crash, but
+    * NOT replay-detecting across successful runs; unattended
+    * at-least-once ingest belongs on the streaming path
+    * ([[writeDeltaPartial]] + [[compactDeltas]]).
     */
   def deltaRefresh(spark: SparkSession, path: String,
                    removed: DataFrame, added: DataFrame,
                    groupCols: Seq[String], measureCols: Seq[String],
                    countCol: String): Unit =
-    deltaRefresh(spark, path, removed, added, groupCols, measureCols,
-      countCol,
-      PartCommit.lastApplied(spark, GenTable.live(spark, path)) + 1)
+    sumRefresh(spark, path, removed, added, groupCols, measureCols,
+      countCol, None)
 
   def deltaRefresh(spark: SparkSession, rootPath: String,
                    removed: DataFrame, added: DataFrame,
                    groupCols: Seq[String], measureCols: Seq[String],
-                   countCol: String, batchId: Long): Unit = {
-    val path = GenTable.live(spark, rootPath)
-    // finish any predecessor's half-applied commit BEFORE reading the
-    // view — the slice below must see a consistent table
-    PartCommit.recover(spark, path)
-    if (batchId <= PartCommit.lastApplied(spark, path)) return
-    // pending streaming deltas make a CDC refresh unsound even for
-    // pure sums: the count>0 clamp below DROPS a group whose base
-    // count goes negative (its contributions live in an unfolded
-    // delta, not the base), silently losing the subtraction — the
-    // group resurrects at merge-on-read and compaction folds it back
-    // permanently. Same compact-first discipline as the distinct/
-    // sample views (keeping negative rows instead would leak
-    // tombstones into read() and break refresh ≡ recompute).
-    require(!Deltas.hasDeltas(spark, path),
-      s"deltaRefresh($path): pending streaming _deltas — the count>0 " +
-        "group-deletion clamp cannot compose a CDC remove with " +
-        "unfolded deltas; run compactDeltas first")
-    def contrib(df: DataFrame, w: Int): DataFrame =
-      df.select(groupCols.map(col) ++
-        measureCols.map(m =>
-          (col(m).cast(MeasureType) * lit(w)).cast(MeasureType).as(m)) :+
-        lit(w.toLong).as(countCol): _*)
-    val dAggs = measureCols.map(m => sum(col(m)).as(m)) :+
-      sum(col(countCol)).as(countCol)
-    val deltas = contrib(added, 1).unionByName(contrib(removed, -1))
-      .groupBy(groupCols.map(col): _*)
-      .agg(dAggs.head, dAggs.tail: _*)
-    val keyed = withAggPart(normalize(deltas, measureCols, countCol),
-      groupCols)
-      .localCheckpoint() // feeds the part list AND the merge once
-    val parts = keyed.select("agg_part").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    if (parts.isEmpty) {
-      // nothing to merge, but the batch still happened — advance the
-      // mark so a replay of it stays a no-op
-      PartCommit.markApplied(spark, path, batchId)
-      return
+                   countCol: String, batchId: Long): Unit =
+    sumRefresh(spark, rootPath, removed, added, groupCols, measureCols,
+      countCol, Some(batchId))
+
+  private def sumRefresh(spark: SparkSession, rootPath: String,
+                         removed: DataFrame, added: DataFrame,
+                         groupCols: Seq[String], measureCols: Seq[String],
+                         countCol: String, batchId: Option[Long]): Unit =
+    ViewTable.refresh(spark, rootPath, batchId, groupCols) {
+      def contrib(df: DataFrame, w: Int): DataFrame =
+        df.select(groupCols.map(col) ++
+          measureCols.map(m =>
+            (col(m).cast(MeasureType) * lit(w)).cast(MeasureType).as(m)) :+
+          lit(w.toLong).as(countCol): _*)
+      val dAggs = measureCols.map(m => sum(col(m)).as(m)) :+
+        sum(col(countCol)).as(countCol)
+      val deltas = contrib(added, 1).unionByName(contrib(removed, -1))
+        .groupBy(groupCols.map(col): _*)
+        .agg(dAggs.head, dAggs.tail: _*)
+      val keyed = ViewTable.withAggPart(
+        normalize(deltas, measureCols, countCol), groupCols)
+        .localCheckpoint() // feeds the part list AND the merge once
+      val parts = keyed.select("agg_part").distinct()
+        .collect().map(_.getInt(0)).toSeq
+      ViewTable.Batch(parts, slice => sumGroups(
+        slice.unionByName(keyed.drop("agg_part")), groupCols, measureCols,
+        countCol))
     }
-    // touched slice only: static partition filter — the scan reads
-    // touched/AggParts of the view, measured in MaintainedAggSpec
-    val slice = readKeyed(spark, path)
-      .filter(col("agg_part").isin(parts: _*))
-    val mAggs = measureCols.map(m =>
-      sum(col(m)).cast(MeasureType).as(m)) :+
-      sum(col(countCol)).as(countCol)
-    val merged = slice.unionByName(keyed)
-      .groupBy((groupCols :+ "agg_part").map(col): _*)
-      .agg(mAggs.head, mAggs.tail: _*)
-      .filter(col(countCol) > 0)
-    // stage → commit marker → per-partition swap; the staged write
-    // reads the live slice files and writes OUTSIDE the visible tree,
-    // so no materialization barrier is needed before it
-    PartCommit.replaceParts(spark, path, "agg_part", batchId, parts) {
-      stage =>
-        // the merge shuffled on (group, agg_part), so every reduce
-        // task holds a mix of parts — re-align on agg_part so each
-        // touched partition is staged as ONE file
-        merged.repartition(parts.size, col("agg_part"))
-          .write.mode("overwrite").partitionBy("agg_part").parquet(stage)
-    }
-  }
 
   // ---- MIN/MAX maintained aggregates ----
   //
@@ -282,27 +186,18 @@ object MaintainedAgg {
     */
   def writeMinMax(rows: DataFrame, groupCols: Seq[String], path: String,
                   valueCols: Seq[String], countCol: String): Unit = {
-    val spark = rows.sparkSession
-    def flat(dir: String): Unit = {
-      val a = minMaxAggs(valueCols, countCol)
-      val keyed = withAggPart(
-        rows.groupBy(groupCols.map(col): _*).agg(a.head, a.tail: _*),
-        groupCols)
-      keyed.repartition(AggParts, col("agg_part"))
-        .write.mode("overwrite").partitionBy("agg_part").parquet(dir)
-      SchemaFile.write(spark, dir, keyed.schema)
-    }
-    if (GenTable.shouldGen(spark, path))
-      GenTable.swapGen(spark, path)(flat)
-    else flat(path)
+    val a = minMaxAggs(valueCols, countCol)
+    ViewTable.bootstrap(rows.sparkSession, path, groupCols)(
+      rows.groupBy(groupCols.map(col): _*).agg(a.head, a.tail: _*))
   }
 
   /** Apply a CDC batch to the extrema view. `removed`/`added` carry
     * per-row (groupCols ++ valueCols) contributions, exactly as
-    * [[deltaRefresh]]. Same [[PartCommit]] crash/replay contract.
-    * `recompute` receives the distinct DIRTY group keys (materialized,
-    * batch-bounded) and must return the new snapshot's per-row
-    * contributions for those groups.
+    * [[deltaRefresh]]. Same [[ViewTable.refresh]] crash/replay
+    * contract. `recompute` receives the distinct DIRTY group keys
+    * (batch-bounded, on the driver — [[ViewTable.collectKeys]]) and
+    * must return the new snapshot's per-row contributions for those
+    * groups.
     *
     * Invariant (spec-pinned, q_incr_minmax oracle): after the refresh
     * the view ≡ min/max/count over the new snapshot.
@@ -311,128 +206,85 @@ object MaintainedAgg {
                          removed: DataFrame, added: DataFrame,
                          groupCols: Seq[String], valueCols: Seq[String],
                          countCol: String, batchId: Long)
-                        (recompute: DataFrame => DataFrame): Unit = {
-    val path = GenTable.live(spark, rootPath)
-    PartCommit.recover(spark, path)
-    if (batchId <= PartCommit.lastApplied(spark, path)) return
-    def side(df: DataFrame, w: Int) =
-      df.select(groupCols.map(col) ++
-        valueCols.map(v => col(v).cast(MeasureType).as(v)) :+
-        lit(w).as("__w"): _*)
-    val bAggs = valueCols.flatMap(v => Seq(
-      min(when(col("__w") === 1, col(v))).as(s"__amin_$v"),
-      max(when(col("__w") === 1, col(v))).as(s"__amax_$v"),
-      min(when(col("__w") === -1, col(v))).as(s"__rmin_$v"),
-      max(when(col("__w") === -1, col(v))).as(s"__rmax_$v"))) ++ Seq(
-      sum(when(col("__w") === 1, 1L).otherwise(0L)).as("__an"),
-      sum(when(col("__w") === -1, 1L).otherwise(0L)).as("__rn"))
-    val batchAgg = side(added, 1).unionByName(side(removed, -1))
-      .groupBy(groupCols.map(col): _*)
-      .agg(bAggs.head, bAggs.tail: _*)
-      .localCheckpoint() // feeds the part list AND the classification
-    val parts = withAggPart(
-      batchAgg.select(groupCols.map(col): _*), groupCols)
-      .select("agg_part").distinct().collect().map(_.getInt(0)).toSeq
-    if (parts.isEmpty) {
-      PartCommit.markApplied(spark, path, batchId)
-      return
+                        (recompute: DataFrame => DataFrame): Unit =
+    ViewTable.refresh(spark, rootPath, Some(batchId), groupCols) {
+      def side(df: DataFrame, w: Int) =
+        df.select(groupCols.map(col) ++
+          valueCols.map(v => col(v).cast(MeasureType).as(v)) :+
+          lit(w).as("__w"): _*)
+      val bAggs = valueCols.flatMap(v => Seq(
+        min(when(col("__w") === 1, col(v))).as(s"__amin_$v"),
+        max(when(col("__w") === 1, col(v))).as(s"__amax_$v"),
+        min(when(col("__w") === -1, col(v))).as(s"__rmin_$v"),
+        max(when(col("__w") === -1, col(v))).as(s"__rmax_$v"))) ++ Seq(
+        sum(when(col("__w") === 1, 1L).otherwise(0L)).as("__an"),
+        sum(when(col("__w") === -1, 1L).otherwise(0L)).as("__rn"))
+      val batchAgg = side(added, 1).unionByName(side(removed, -1))
+        .groupBy(groupCols.map(col): _*)
+        .agg(bAggs.head, bAggs.tail: _*)
+        .localCheckpoint() // feeds the part list AND the classification
+      val parts = ViewTable.withAggPart(
+        batchAgg.select(groupCols.map(col): _*), groupCols)
+        .select("agg_part").distinct().collect().map(_.getInt(0)).toSeq
+      ViewTable.Batch(parts, { slice =>
+        val joined = slice.join(batchAgg, groupCols, "full_outer")
+          .localCheckpoint() // feeds carry, clean, dirty — one evaluation
+        val viewCols = minMaxViewCols(groupCols, valueCols, countCol)
+        val untouchedInPart = col("__an").isNull && col("__rn").isNull
+        val carry = joined.filter(untouchedInPart)
+          .select(viewCols.map(col): _*)
+        val touched = joined.filter(!untouchedInPart)
+        val rn = coalesce(col("__rn"), lit(0L))
+        val an = coalesce(col("__an"), lit(0L))
+        // a removed value tying the stored extreme may have been its
+        // last witness (duplicates keep the recompute cheap and
+        // correct either way); a missing stored row with removes is
+        // defensively dirty
+        val dirtyCond = rn > 0 && (col(countCol).isNull ||
+          valueCols.map(v =>
+            col(s"__rmin_$v") <= col(s"min_$v") ||
+              col(s"__rmax_$v") >= col(s"max_$v")).reduce(_ || _))
+        val cleanSel = groupCols.map(col) ++ valueCols.flatMap(v => Seq(
+          least(col(s"min_$v"), col(s"__amin_$v")).cast(MeasureType)
+            .as(s"min_$v"),
+          greatest(col(s"max_$v"), col(s"__amax_$v")).cast(MeasureType)
+            .as(s"max_$v"))) :+
+          (coalesce(col(countCol), lit(0L)) + an - rn).as(countCol)
+        val clean = touched.filter(!dirtyCond).select(cleanSel: _*)
+          .filter(col(countCol) > 0)
+        val dirty = ViewTable.collectKeys(
+          touched.filter(dirtyCond).select(groupCols.map(col): _*))
+        val a = minMaxAggs(valueCols, countCol)
+        val dirtyAgg =
+          if (dirty.isEmpty) clean.limit(0)
+          else recompute(dirty.frame).groupBy(groupCols.map(col): _*)
+            .agg(a.head, a.tail: _*)
+        carry.unionByName(clean).unionByName(dirtyAgg)
+      })
     }
-    val slice = readKeyed(spark, path)
-      .filter(col("agg_part").isin(parts: _*)).drop("agg_part")
-    val joined = slice.join(batchAgg, groupCols, "full_outer")
-      .localCheckpoint() // feeds carry, clean, dirty — one evaluation
-    val viewCols = minMaxViewCols(groupCols, valueCols, countCol)
-    val untouchedInPart = col("__an").isNull && col("__rn").isNull
-    val carry = joined.filter(untouchedInPart)
-      .select(viewCols.map(col): _*)
-    val touched = joined.filter(!untouchedInPart)
-    val rn = coalesce(col("__rn"), lit(0L))
-    val an = coalesce(col("__an"), lit(0L))
-    // a removed value tying the stored extreme may have been its last
-    // witness (duplicates keep the recompute cheap and correct either
-    // way); a missing stored row with removes is defensively dirty
-    val dirtyCond = rn > 0 && (col(countCol).isNull ||
-      valueCols.map(v =>
-        col(s"__rmin_$v") <= col(s"min_$v") ||
-          col(s"__rmax_$v") >= col(s"max_$v")).reduce(_ || _))
-    val cleanSel = groupCols.map(col) ++ valueCols.flatMap(v => Seq(
-      least(col(s"min_$v"), col(s"__amin_$v")).cast(MeasureType)
-        .as(s"min_$v"),
-      greatest(col(s"max_$v"), col(s"__amax_$v")).cast(MeasureType)
-        .as(s"max_$v"))) :+
-      (coalesce(col(countCol), lit(0L)) + an - rn).as(countCol)
-    val clean = touched.filter(!dirtyCond).select(cleanSel: _*)
-      .filter(col(countCol) > 0)
-    // dirty keys land on the driver in ONE job (batch-group-bounded;
-    // every caller broadcasts them into its recompute, and a broadcast
-    // IS a driver collect + ship — so driver-boundedness was already
-    // the contract; the localCheckpoint + isEmpty pair this replaces
-    // paid two blocking jobs for the same bytes), and the emptiness
-    // gate becomes a driver-local array check: recompute stays
-    // un-invoked when nothing is dirty — the spec-pinned contract
-    // nullable=true: a null group key must survive the driver hop the
-    // way it survived the checkpoint this replaces
-    val dirtySchema = org.apache.spark.sql.types.StructType(
-      groupCols.map(n => joined.schema(n).copy(nullable = true)))
-    val dirtyRows = touched.filter(dirtyCond)
-      .select(groupCols.map(col): _*).collect()
-    val dirtyKeys = spark.createDataFrame(
-      java.util.Arrays.asList(dirtyRows: _*), dirtySchema)
-    val a = minMaxAggs(valueCols, countCol)
-    val dirtyAgg =
-      if (dirtyRows.isEmpty) clean.limit(0)
-      else recompute(dirtyKeys).groupBy(groupCols.map(col): _*)
-        .agg(a.head, a.tail: _*)
-    val merged = withAggPart(
-      carry.unionByName(clean).unionByName(dirtyAgg), groupCols)
-    PartCommit.replaceParts(spark, path, "agg_part", batchId, parts) {
-      stage =>
-        merged.repartition(parts.size, col("agg_part"))
-          .write.mode("overwrite").partitionBy("agg_part").parquet(stage)
-    }
-  }
 
   // ---- streaming ingest: per-batch delta partitions ----
   //
-  // A micro-batch CANNOT deltaRefresh in place: a replayed batch
-  // (restart after a crash between sink write and offset commit)
-  // would ADD its deltas twice. The engine's established partial-
-  // table discipline (Streams.writeAmsPartial) applies: each batch's
-  // per-group deltas land under `_deltas/batch_id=<id>` with
-  // overwrite-in-place of that batch's OWN partition — replay
-  // rewrites the same bytes, never double-counts. Serving reads
-  // base ⊎ deltas (merge-on-read); periodic [[compactDeltas]] folds
-  // deltas into the base ATOMICALLY (StagedSwap of the whole view
-  // dir, deltas removed in the same rename — a crash anywhere leaves
-  // either the old view+deltas or the folded view, never both).
+  // Each micro-batch's per-group sums land under their own
+  // `_deltas/batch_id=<id>` partition, serving merges base ⊎ deltas on
+  // read, and compaction folds them into the base — the shared
+  // protocol of [[ViewTable.writeDelta]] / [[ViewTable.compact]].
 
   /** One micro-batch's delta write (factored out so replay
     * idempotence is testable without a stream): `added` rows carry
     * the per-row measure contributions; the per-group delta lands
-    * under this batch's own partition. Gate/layout/compaction
-    * contract: [[Deltas]].
+    * under this batch's own partition ([[ViewTable.writeDelta]]).
     */
   def writeDeltaPartial(added: DataFrame, batchId: Long,
                         groupCols: Seq[String], measureCols: Seq[String],
-                        countCol: String, rootPath: String): Unit = {
-    val path = GenTable.live(added.sparkSession, rootPath)
-    // a batch already FOLDED into the base (compaction published its
-    // id in the _folded mark) must no-op on replay — recreating its
-    // delta would double-count it in every merge-on-read
-    if (Deltas.alreadyFolded(added.sparkSession, path, batchId)) return
-    // materialize once: isEmpty is an action and the write is another
-    // — without the checkpoint the micro-batch source is read twice
-    val b = added.localCheckpoint()
-    if (!b.isEmpty) {
+                        countCol: String, rootPath: String): Unit =
+    ViewTable.writeDelta(added, batchId, rootPath) { b =>
       val dAggs = measureCols.map(m =>
         sum(col(m).cast(MeasureType)).cast(MeasureType).as(m)) :+
         count(lit(1L)).as(countCol)
       normalize(b.groupBy(groupCols.map(col): _*)
         .agg(dAggs.head, dAggs.tail: _*), measureCols, countCol)
-        .write.mode("overwrite")
-        .parquet(Deltas.deltaPath(path, batchId))
     }
-  }
 
   /** The served view: stored base merged with every pending batch
     * delta — merge-on-read, one union + group-by over (base slice +
@@ -442,46 +294,18 @@ object MaintainedAgg {
     */
   def readWithDeltas(spark: SparkSession, rootPath: String,
                      groupCols: Seq[String], measureCols: Seq[String],
-                     countCol: String): DataFrame = {
-    val path = GenTable.live(spark, rootPath)
-    val base = read(spark, path)
-    if (!Deltas.hasDeltas(spark, path)) return base
-    val deltas = spark.read.parquet(Deltas.dir(path))
-      .select((groupCols ++ measureCols :+ countCol).map(col): _*)
-    val mAggs = measureCols.map(m =>
-      sum(col(m)).cast(MeasureType).as(m)) :+
-      sum(col(countCol)).as(countCol)
-    base.unionByName(deltas)
-      .groupBy(groupCols.map(col): _*)
-      .agg(mAggs.head, mAggs.tail: _*)
-      .filter(col(countCol) > 0)
-  }
+                     countCol: String): DataFrame =
+    ViewTable.readWithDeltas(spark, rootPath,
+      groupCols ++ measureCols :+ countCol)(
+      sumGroups(_, groupCols, measureCols, countCol))
 
-  /** Fold pending deltas into the base layout ATOMICALLY: the staged
-    * dir receives the fully merged, re-partitioned view plus the
-    * `_folded` high-water mark of every batch id it absorbed, and the
-    * swap publishes them in one rename — a crash anywhere leaves
-    * either the old view+deltas or the folded view+mark, and a
-    * replayed batch at or below the mark no-ops in
-    * [[writeDeltaPartial]], so a delta can never be applied twice.
-    *
-    * WRITER DISCIPLINE (same single-writer contract as every
-    * [[StagedSwap]] table): STOP the maintaining ingest before
-    * compacting — a batch whose delta lands between the staging read
-    * and the swap would be renamed away with the old dir. Restart
-    * REPLAY after the swap is what the mark makes safe; concurrent
-    * NEW writes during the swap are not.
+  /** Fold pending deltas into the base ATOMICALLY — the
+    * [[ViewTable.compact]] contract (single-writer: stop the ingest
+    * first).
     */
   def compactDeltas(spark: SparkSession, path: String,
                     groupCols: Seq[String], measureCols: Seq[String],
                     countCol: String): Unit =
-    Deltas.compact(spark, path) { stage =>
-      // writeFlat, not write: the stage dir handed here is concrete
-      // (a StagedSwap staging dir or the next generation dir) and
-      // must never itself be generation-rooted
-      writeFlat(readWithDeltas(spark, path, groupCols, measureCols,
-          countCol)
-        .localCheckpoint(), // materialize BEFORE the swap touches files
-        groupCols, stage, measureCols, countCol)
-    }
+    ViewTable.compact(spark, path, groupCols)(
+      readWithDeltas(spark, path, groupCols, measureCols, countCol))
 }

@@ -809,9 +809,7 @@ object Dedup {
     // every maintained view ([[graft.io.GenTable]]): a re-bootstrap
     // or compaction then flips a pointer instead of exposing a
     // partial table to external readers
-    if (graft.io.GenTable.shouldGen(spark, path))
-      graft.io.GenTable.swapGen(spark, path)(flat)
-    else flat(path)
+    graft.io.GenTable.bootstrap(spark, path)(flat)
   }
 
   /** Append a batch's signatures to a maintained table — the step that
@@ -901,7 +899,7 @@ object Dedup {
   // content-keying sends it to a fresh dir and both eras' deletes
   // stand (tombstones are idempotent SETS — union is always correct
   // for ids that were each genuinely deleted). This is also why the
-  // audited [[graft.io.Deltas]] skeleton is NOT reused here: delta
+  // [[graft.io.ViewTable]] delta protocol is NOT reused here: delta
   // batches are additive FOLD VALUES whose exactly-once hangs on a
   // monotone `_folded` high-water mark (an era assumption), whereas
   // an id-set's natural key is its content.
@@ -953,6 +951,13 @@ object Dedup {
     * committed dir is never overwritten, so there is no
     * deletes-vanish-mid-rewrite window either. Fold tombstones into
     * the base with [[compactSignatures]].
+    *
+    * MAY COMPACT: once the committed tombstone batches reach the
+    * auto-compaction bound, this call runs [[compactSignatures]]
+    * itself. That replaces the table (a new generation on gen-rooted
+    * tables, a staged swap on flat ones), so a DataFrame a caller
+    * opened on the table before this call can lose its files — re-read
+    * after any forget, do not hold readers across it.
     */
   def deleteSignaturesDeferred(spark: SparkSession, rootPath: String,
                                ids: DataFrame, idCol: String,
@@ -1085,9 +1090,7 @@ object Dedup {
         .write.mode("overwrite").partitionBy("sig_part").parquet(stage)
     // gen-rooted tables compact by pointer flip (zero-gap, zero-copy
     // on object stores); flat tables keep the rename swap
-    if (graft.io.GenTable.isGenRoot(spark, path))
-      graft.io.GenTable.swapGen(spark, path)(fold)
-    else graft.io.StagedSwap.swap(spark, path)(fold)
+    graft.io.GenTable.replace(spark, path)(fold)
   }
 
   /** Connected components over an undirected candidate-pair graph by

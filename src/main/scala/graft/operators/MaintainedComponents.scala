@@ -56,7 +56,7 @@ import graft.io.{PartCommit, SchemaFile}
   */
 object MaintainedComponents {
 
-  /** Layout fan-out — same sizing logic as [[graft.io.MaintainedAgg
+  /** Layout fan-out — same sizing logic as [[graft.io.ViewTable
     * .AggParts]]: the rewrite unit is table/CompParts, and a batch
     * touching k components rewrites ≤ min(k, CompParts) partitions.
     */
@@ -76,13 +76,9 @@ object MaintainedComponents {
     * pointer makes it a zero-gap flip. Every entry point resolves the
     * live generation first, so callers always address the root path.
     */
-  def write(labels: DataFrame, idCol: String, path: String): Unit = {
-    val spark = labels.sparkSession
-    if (graft.io.GenTable.shouldGen(spark, path))
-      graft.io.GenTable.swapGen(spark, path)(st =>
-        writeFlat(labels, idCol, st))
-    else writeFlat(labels, idCol, path)
-  }
+  def write(labels: DataFrame, idCol: String, path: String): Unit =
+    graft.io.GenTable.bootstrap(labels.sparkSession, path)(
+      writeFlat(labels, idCol, _))
 
   private def writeFlat(labels: DataFrame, idCol: String,
                         path: String): Unit = {
@@ -338,9 +334,7 @@ object MaintainedComponents {
       writeBloomSidecars(spark, stage, idCol)
       graft.io.Marks.writeLong(spark, stage, "_applied", applied)
     }
-    if (graft.io.GenTable.isGenRoot(spark, rootPath))
-      graft.io.GenTable.swapGen(spark, rootPath)(fold)
-    else graft.io.StagedSwap.swap(spark, live0)(fold)
+    graft.io.GenTable.replace(spark, rootPath)(fold)
   }
 
   /** The full labeling (layout column dropped), crash-recovered, with

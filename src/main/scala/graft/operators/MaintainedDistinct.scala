@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.{MaintainedAgg, PartCommit, SchemaFile}
+import graft.io.ViewTable
 
 /** The DISTINCT-COUNT maintained view — the third member of the
   * stored-aggregate family ([[graft.io.MaintainedAgg]] sum/count,
@@ -41,10 +41,11 @@ import graft.io.{MaintainedAgg, PartCommit, SchemaFile}
   * so build + folds + dirty recomputes ≡ one sketch over the new
   * snapshot, bit-equal (q_incr_distinct pins refresh ≡ DuckDB
   * recompute, the register/estimate SQL shared with q_hll_distinct).
-  * Rewrites go through [[graft.io.PartCommit]] — staged touched
-  * partitions, atomic marker, exactly-once under replay by batch id —
-  * and the schema persists out of band so an emptied view stays
-  * readable.
+  * Layout, refresh commit and delta protocol are [[graft.io
+  * .ViewTable]]'s — staged touched partitions, atomic marker,
+  * exactly-once under replay by batch id, the schema out of band so
+  * an emptied view stays readable; this object keeps the register
+  * algebra.
   *
   * Reference scope: the reference recomputes its distinct counts from
   * scratch each run (`steps/step4_filter_stations.py:122` `nunique()`
@@ -98,28 +99,13 @@ object MaintainedDistinct {
     * (groupCols…, regs array<int>[64], `nCol` long row count).
     */
   def write(rows: DataFrame, groupCols: Seq[String], keyCol: String,
-            path: String, nCol: String = "n"): Unit = {
-    val spark = rows.sparkSession
-    def flat(dir: String): Unit = {
-      val keyed = MaintainedAgg.withAggPart(
-        regsOf(rows, groupCols, keyCol, "regs", nCol), groupCols)
-      keyed.repartition(MaintainedAgg.AggParts, col("agg_part"))
-        .write.mode("overwrite").partitionBy("agg_part").parquet(dir)
-      SchemaFile.write(spark, dir, keyed.schema)
-    }
-    // zero-gap generation root on non-atomic-rename backends — the
-    // [[graft.io.GenTable]] contract MaintainedAgg documents
-    if (graft.io.GenTable.shouldGen(spark, path))
-      graft.io.GenTable.swapGen(spark, path)(flat)
-    else flat(path)
-  }
+            path: String, nCol: String = "n"): Unit =
+    ViewTable.bootstrap(rows.sparkSession, path, groupCols)(
+      regsOf(rows, groupCols, keyCol, "regs", nCol))
 
   /** The stored rows (layout column dropped), crash-recovered. */
-  def read(spark: SparkSession, rootPath: String): DataFrame = {
-    val path = graft.io.GenTable.live(spark, rootPath)
-    PartCommit.recover(spark, path)
-    readKeyed(spark, path).drop("agg_part")
-  }
+  def read(spark: SparkSession, rootPath: String): DataFrame =
+    ViewTable.read(spark, rootPath)
 
   /** The served estimates: (groupCols…, hll_estimate, nCol). */
   def readEstimates(spark: SparkSession, path: String,
@@ -128,20 +114,15 @@ object MaintainedDistinct {
     read(spark, path).select(groupCols.map(col) :+
       estimateCol(col("regs")).as("hll_estimate") :+ col(nCol): _*)
 
-  private def readKeyed(spark: SparkSession, path: String): DataFrame =
-    SchemaFile.read(spark, path) match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None    => spark.read.parquet(path)
-    }
-
   /** Apply a CDC batch. `removed`/`added` carry per-row
     * (groupCols ++ keyCol) contributions — an UPDATE contributes its
     * old key to `removed` and its new key to `added`, exactly the
     * [[graft.io.MaintainedAgg.deltaRefresh]] shape. `recompute`
-    * receives the distinct DIRTY group keys (batch-bounded,
-    * materialized) and must return the NEW snapshot's per-row rows for
-    * exactly those groups. Exactly-once under retry keyed by
-    * `batchId` via [[graft.io.PartCommit]].
+    * receives the distinct DIRTY group keys (batch-bounded, on the
+    * driver — [[graft.io.ViewTable.collectKeys]]) and must return the
+    * NEW snapshot's per-row rows for exactly those groups.
+    * Exactly-once under retry keyed by `batchId`
+    * ([[graft.io.ViewTable.refresh]]).
     *
     * Invariant (q_incr_distinct oracle, spec-pinned): after the
     * refresh the view ≡ [[write]] over the new snapshot, register
@@ -151,113 +132,70 @@ object MaintainedDistinct {
                    removed: DataFrame, added: DataFrame,
                    groupCols: Seq[String], keyCol: String,
                    batchId: Long, nCol: String = "n")
-                  (recompute: DataFrame => DataFrame): Unit = {
-    val path = graft.io.GenTable.live(spark, rootPath)
-    PartCommit.recover(spark, path)
-    if (batchId <= PartCommit.lastApplied(spark, path)) return
-    // pending streaming deltas make a CDC refresh unsound here: a
-    // register max cannot subtract, so a delete whose key also lives
-    // in an unfolded delta would be resurrected by readWithDeltas,
-    // and the tie test below would consult a stale base register.
-    // The sum view composes arithmetically; this one must compact
-    // first (same guard as MaintainedSample.deltaRefresh).
-    require(!graft.io.Deltas.hasDeltas(spark, path),
-      s"deltaRefresh($path): pending streaming _deltas — the register" +
-        "-max merge cannot compose a CDC delete with unfolded deltas; " +
-        "run compactDeltas first")
-    val aAgg = regsOf(added, groupCols, keyCol, "__aregs", "__an")
-    val rAgg = regsOf(removed, groupCols, keyCol, "__rregs", "__rn")
-    val batch = aAgg.join(rAgg, groupCols, "full_outer")
-      .localCheckpoint() // feeds the part list AND the merge once
-    val parts = MaintainedAgg.withAggPart(
-      batch.select(groupCols.map(col): _*), groupCols)
-      .select("agg_part").distinct().collect().map(_.getInt(0)).toSeq
-    if (parts.isEmpty) {
-      PartCommit.markApplied(spark, path, batchId)
-      return
+                  (recompute: DataFrame => DataFrame): Unit =
+    // pending streaming deltas are refused by the kernel: a register
+    // max cannot subtract, so a delete whose key also lives in an
+    // unfolded delta would be resurrected on read
+    ViewTable.refresh(spark, rootPath, Some(batchId), groupCols) {
+      val aAgg = regsOf(added, groupCols, keyCol, "__aregs", "__an")
+      val rAgg = regsOf(removed, groupCols, keyCol, "__rregs", "__rn")
+      val batch = aAgg.join(rAgg, groupCols, "full_outer")
+        .localCheckpoint() // feeds the part list AND the merge once
+      val parts = ViewTable.withAggPart(
+        batch.select(groupCols.map(col): _*), groupCols)
+        .select("agg_part").distinct().collect().map(_.getInt(0)).toSeq
+      ViewTable.Batch(parts, { slice =>
+        val joined = slice.join(batch, groupCols, "full_outer")
+          .localCheckpoint() // feeds carry, clean, dirty — one evaluation
+        val untouchedInPart = col("__an").isNull && col("__rn").isNull
+        val viewCols = groupCols ++ Seq("regs", nCol)
+        val carry = joined.filter(untouchedInPart)
+          .select(viewCols.map(col): _*)
+        val touched = joined.filter(!untouchedInPart)
+        val rn = coalesce(col("__rn"), lit(0L))
+        val an = coalesce(col("__an"), lit(0L))
+        // a removed key's rank can only drop the register it TIES
+        // (rank < register ⇒ another key still carries it); a remove
+        // against a missing stored row is defensively dirty
+        val tiesStored = exists(
+          zip_with(col("__rregs"), col("regs"),
+            (rv, sv) => rv > 0 && rv >= sv),
+          x => x)
+        val dirtyCond = rn > 0 && (col(nCol).isNull || tiesStored)
+        val foldedRegs = when(col("__aregs").isNull, col("regs"))
+          .when(col("regs").isNull, col("__aregs"))
+          .otherwise(zip_with(col("regs"), col("__aregs"),
+            (a, b) => greatest(a, b)))
+        val clean = touched.filter(!dirtyCond)
+          .select(groupCols.map(col) :+ foldedRegs.as("regs") :+
+            (coalesce(col(nCol), lit(0L)) + an - rn).as(nCol): _*)
+          .filter(col(nCol) > 0)
+        val dirty = ViewTable.collectKeys(
+          touched.filter(dirtyCond).select(groupCols.map(col): _*))
+        val dirtyAgg =
+          if (dirty.isEmpty) clean.limit(0)
+          else regsOf(recompute(dirty.frame), groupCols, keyCol, "regs",
+            nCol)
+        carry.unionByName(clean).unionByName(dirtyAgg)
+      })
     }
-    val slice = readKeyed(spark, path)
-      .filter(col("agg_part").isin(parts: _*)).drop("agg_part")
-    val joined = slice.join(batch, groupCols, "full_outer")
-      .localCheckpoint() // feeds carry, clean, dirty — one evaluation
-    val untouchedInPart = col("__an").isNull && col("__rn").isNull
-    val viewCols = groupCols ++ Seq("regs", nCol)
-    val carry = joined.filter(untouchedInPart)
-      .select(viewCols.map(col): _*)
-    val touched = joined.filter(!untouchedInPart)
-    val rn = coalesce(col("__rn"), lit(0L))
-    val an = coalesce(col("__an"), lit(0L))
-    // a removed key's rank can only drop the register it TIES (rank <
-    // register ⇒ another key still carries it); a remove against a
-    // missing stored row is defensively dirty
-    val tiesStored = exists(
-      zip_with(col("__rregs"), col("regs"),
-        (rv, sv) => rv > 0 && rv >= sv),
-      x => x)
-    val dirtyCond = rn > 0 && (col(nCol).isNull || tiesStored)
-    val foldedRegs = when(col("__aregs").isNull, col("regs"))
-      .when(col("regs").isNull, col("__aregs"))
-      .otherwise(zip_with(col("regs"), col("__aregs"),
-        (a, b) => greatest(a, b)))
-    val clean = touched.filter(!dirtyCond)
-      .select(groupCols.map(col) :+ foldedRegs.as("regs") :+
-        (coalesce(col(nCol), lit(0L)) + an - rn).as(nCol): _*)
-      .filter(col(nCol) > 0)
-    // dirty keys land on the driver in ONE job (they are batch-group-
-    // bounded and every caller broadcasts them into its recompute — a
-    // broadcast IS a driver collect + ship, so driver-boundedness was
-    // already the contract; the localCheckpoint + isEmpty pair this
-    // replaces paid two blocking jobs for the same bytes), and the
-    // emptiness gate becomes a driver-local array check: recompute
-    // stays un-invoked when nothing is dirty — the spec-pinned contract
-    // nullable=true: a null group key must survive the driver hop the
-    // way it survived the checkpoint this replaces
-    val dirtySchema = org.apache.spark.sql.types.StructType(
-      groupCols.map(n => joined.schema(n).copy(nullable = true)))
-    val dirtyRows = touched.filter(dirtyCond)
-      .select(groupCols.map(col): _*).collect()
-    val dirtyKeys = spark.createDataFrame(
-      java.util.Arrays.asList(dirtyRows: _*), dirtySchema)
-    val dirtyAgg =
-      if (dirtyRows.isEmpty) clean.limit(0)
-      else regsOf(recompute(dirtyKeys), groupCols, keyCol, "regs", nCol)
-    val merged = MaintainedAgg.withAggPart(
-      carry.unionByName(clean).unionByName(dirtyAgg), groupCols)
-    PartCommit.replaceParts(spark, path, "agg_part", batchId, parts) {
-      stage =>
-        merged.repartition(parts.size, col("agg_part"))
-          .write.mode("overwrite").partitionBy("agg_part").parquet(stage)
-    }
-  }
 
   // ---- streaming ingest: per-batch register-delta partitions ----
   //
-  // The MaintainedAgg discipline, made SAFER by the sketch's algebra:
-  // each micro-batch's per-group register block lands under
-  // `_deltas/batch_id=<id>` (own-partition overwrite → replay rewrites
-  // the same bytes), serving is merge-on-read, compaction folds deltas
-  // into the base atomically with the `_folded` high-water mark. And
-  // because the register merge is IDEMPOTENT (max), even a delta that
+  // The shared delta protocol ([[graft.io.ViewTable.writeDelta]]),
+  // made SAFER by the sketch's algebra: because the register merge is IDEMPOTENT (max), even a delta that
   // somehow folded twice could not corrupt the distinct registers —
   // only the row counts need the exactly-once marks, same as sums.
 
   /** One micro-batch's delta write: `added` rows carry
     * (groupCols ++ keyCol); the per-group register block + row count
-    * land under this batch's own partition. Gate/layout/compaction
-    * contract: [[graft.io.Deltas]].
+    * land under this batch's own partition.
     */
   def writeDeltaPartial(added: DataFrame, batchId: Long,
                         groupCols: Seq[String], keyCol: String,
-                        rootPath: String, nCol: String = "n"): Unit = {
-    val path = graft.io.GenTable.live(added.sparkSession, rootPath)
-    if (graft.io.Deltas.alreadyFolded(added.sparkSession, path,
-        batchId)) return
-    val b = added.localCheckpoint() // isEmpty + write: two actions
-    if (!b.isEmpty)
-      regsOf(b, groupCols, keyCol, "regs", nCol)
-        .write.mode("overwrite")
-        .parquet(graft.io.Deltas.deltaPath(path, batchId))
-  }
+                        rootPath: String, nCol: String = "n"): Unit =
+    ViewTable.writeDelta(added, batchId, rootPath)(
+      regsOf(_, groupCols, keyCol, "regs", nCol))
 
   /** The served view: base registers merged with every pending batch
     * delta — element-wise max across blocks ([[Sketches
@@ -265,17 +203,12 @@ object MaintainedDistinct {
     */
   def readWithDeltas(spark: SparkSession, rootPath: String,
                      groupCols: Seq[String],
-                     nCol: String = "n"): DataFrame = {
-    val path = graft.io.GenTable.live(spark, rootPath)
-    val base = read(spark, path)
-    if (!graft.io.Deltas.hasDeltas(spark, path)) return base
-    val deltas = spark.read.parquet(graft.io.Deltas.dir(path))
-      .select((groupCols ++ Seq("regs", nCol)).map(col): _*)
-    base.unionByName(deltas)
-      .groupBy(groupCols.map(col): _*)
-      .agg(Sketches.hllBlockMerge(col("regs")).as("regs"),
-        sum(col(nCol)).as(nCol))
-  }
+                     nCol: String = "n"): DataFrame =
+    ViewTable.readWithDeltas(spark, rootPath,
+      groupCols ++ Seq("regs", nCol))(
+      _.groupBy(groupCols.map(col): _*)
+        .agg(Sketches.hllBlockMerge(col("regs")).as("regs"),
+          sum(col(nCol)).as(nCol)))
 
   /** Serve estimates over base ⊎ deltas. */
   def estimatesWithDeltas(spark: SparkSession, path: String,
@@ -285,22 +218,13 @@ object MaintainedDistinct {
       .select(groupCols.map(col) :+
         estimateCol(col("regs")).as("hll_estimate") :+ col(nCol): _*)
 
-  /** Fold pending deltas into the base ATOMICALLY ([[graft.io
-    * .StagedSwap]]): staged dir gets the merged view plus the
-    * `_folded` high-water mark of every absorbed batch id, published
-    * in one rename — a replayed batch at or below the mark no-ops in
-    * [[writeDeltaPartial]]. Same single-writer discipline as
-    * [[graft.io.MaintainedAgg.compactDeltas]]: stop the ingest first.
+  /** Fold pending deltas into the base ATOMICALLY — the
+    * [[graft.io.ViewTable.compact]] contract (single-writer: stop the
+    * ingest first).
     */
   def compactDeltas(spark: SparkSession, path: String,
                     groupCols: Seq[String],
                     nCol: String = "n"): Unit =
-    graft.io.Deltas.compact(spark, path) { stage =>
-      val folded = readWithDeltas(spark, path, groupCols, nCol)
-        .localCheckpoint() // materialize BEFORE the swap touches files
-      val keyed = MaintainedAgg.withAggPart(folded, groupCols)
-      keyed.repartition(MaintainedAgg.AggParts, col("agg_part"))
-        .write.mode("overwrite").partitionBy("agg_part").parquet(stage)
-      SchemaFile.write(spark, stage, keyed.schema)
-    }
+    ViewTable.compact(spark, path, groupCols)(
+      readWithDeltas(spark, path, groupCols, nCol))
 }

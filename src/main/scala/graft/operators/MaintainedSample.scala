@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Portable
-import graft.io.{Deltas, MaintainedAgg, PartCommit, SchemaFile}
+import graft.io.ViewTable
 
 /** The maintained QUANTILE-SKETCH view — the fourth stored-aggregate
   * member (sum/count, extrema, distinct registers, this): per group,
@@ -40,8 +40,8 @@ import graft.io.{Deltas, MaintainedAgg, PartCommit, SchemaFile}
   *     the group for the caller's fact-side recompute — the group
   *     needs its next-smallest rank, and only the facts know it.
   *
-  * Same [[graft.io.PartCommit]] exactly-once contract as its three
-  * siblings; refresh ≡ full re-sketch is the oracle
+  * Same [[graft.io.ViewTable]] layout, exactly-once refresh commit
+  * and delta protocol as its three siblings; refresh ≡ full re-sketch is the oracle
   * (q_incr_quantile, the q_sketch_lifecycle SQL replayed over the new
   * snapshot). Serving composes with the sketch toolkit unchanged:
   * [[Sketches.sketchQuantiles]] for percentile estimates,
@@ -126,23 +126,16 @@ object MaintainedSample {
     val win = bottomM(keyed, groupCol, 2 * m)
       .localCheckpoint() // feeds the dedup AND the crowding test once
     val canon = canonical(win, groupCol)
-    // crowded groups land on the driver in ONE job (they fed two
-    // broadcast joins before, so driver-boundedness was already this
-    // code's assumption — a broadcast IS a driver collect + ship; the
-    // localCheckpoint + isEmpty pair this replaces paid two blocking
-    // jobs per sketch for the same bytes, ×3 sketches per view
-    // lifecycle — job counts in LifecycleBench's `jobs`)
-    val crowdedRows = canon.groupBy(col(groupCol))
+    // crowded groups land on the driver in ONE job (they feed two
+    // broadcast joins — [[ViewTable.collectKeys]]'s bound)
+    val crowdedKeys = ViewTable.collectKeys(canon.groupBy(col(groupCol))
       .agg(count(lit(1)).as("__nk"))
       .join(win.groupBy(col(groupCol)).agg(count(lit(1)).as("__nb")),
         groupCol)
       .filter(col("__nk") <= m && col("__nb") >= 2 * m)
-      .select(groupCol).collect()
-    if (crowdedRows.isEmpty) return bottomM(canon, groupCol, m)
-    val crowded = keyed.sparkSession.createDataFrame(
-      java.util.Arrays.asList(crowdedRows: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        canon.schema(groupCol).copy(nullable = true))))
+      .select(groupCol))
+    if (crowdedKeys.isEmpty) return bottomM(canon, groupCol, m)
+    val crowded = crowdedKeys.frame
     val fast = bottomM(
       canon.join(broadcast(crowded), Seq(groupCol), "left_anti"),
       groupCol, m)
@@ -154,37 +147,16 @@ object MaintainedSample {
 
   /** Materialize the bottom-m sample per group from per-row input. */
   def write(rows: DataFrame, groupCol: String, keyCol: String,
-            valueCol: String, path: String, m: Int): Unit = {
-    val spark = rows.sparkSession
-    def flat(dir: String): Unit = {
-      val keyed = MaintainedAgg.withAggPart(
-        sketchOf(rows, groupCol, keyCol, valueCol, m), Seq(groupCol))
-      keyed.repartition(MaintainedAgg.AggParts, col("agg_part"))
-        .write.mode("overwrite").partitionBy("agg_part").parquet(dir)
-      SchemaFile.write(spark, dir, keyed.schema)
-    }
-    // zero-gap generation root on non-atomic-rename backends — the
-    // [[graft.io.GenTable]] contract MaintainedAgg documents
-    if (graft.io.GenTable.shouldGen(spark, path))
-      graft.io.GenTable.swapGen(spark, path)(flat)
-    else flat(path)
-  }
+            valueCol: String, path: String, m: Int): Unit =
+    ViewTable.bootstrap(rows.sparkSession, path, Seq(groupCol))(
+      sketchOf(rows, groupCol, keyCol, valueCol, m))
 
   /** The stored sample rows (layout column dropped), crash-recovered —
     * feed directly to [[Sketches.sketchQuantiles]] /
     * [[Sketches.sketchKsDrift]].
     */
-  def read(spark: SparkSession, rootPath: String): DataFrame = {
-    val path = graft.io.GenTable.live(spark, rootPath)
-    PartCommit.recover(spark, path)
-    readKeyed(spark, path).drop("agg_part")
-  }
-
-  private def readKeyed(spark: SparkSession, path: String): DataFrame =
-    SchemaFile.read(spark, path) match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None    => spark.read.parquet(path)
-    }
+  def read(spark: SparkSession, rootPath: String): DataFrame =
+    ViewTable.read(spark, rootPath)
 
   /** Percentile estimates served from the store. */
   def readQuantiles(spark: SparkSession, path: String, groupCol: String,
@@ -193,9 +165,10 @@ object MaintainedSample {
 
   /** Apply a CDC batch. `removed`/`added` carry per-row
     * (groupCol, keyCol, valueCol) contributions. `recompute` receives
-    * the distinct DIRTY group keys and must return the NEW snapshot's
-    * per-row rows for exactly those groups. Exactly-once under retry
-    * keyed by `batchId`.
+    * the distinct DIRTY group keys (batch-bounded, on the driver —
+    * [[graft.io.ViewTable.collectKeys]]) and must return the NEW
+    * snapshot's per-row rows for exactly those groups. Exactly-once
+    * under retry keyed by `batchId` ([[graft.io.ViewTable.refresh]]).
     *
     * Invariant (q_incr_quantile oracle, spec-pinned): after the
     * refresh the view ≡ [[write]] over the new snapshot, row-equal.
@@ -204,114 +177,80 @@ object MaintainedSample {
                    removed: DataFrame, added: DataFrame,
                    groupCol: String, keyCol: String, valueCol: String,
                    m: Int, batchId: Long)
-                  (recompute: DataFrame => DataFrame): Unit = {
-    val path = graft.io.GenTable.live(spark, rootPath)
-    PartCommit.recover(spark, path)
-    if (batchId <= PartCommit.lastApplied(spark, path)) return
-    // a CDC refresh against a base with PENDING streaming deltas is
-    // unsound for this view: the merge-on-read is a SET UNION, so a
-    // delete of a key that also lives in an unfolded delta would be
-    // silently resurrected by readWithDeltas, and the member-hit
-    // classification below would run against a stale base. Unlike the
-    // sum view (where base refresh and additive deltas compose
-    // arithmetically), there is no safe interleaving — compact first.
-    require(!Deltas.hasDeltas(spark, path),
-      s"deltaRefresh($path): pending streaming _deltas — the sample " +
-        "view's set-union merge cannot compose a CDC delete with " +
-        "unfolded deltas; run compactDeltas first")
-    // row-level (group, key) removal set — batch-bounded but NOT
-    // broadcast (a CDC delete wave can be arbitrarily large; the
-    // member-hit join below shuffles, AQE picks the strategy)
-    val rem = removed.filter(col(keyCol).isNotNull)
-      .select(col(groupCol), col(keyCol).cast("string").as("key"))
-      .distinct().localCheckpoint()
-    // the batch's own bottom-m: folding it in is exact (merge ≡ direct)
-    val addSk = sketchOf(added, groupCol, keyCol, valueCol, m)
-      .localCheckpoint()
-    // ONE driver hop feeds the touched-part list AND the group set
-    // (batch-group-level, broadcast below anyway — so driver-bounded by
-    // the existing contract; the checkpoint + separate part collect
-    // this replaces paid two blocking jobs)
-    val bgSchema = org.apache.spark.sql.types.StructType(Seq(
-      rem.schema(groupCol).copy(nullable = true)))
-    val bgRows = MaintainedAgg.withAggPart(
-      rem.select(groupCol).union(addSk.select(groupCol)).distinct(),
-      Seq(groupCol)).collect()
-    val parts = bgRows.map(_.getAs[Int]("agg_part")).distinct.toSeq
-    val batchGroups = spark.createDataFrame(
-      java.util.Arrays.asList(bgRows.map(r =>
-        org.apache.spark.sql.Row(r.getAs[Any](groupCol))): _*), bgSchema)
-    if (parts.isEmpty) {
-      PartCommit.markApplied(spark, path, batchId)
-      return
+                  (recompute: DataFrame => DataFrame): Unit =
+    // pending streaming deltas are refused by the kernel: the
+    // merge-on-read is a SET UNION, so a delete of a key that also
+    // lives in an unfolded delta would be resurrected on read
+    ViewTable.refresh(spark, rootPath, Some(batchId), Seq(groupCol)) {
+      // row-level (group, key) removal set — batch-bounded but NOT
+      // broadcast (a CDC delete wave can be arbitrarily large; the
+      // member-hit join below shuffles, AQE picks the strategy)
+      val rem = removed.filter(col(keyCol).isNotNull)
+        .select(col(groupCol), col(keyCol).cast("string").as("key"))
+        .distinct().localCheckpoint()
+      // the batch's own bottom-m: folding it in is exact (merge ≡ direct)
+      val addSk = sketchOf(added, groupCol, keyCol, valueCol, m)
+        .localCheckpoint()
+      // ONE driver hop feeds the touched-part list AND the group set
+      // (batch-group-level, broadcast below)
+      val bg = ViewTable.collectKeys(ViewTable.withAggPart(
+        rem.select(groupCol).union(addSk.select(groupCol)).distinct(),
+        Seq(groupCol)))
+      val parts = bg.rows.map(_.getAs[Int]("agg_part")).distinct.toSeq
+      val batchGroups = bg.frame.drop("agg_part")
+      ViewTable.Batch(parts, { touchedSlice =>
+        val slice = touchedSlice
+          .localCheckpoint() // feeds stats, carry and candidates once
+        // per-group classification: member-hit removes (or an
+        // under-full sample with ANY remove, or removes against a
+        // group with no stored rows) ⇒ dirty — everything else folds
+        // arithmetically
+        val stats = slice
+          .join(rem.withColumn("__hit", lit(1)),
+            Seq(groupCol, "key"), "left")
+          .groupBy(col(groupCol))
+          .agg(count(lit(1)).as("__size"),
+            sum(coalesce(col("__hit"), lit(0))).as("__hits"))
+        val remGroups = rem.select(groupCol).distinct()
+          .withColumn("__rg", lit(1))
+        // classification folds straight into the dirty-key hop
+        // (dirtyKeys ⊆ batchGroups, which this method broadcasts)
+        val dirty = ViewTable.collectKeys(
+          stats.join(remGroups, Seq(groupCol), "full_outer")
+            .filter(coalesce(col("__rg"), lit(0)) === 1 &&
+              (col("__size").isNull || col("__hits") > 0 ||
+                col("__size") < m))
+            .select(groupCol))
+        val cleanTouched = batchGroups
+          .join(dirty.frame, Seq(groupCol), "left_anti")
+        // clean fold: bottom-m of the KEY SET of (stored slice ∪ batch
+        // sketch) — canonicalized so a re-added existing key cannot
+        // take two slots — computed only over TOUCHED clean groups;
+        // untouched groups in the touched partitions carry over
+        // verbatim
+        val carry = slice.join(broadcast(batchGroups), Seq(groupCol),
+          "left_anti")
+        val cleanFold = bottomM(canonical(
+          slice.join(broadcast(cleanTouched), Seq(groupCol), "left_semi")
+            .unionByName(addSk
+              .join(broadcast(cleanTouched), Seq(groupCol), "left_semi")),
+          groupCol), groupCol, m)
+        // recompute stays un-invoked when nothing is dirty — the
+        // spec-pinned contract
+        val dirtySk =
+          if (dirty.isEmpty) cleanFold.limit(0)
+          else sketchOf(recompute(dirty.frame), groupCol, keyCol,
+            valueCol, m)
+        val cols = viewCols(groupCol).map(col)
+        carry.select(cols: _*)
+          .unionByName(cleanFold.select(cols: _*))
+          .unionByName(dirtySk.select(cols: _*))
+      })
     }
-    val slice = readKeyed(spark, path)
-      .filter(col("agg_part").isin(parts: _*)).drop("agg_part")
-      .localCheckpoint() // feeds stats, carry and candidates once
-    // per-group classification: member-hit removes (or an under-full
-    // sample with ANY remove, or removes against a group with no
-    // stored rows) ⇒ dirty — everything else folds arithmetically
-    val stats = slice
-      .join(rem.withColumn("__hit", lit(1)),
-        Seq(groupCol, "key"), "left")
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("__size"),
-        sum(coalesce(col("__hit"), lit(0))).as("__hits"))
-    val remGroups = rem.select(groupCol).distinct()
-      .withColumn("__rg", lit(1))
-    // classification folds straight into the dirty-key materialization
-    // (the intermediate (group, __dirty) checkpoint was one more
-    // blocking job for a frame with one consumer), and the dirty keys
-    // land on the driver in ONE job: dirtyKeys ⊆ batchGroups, which
-    // this method already broadcasts (carry's anti-join), and every
-    // caller broadcasts into its recompute — driver-boundedness was
-    // already the contract, so the localCheckpoint + isEmpty pair paid
-    // two blocking jobs for the same bytes
-    // nullable=true: a null group key must survive the driver hop the
-    // way it survived the checkpoint this replaces
-    val dirtySchema = org.apache.spark.sql.types.StructType(Seq(
-      rem.schema(groupCol).copy(nullable = true)))
-    val dirtyRows = stats.join(remGroups, Seq(groupCol), "full_outer")
-      .filter(coalesce(col("__rg"), lit(0)) === 1 &&
-        (col("__size").isNull || col("__hits") > 0 ||
-          col("__size") < m))
-      .select(groupCol).collect()
-    val dirtyKeys = spark.createDataFrame(
-      java.util.Arrays.asList(dirtyRows: _*), dirtySchema)
-    val cleanTouched = batchGroups
-      .join(dirtyKeys, Seq(groupCol), "left_anti")
-    // clean fold: bottom-m of the KEY SET of (stored slice ∪ batch
-    // sketch) — canonicalized so a re-added existing key cannot take
-    // two slots — computed only over TOUCHED clean groups; untouched
-    // groups in the touched partitions carry over verbatim
-    val carry = slice.join(broadcast(batchGroups), Seq(groupCol),
-      "left_anti")
-    val cleanFold = bottomM(canonical(
-      slice.join(broadcast(cleanTouched), Seq(groupCol), "left_semi")
-        .unionByName(addSk
-          .join(broadcast(cleanTouched), Seq(groupCol), "left_semi")),
-      groupCol), groupCol, m)
-    // the emptiness gate is now a driver-local array check (no job);
-    // recompute stays un-invoked when nothing is dirty — the
-    // spec-pinned contract
-    val dirtySk =
-      if (dirtyRows.isEmpty) cleanFold.limit(0)
-      else sketchOf(recompute(dirtyKeys), groupCol, keyCol, valueCol, m)
-    val merged = MaintainedAgg.withAggPart(
-      carry.select(viewCols(groupCol).map(col): _*)
-        .unionByName(cleanFold.select(viewCols(groupCol).map(col): _*))
-        .unionByName(dirtySk.select(viewCols(groupCol).map(col): _*)),
-      Seq(groupCol))
-    PartCommit.replaceParts(spark, path, "agg_part", batchId, parts) {
-      stage =>
-        merged.repartition(parts.size, col("agg_part"))
-          .write.mode("overwrite").partitionBy("agg_part").parquet(stage)
-    }
-  }
 
   // ---- streaming ingest: per-batch sample-delta partitions ----
   //
-  // The shared delta protocol ([[graft.io.Deltas]]), and like the
+  // The shared delta protocol ([[graft.io.ViewTable.writeDelta]]), and like the
   // distinct view's registers the sample's algebra makes it SAFER
   // than the sum view: the canonicalized merge is a set union +
   // keep-bottom-m — associative AND idempotent — so even a delta
@@ -324,15 +263,9 @@ object MaintainedSample {
   def writeDeltaPartial(added: DataFrame, batchId: Long,
                         groupCol: String, keyCol: String,
                         valueCol: String, m: Int,
-                        rootPath: String): Unit = {
-    val path = graft.io.GenTable.live(added.sparkSession, rootPath)
-    if (Deltas.alreadyFolded(added.sparkSession, path, batchId)) return
-    val b = added.localCheckpoint() // isEmpty + write: two actions
-    if (!b.isEmpty)
-      sketchOf(b, groupCol, keyCol, valueCol, m)
-        .write.mode("overwrite")
-        .parquet(Deltas.deltaPath(path, batchId))
-  }
+                        rootPath: String): Unit =
+    ViewTable.writeDelta(added, batchId, rootPath)(
+      sketchOf(_, groupCol, keyCol, valueCol, m))
 
   /** The served sample: bottom-m of the canonical KEY SET of
     * (base ∪ every pending delta) per group — merge-on-read, one
@@ -340,27 +273,16 @@ object MaintainedSample {
     * the base and in a delta (or in two deltas) counts once.
     */
   def readWithDeltas(spark: SparkSession, rootPath: String,
-                     groupCol: String, m: Int): DataFrame = {
-    val path = graft.io.GenTable.live(spark, rootPath)
-    val base = read(spark, path)
-    if (!Deltas.hasDeltas(spark, path)) return base
-    val deltas = spark.read.parquet(Deltas.dir(path))
-      .select(viewCols(groupCol).map(col): _*)
-    bottomM(canonical(base.unionByName(deltas), groupCol), groupCol, m)
-  }
+                     groupCol: String, m: Int): DataFrame =
+    ViewTable.readWithDeltas(spark, rootPath, viewCols(groupCol))(
+      all => bottomM(canonical(all, groupCol), groupCol, m))
 
-  /** Fold pending deltas into the base ATOMICALLY — the shared
-    * [[graft.io.Deltas.compact]] contract (single-writer: stop the
+  /** Fold pending deltas into the base ATOMICALLY — the
+    * [[graft.io.ViewTable.compact]] contract (single-writer: stop the
     * ingest first).
     */
   def compactDeltas(spark: SparkSession, path: String,
                     groupCol: String, m: Int): Unit =
-    Deltas.compact(spark, path) { stage =>
-      val folded = readWithDeltas(spark, path, groupCol, m)
-        .localCheckpoint() // materialize BEFORE the swap touches files
-      val keyed = MaintainedAgg.withAggPart(folded, Seq(groupCol))
-      keyed.repartition(MaintainedAgg.AggParts, col("agg_part"))
-        .write.mode("overwrite").partitionBy("agg_part").parquet(stage)
-      SchemaFile.write(spark, stage, keyed.schema)
-    }
+    ViewTable.compact(spark, path, Seq(groupCol))(
+      readWithDeltas(spark, path, groupCol, m))
 }

@@ -1291,7 +1291,7 @@ object TextOps {
   // ---- streaming twin of the term statistics ----
   //
   // All three views are MaintainedAgg sums, so the shared delta
-  // protocol ([[graft.io.Deltas]]) applies verbatim: each micro-batch
+  // protocol ([[graft.io.ViewTable]]) applies verbatim: each micro-batch
   // of NEW docs lands one delta per view under the batch's own
   // partition (replay rewrites the same bytes), serving is
   // merge-on-read, compaction folds atomically. Deletes stay on the

@@ -943,7 +943,7 @@ object CoreQueries {
     // incremental JOIN-agg view maintenance against a STORED view:
     // revenue by (nation, customer) — fine-grained groups on the DIM
     // side — built once from the old snapshot, laid out
-    // hash-partitioned on the group key (MaintainedAgg.AggParts), then
+    // hash-partitioned on the group key (ViewTable.AggParts), then
     // refreshed from a small CDC batch (updates %499, deletes %701) by
     // SELF-MAINTAINING deltas: only changed-key rows are enriched, the
     // stored view is read/rewritten on touched partitions only — no

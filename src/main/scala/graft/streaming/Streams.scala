@@ -801,8 +801,9 @@ object Streams {
     * .readWithDeltas]] — batches × groups rows, the facts are never
     * re-read); [[graft.io.MaintainedAgg.compactDeltas]] periodically
     * folds deltas into the hash-partitioned base ATOMICALLY
-    * (StagedSwap publishes the folded view and the `_folded`
-    * batch-id high-water mark in one rename; a post-crash REPLAY of
+    * (one table swap — [[graft.io.ViewTable.compact]] — publishes
+    * the folded view and the `_folded` batch-id high-water mark
+    * together; a post-crash REPLAY of
     * a folded batch no-ops against the mark, so a crash can never
     * double-apply). Single-writer discipline: STOP this query before
     * compacting — a NEW batch landing mid-swap would be lost with

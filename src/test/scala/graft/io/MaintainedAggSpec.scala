@@ -102,6 +102,36 @@ class MaintainedAggSpec extends SparkSpec {
     assert(left == Set(("b", "g2")), left)
   }
 
+  test("CDC refresh refuses a base with pending streaming deltas") {
+    import spark.implicits._
+    val path = tmp()
+    def b(rs: (String, Int)*) =
+      rs.toDF("k", "m").select(col("k"), col("m").cast(dec).as("m"))
+    graft.io.MaintainedAgg.write(
+      b(("g", 5)).groupBy("k").agg(sum("m").as("m"), count(lit(1)).as("n")),
+      Seq("k"), path, Seq("m"), "n")
+    graft.io.MaintainedAgg.writeDeltaPartial(b(("g", 3)), 1L,
+      Seq("k"), Seq("m"), "n", path)
+    // removing the delta's row would drive the base count to zero and
+    // the count>0 clamp would drop g, losing the subtraction for good
+    val e = intercept[IllegalArgumentException] {
+      graft.io.MaintainedAgg.deltaRefresh(spark, path,
+        removed = b(("g", 3)), added = b(), Seq("k"), Seq("m"), "n",
+        batchId = 1L)
+    }
+    assert(e.getMessage.contains("compactDeltas"), e.getMessage)
+    // after compaction the same refresh is legal and exact
+    graft.io.MaintainedAgg.compactDeltas(spark, path, Seq("k"), Seq("m"), "n")
+    graft.io.MaintainedAgg.deltaRefresh(spark, path,
+      removed = b(("g", 3)), added = b(), Seq("k"), Seq("m"), "n",
+      batchId = 1L)
+    val got = graft.io.MaintainedAgg.read(spark, path)
+      .select(col("k"), col("m").cast("decimal(38,6)"), col("n"))
+      .collect().map(r => (r.getString(0), BigDecimal(r.getDecimal(1)),
+        r.getLong(2))).toSeq
+    assert(got == Seq(("g", BigDecimal(5), 1L)), got)
+  }
+
   test("refresh reads only TOUCHED partitions of the stored view") {
     val li = Tables.lineitem(spark, sf)
     val path = tmp()
@@ -121,12 +151,12 @@ class MaintainedAggSpec extends SparkSpec {
       rev(col("l_extendedprice") + 1.0))
     // measure the refresh's view-slice read via the same static
     // partition filter deltaRefresh uses (ScanAudit numbers, not prose)
-    val keyed = graft.io.MaintainedAgg.withAggPart(
+    val keyed = graft.io.ViewTable.withAggPart(
       removed.select("n_name", "c_name").distinct(), Seq("n_name", "c_name"))
     val parts = keyed.select("agg_part").distinct()
       .collect().map(_.getInt(0)).toSeq
     assert(parts.nonEmpty &&
-      parts.size < graft.io.MaintainedAgg.AggParts / 4, parts.toString)
+      parts.size < graft.io.ViewTable.AggParts / 4, parts.toString)
     val slice = spark.read.parquet(path)
       .filter(col("agg_part").isin(parts: _*))
     val read = graft.plans.ScanAudit.measure(slice).rowsRead

@@ -248,7 +248,7 @@ class ObjectStoreCommitSpec extends SparkSpec {
       assert(served(root) == mergedMap, s"window #$k: retry diverged")
       assert(baseRows(root) == mergedMap,
         s"window #$k: retry did not fold the base")
-      assert(!Deltas.hasDeltas(spark,
+      assert(!ViewTable.hasDeltas(spark,
         GenTable.live(spark, root)), s"window #$k: deltas left behind")
       // a folded batch must no-op on replay after the fold
       MaintainedAgg.writeDeltaPartial(batch(("a", 2), ("d", 3)), 1L,

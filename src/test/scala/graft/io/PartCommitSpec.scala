@@ -57,7 +57,7 @@ class PartCommitSpec extends SparkSpec {
     seed(path)
     // stage batch 1 (a += 1) fully, publish the marker, but "crash"
     // before the apply phase — built by hand to pin the on-disk format
-    val keyed = MaintainedAgg.withAggPart(
+    val keyed = ViewTable.withAggPart(
       batch(("a", 11)).groupBy("k")
         .agg(sum("m").cast("decimal(38,6)").as("m"), lit(2L).as("n")),
       Seq("k"))
@@ -91,6 +91,31 @@ class PartCommitSpec extends SparkSpec {
     assert(viewMap(path)("a") == (BigDecimal(11), 2L))
   }
 
+  test("id-free refresh after a post-marker crash applies on top of it") {
+    val path = tmp()
+    seed(path)
+    // batch 1 (a += 1) staged and its marker published, `_applied`
+    // never written — the "crash AFTER the commit marker" state
+    val keyed = ViewTable.withAggPart(
+      batch(("a", 11)).groupBy("k")
+        .agg(sum("m").cast("decimal(38,6)").as("m"), lit(2L).as("n")),
+      Seq("k"))
+    val p = keyed.select("agg_part").head().getInt(0)
+    keyed.write.mode("overwrite").partitionBy("agg_part")
+      .parquet(PartCommit.stageDir(path))
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new org.apache.hadoop.fs.Path(path, "_commit"), true)
+    out.write(s"1\nagg_part\n$p\n$p\n".getBytes("UTF-8")); out.close()
+    assert(PartCommit.lastApplied(spark, path) == -1L)
+    // the id-free call must allocate its id AFTER recovery has
+    // applied batch 1, or the replay gate drops this batch
+    MaintainedAgg.deltaRefresh(spark, path, removed = batch(),
+      added = batch(("a", 1)), Seq("k"), Seq("m"), "n")
+    assert(viewMap(path)("a") == (BigDecimal(12), 3L))
+    assert(PartCommit.lastApplied(spark, path) == 2L)
+  }
+
   test("crash MID-APPLY (mixed state): recovery converges, no double") {
     val path = tmp()
     seed(path)
@@ -98,11 +123,11 @@ class PartCommitSpec extends SparkSpec {
     // (partition emptied). Simulate the dynamic-overwrite nightmare:
     // a's partition already swapped in, b's deletion not yet done,
     // marker still present.
-    val aKeyed = MaintainedAgg.withAggPart(
+    val aKeyed = ViewTable.withAggPart(
       batch(("a", 11)).groupBy("k")
         .agg(sum("m").cast("decimal(38,6)").as("m"), lit(2L).as("n")),
       Seq("k"))
-    val bKeyed = MaintainedAgg.withAggPart(
+    val bKeyed = ViewTable.withAggPart(
       batch(("b", 7)).select(col("k")).distinct(), Seq("k"))
     val pa = aKeyed.select("agg_part").head().getInt(0)
     val pb = bKeyed.select("agg_part").head().getInt(0)

@@ -191,7 +191,7 @@ class MaintainedDistinctSpec extends SparkSpec {
     MaintainedDistinct.write(rows(li), Seq("nk"), "k", path)
     // one group's insert touches exactly its partition
     val one = rows(li.limit(1)).localCheckpoint()
-    val parts = graft.io.MaintainedAgg.withAggPart(
+    val parts = graft.io.ViewTable.withAggPart(
       one.select("nk").distinct(), Seq("nk"))
       .select("agg_part").distinct().collect().map(_.getInt(0)).toSet
     assert(parts.size == 1)
@@ -209,7 +209,7 @@ class MaintainedDistinctSpec extends SparkSpec {
     val slice = spark.read.parquet(path)
       .filter(col("agg_part").isin(parts.toSeq: _*))
     val read = graft.plans.ScanAudit.measure(slice).rowsRead
-    val allParts = graft.io.MaintainedAgg.withAggPart(
+    val allParts = graft.io.ViewTable.withAggPart(
       spark.read.parquet(path).select("nk").distinct(), Seq("nk"))
       .select("agg_part").distinct().count()
     if (allParts > 1) // guard a degenerate all-in-one-partition layout

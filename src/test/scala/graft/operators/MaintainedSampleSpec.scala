@@ -238,7 +238,7 @@ class MaintainedSampleSpec extends SparkSpec {
       (s"g${i % 3}", k, i.toDouble) }
     MaintainedSample.write(b(all: _*), "g", "k", "v", path, M)
     val one = b(("g0", "extra", 9.0)).localCheckpoint()
-    val parts = graft.io.MaintainedAgg.withAggPart(
+    val parts = graft.io.ViewTable.withAggPart(
       one.select("g"), Seq("g"))
       .select("agg_part").distinct().collect().map(_.getInt(0)).toSet
     def files(p: String, skip: Set[Int]): Map[String, Long] = {
@@ -255,7 +255,7 @@ class MaintainedSampleSpec extends SparkSpec {
     val slice = spark.read.parquet(path)
       .filter(col("agg_part").isin(parts.toSeq: _*))
     val read = graft.plans.ScanAudit.measure(slice).rowsRead
-    val allParts = graft.io.MaintainedAgg.withAggPart(
+    val allParts = graft.io.ViewTable.withAggPart(
       b(all: _*).select("g").distinct(), Seq("g"))
       .select("agg_part").distinct().count()
     if (allParts > 1) // tiny fixture: groups could all share a partition
