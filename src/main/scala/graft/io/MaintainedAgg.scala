@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   *      strategy, whose "touched groups" recompute still scans every
   *      fact of a touched group);
   *   2. maps the delta groups to their `agg_part` values — ≤
-  *      [[ViewTable.AggParts]] distinct ints, bounded driver work — and reads
-  *      ONLY those partitions of the stored view (static partition
-  *      filter, ScanAudit-measured in MaintainedAggSpec);
+  *      [[ViewTable.AggParts]] distinct ints, bounded driver work —
+  *      and reads ONLY those partitions of the stored view (static
+  *      partition filter, ScanAudit-measured in MaintainedAggSpec);
   *   3. merges slice + deltas with one partial-agg-friendly union
   *      (groups whose count hits zero drop out — the group-deletion
   *      case), and rewrites ONLY the touched partitions (a staged

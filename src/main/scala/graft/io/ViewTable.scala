@@ -213,7 +213,7 @@ object ViewTable {
 
   private def deltaDir(live: String): String = s"$live/$DeltasDir"
 
-  def hasDeltas(spark: SparkSession, live: String): Boolean = {
+  private[io] def hasDeltas(spark: SparkSession, live: String): Boolean = {
     val d = new Path(deltaDir(live))
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(d) && fs.listStatus(d).nonEmpty

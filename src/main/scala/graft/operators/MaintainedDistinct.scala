@@ -183,9 +183,10 @@ object MaintainedDistinct {
   // ---- streaming ingest: per-batch register-delta partitions ----
   //
   // The shared delta protocol ([[graft.io.ViewTable.writeDelta]]),
-  // made SAFER by the sketch's algebra: because the register merge is IDEMPOTENT (max), even a delta that
-  // somehow folded twice could not corrupt the distinct registers —
-  // only the row counts need the exactly-once marks, same as sums.
+  // made SAFER by the sketch's algebra: because the register merge is
+  // IDEMPOTENT (max), even a delta that somehow folded twice could not
+  // corrupt the distinct registers — only the row counts need the
+  // exactly-once marks, same as sums.
 
   /** One micro-batch's delta write: `added` rows carry
     * (groupCols ++ keyCol); the per-group register block + row count

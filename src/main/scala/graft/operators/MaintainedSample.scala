@@ -41,9 +41,9 @@ import graft.io.ViewTable
   *     needs its next-smallest rank, and only the facts know it.
   *
   * Same [[graft.io.ViewTable]] layout, exactly-once refresh commit
-  * and delta protocol as its three siblings; refresh ≡ full re-sketch is the oracle
-  * (q_incr_quantile, the q_sketch_lifecycle SQL replayed over the new
-  * snapshot). Serving composes with the sketch toolkit unchanged:
+  * and delta protocol as its three siblings; refresh ≡ full
+  * re-sketch is the oracle (q_incr_quantile, the q_sketch_lifecycle
+  * SQL replayed over the new snapshot). Serving composes with the sketch toolkit unchanged:
   * [[Sketches.sketchQuantiles]] for percentile estimates,
   * [[Sketches.sketchKsDrift]] for drift between two stored samples.
   *
@@ -250,8 +250,8 @@ object MaintainedSample {
 
   // ---- streaming ingest: per-batch sample-delta partitions ----
   //
-  // The shared delta protocol ([[graft.io.ViewTable.writeDelta]]), and like the
-  // distinct view's registers the sample's algebra makes it SAFER
+  // The shared delta protocol ([[graft.io.ViewTable.writeDelta]]), and
+  // like the distinct view's registers the sample's algebra makes it SAFER
   // than the sum view: the canonicalized merge is a set union +
   // keep-bottom-m — associative AND idempotent — so even a delta
   // folded twice yields the same sample. The batch-id marks exist for
