@@ -80,16 +80,16 @@ object MaintainedAgg {
       col(countCol).cast("long").as(countCol): _*)
   }
 
-  /** Merged sums per group; groups whose count is not positive drop
-    * out (the group-deletion case).
+  /** Merged sums per `keys` group; groups whose count is not positive
+    * drop out (the group-deletion case).
     */
-  private def sumGroups(rows: DataFrame, groupCols: Seq[String],
+  private def sumGroups(rows: DataFrame, keys: Seq[String],
                         measureCols: Seq[String],
                         countCol: String): DataFrame = {
     val mAggs = measureCols.map(m =>
       sum(col(m)).cast(MeasureType).as(m)) :+
       sum(col(countCol)).as(countCol)
-    rows.groupBy(groupCols.map(col): _*)
+    rows.groupBy(keys.map(col): _*)
       .agg(mAggs.head, mAggs.tail: _*)
       .filter(col(countCol) > 0)
   }
@@ -131,7 +131,7 @@ object MaintainedAgg {
                          removed: DataFrame, added: DataFrame,
                          groupCols: Seq[String], measureCols: Seq[String],
                          countCol: String, batchId: Option[Long]): Unit =
-    ViewTable.refresh(spark, rootPath, batchId, groupCols) {
+    ViewTable.refresh(spark, rootPath, batchId) {
       def contrib(df: DataFrame, w: Int): DataFrame =
         df.select(groupCols.map(col) ++
           measureCols.map(m =>
@@ -147,9 +147,8 @@ object MaintainedAgg {
         .localCheckpoint() // feeds the part list AND the merge once
       val parts = keyed.select("agg_part").distinct()
         .collect().map(_.getInt(0)).toSeq
-      ViewTable.Batch(parts, slice => sumGroups(
-        slice.unionByName(keyed.drop("agg_part")), groupCols, measureCols,
-        countCol))
+      ViewTable.Batch(parts, slice => sumGroups(slice.unionByName(keyed),
+        groupCols :+ "agg_part", measureCols, countCol))
     }
 
   // ---- MIN/MAX maintained aggregates ----
@@ -207,7 +206,7 @@ object MaintainedAgg {
                          groupCols: Seq[String], valueCols: Seq[String],
                          countCol: String, batchId: Long)
                         (recompute: DataFrame => DataFrame): Unit =
-    ViewTable.refresh(spark, rootPath, Some(batchId), groupCols) {
+    ViewTable.refresh(spark, rootPath, Some(batchId)) {
       def side(df: DataFrame, w: Int) =
         df.select(groupCols.map(col) ++
           valueCols.map(v => col(v).cast(MeasureType).as(v)) :+
@@ -227,7 +226,8 @@ object MaintainedAgg {
         batchAgg.select(groupCols.map(col): _*), groupCols)
         .select("agg_part").distinct().collect().map(_.getInt(0)).toSeq
       ViewTable.Batch(parts, { slice =>
-        val joined = slice.join(batchAgg, groupCols, "full_outer")
+        val joined = slice.drop("agg_part")
+          .join(batchAgg, groupCols, "full_outer")
           .localCheckpoint() // feeds carry, clean, dirty — one evaluation
         val viewCols = minMaxViewCols(groupCols, valueCols, countCol)
         val untouchedInPart = col("__an").isNull && col("__rn").isNull
@@ -259,7 +259,8 @@ object MaintainedAgg {
           if (dirty.isEmpty) clean.limit(0)
           else recompute(dirty.frame).groupBy(groupCols.map(col): _*)
             .agg(a.head, a.tail: _*)
-        carry.unionByName(clean).unionByName(dirtyAgg)
+        ViewTable.withAggPart(
+          carry.unionByName(clean).unionByName(dirtyAgg), groupCols)
       })
     }
 

@@ -98,9 +98,9 @@ object ViewTable {
 
   /** One view's CDC batch against the live table: the touched
     * `agg_part` values, and the merge that turns the touched slice
-    * (the stored rows of those parts, layout column dropped) into
-    * their complete new content (no layout column either). A touched
-    * part the merge leaves no rows in is deleted.
+    * (the stored rows of those parts, `agg_part` included) into their
+    * complete new content, `agg_part` included. A touched part the
+    * merge leaves no rows in is deleted.
     */
   final case class Batch(parts: Seq[Int], merge: DataFrame => DataFrame)
 
@@ -143,8 +143,8 @@ object ViewTable {
     * run applies the batch again; unattended at-least-once ingest
     * belongs on the delta path.
     */
-  def refresh(spark: SparkSession, root: String, batchId: Option[Long],
-              groupCols: Seq[String])(batch: => Batch): Unit = {
+  def refresh(spark: SparkSession, root: String, batchId: Option[Long])
+             (batch: => Batch): Unit = {
     val live = GenTable.live(spark, root)
     PartCommit.recover(spark, live)
     val applied = PartCommit.lastApplied(spark, live)
@@ -158,9 +158,8 @@ object ViewTable {
       PartCommit.markApplied(spark, live, id)
       return
     }
-    val slice = readKeyed(spark, live)
-      .filter(col("agg_part").isin(b.parts: _*)).drop("agg_part")
-    val merged = withAggPart(b.merge(slice), groupCols)
+    val merged = b.merge(
+      readKeyed(spark, live).filter(col("agg_part").isin(b.parts: _*)))
     // the staged write reads the live slice files and writes OUTSIDE
     // the visible tree, so no materialization barrier is needed; the
     // merge shuffled on the group, so re-align on agg_part to stage

@@ -136,7 +136,7 @@ object MaintainedDistinct {
     // pending streaming deltas are refused by the kernel: a register
     // max cannot subtract, so a delete whose key also lives in an
     // unfolded delta would be resurrected on read
-    ViewTable.refresh(spark, rootPath, Some(batchId), groupCols) {
+    ViewTable.refresh(spark, rootPath, Some(batchId)) {
       val aAgg = regsOf(added, groupCols, keyCol, "__aregs", "__an")
       val rAgg = regsOf(removed, groupCols, keyCol, "__rregs", "__rn")
       val batch = aAgg.join(rAgg, groupCols, "full_outer")
@@ -145,7 +145,8 @@ object MaintainedDistinct {
         batch.select(groupCols.map(col): _*), groupCols)
         .select("agg_part").distinct().collect().map(_.getInt(0)).toSeq
       ViewTable.Batch(parts, { slice =>
-        val joined = slice.join(batch, groupCols, "full_outer")
+        val joined = slice.drop("agg_part")
+          .join(batch, groupCols, "full_outer")
           .localCheckpoint() // feeds carry, clean, dirty — one evaluation
         val untouchedInPart = col("__an").isNull && col("__rn").isNull
         val viewCols = groupCols ++ Seq("regs", nCol)
@@ -176,7 +177,8 @@ object MaintainedDistinct {
           if (dirty.isEmpty) clean.limit(0)
           else regsOf(recompute(dirty.frame), groupCols, keyCol, "regs",
             nCol)
-        carry.unionByName(clean).unionByName(dirtyAgg)
+        ViewTable.withAggPart(
+          carry.unionByName(clean).unionByName(dirtyAgg), groupCols)
       })
     }
 

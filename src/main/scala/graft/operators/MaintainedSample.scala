@@ -181,7 +181,7 @@ object MaintainedSample {
     // pending streaming deltas are refused by the kernel: the
     // merge-on-read is a SET UNION, so a delete of a key that also
     // lives in an unfolded delta would be resurrected on read
-    ViewTable.refresh(spark, rootPath, Some(batchId), Seq(groupCol)) {
+    ViewTable.refresh(spark, rootPath, Some(batchId)) {
       // row-level (group, key) removal set — batch-bounded but NOT
       // broadcast (a CDC delete wave can be arbitrarily large; the
       // member-hit join below shuffles, AQE picks the strategy)
@@ -199,7 +199,7 @@ object MaintainedSample {
       val parts = bg.rows.map(_.getAs[Int]("agg_part")).distinct.toSeq
       val batchGroups = bg.frame.drop("agg_part")
       ViewTable.Batch(parts, { touchedSlice =>
-        val slice = touchedSlice
+        val slice = touchedSlice.drop("agg_part")
           .localCheckpoint() // feeds stats, carry and candidates once
         // per-group classification: member-hit removes (or an
         // under-full sample with ANY remove, or removes against a
@@ -242,9 +242,9 @@ object MaintainedSample {
           else sketchOf(recompute(dirty.frame), groupCol, keyCol,
             valueCol, m)
         val cols = viewCols(groupCol).map(col)
-        carry.select(cols: _*)
+        ViewTable.withAggPart(carry.select(cols: _*)
           .unionByName(cleanFold.select(cols: _*))
-          .unionByName(dirtySk.select(cols: _*))
+          .unionByName(dirtySk.select(cols: _*)), Seq(groupCol))
       })
     }
 
