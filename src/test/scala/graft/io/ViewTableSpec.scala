@@ -1,12 +1,8 @@
 package graft.io
 
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DecimalType, StructType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.SparkSpec
 import graft.operators.{MaintainedDistinct, MaintainedSample}
@@ -16,10 +12,7 @@ import graft.operators.{MaintainedDistinct, MaintainedSample}
   * tree after bootstrap, refresh(1), a streaming delta write (where
   * the view has one) and compaction, on an atomic-rename filesystem
   * (flat table) and on the non-atomic `simfs://` shim (generation
-  * root). Part-file names are masked (they carry a write uuid); `.crc`
-  * checksum side files are dropped (a local-filesystem artifact); the
-  * `_applied` / `_folded` / `_gen` marks render with their value and
-  * `_schema` with its fields (`?` = nullable).
+  * root), rendered by [[TableTree]].
   */
 class ViewTableSpec extends SparkSpec {
   import spark.implicits._
@@ -36,42 +29,6 @@ class ViewTableSpec extends SparkSpec {
       .createTempDirectory("graft_vtspec_").toString + "/view"
   }
 
-  private val PartFile =
-    """part-\d{5}-[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}[.-]c\d{3}"""
-
-  private def schemaOf(json: String): String =
-    DataType.fromJson(json).asInstanceOf[StructType].fields
-      .map(f => s"${f.name}:${f.dataType.simpleString}" +
-        (if (f.nullable) "?" else ""))
-      .mkString(",")
-
-  /** Sorted relative tree of the table at `root`: files and empty
-    * dirs (`dir/`), part names masked, marks and schema rendered.
-    */
-  private def tree(root: String): Seq[String] = {
-    val dir = Paths.get(new org.apache.hadoop.fs.Path(root).toUri.getPath)
-    // nothing may be left beside the table (swap stage/old dirs)
-    val siblings = Files.list(dir.getParent)
-    try assert(siblings.iterator().asScala.map(_.getFileName.toString)
-      .toSeq == Seq("view"), s"leftovers beside $root")
-    finally siblings.close()
-    val walk = Files.walk(dir)
-    try walk.iterator().asScala.filter(_ != dir)
-      .filter(p => !Files.isDirectory(p) || Files.list(p).count() == 0)
-      .map { p =>
-        val rel = dir.relativize(p).toString
-        val name = p.getFileName.toString
-        if (Files.isDirectory(p)) rel + "/"
-        else if (Set("_applied", "_folded", "_gen")(name))
-          s"$rel=${Files.readString(p).trim}"
-        else if (name == "_schema") s"$rel=${schemaOf(Files.readString(p))}"
-        else rel.replaceAll(PartFile, "part-*")
-      }
-      .filterNot(_.endsWith(".crc"))
-      .toSeq.distinct.sorted
-    finally walk.close()
-  }
-
   /** Run `steps` in order against a fresh table on `scheme`, checking
     * the tree after each one. Flat tables must match `flat` exactly;
     * generation-rooted ones must be the `_gen` pointer plus that same
@@ -86,7 +43,7 @@ class ViewTableSpec extends SparkSpec {
       val want =
         if (scheme == "file://") flat.sorted
         else (s"_gen=$gen" +: flat.map(s"g$gen/" + _)).sorted
-      val got = tree(path)
+      val got = TableTree(path)
       assert(got == want, s"$step on $scheme:\n" +
         got.map(s => s"  \"$s\"").mkString(",\n"))
     }
