@@ -11,9 +11,12 @@ import org.apache.spark.sql.SparkSession
   * retry can repair: re-merging a delta into an already-merged
   * partition double-counts it. [[StagedSwap]] solves this for
   * whole-table rewrites; this is the partition-granular sibling for
-  * maintenance ops ([[MaintainedAgg.deltaRefresh]],
-  * [[MaintainedComponents]]) whose whole point is NOT rewriting the
-  * untouched 63/64ths of a 100 TB view.
+  * the agg_part views' CDC refresh ([[ViewTable.refresh]], the one
+  * [[replaceParts]] caller), whose whole point is NOT rewriting the
+  * untouched 63/64ths of a 100 TB view. The component-label store
+  * ([[graft.operators.MaintainedComponents]]) commits relabel
+  * overlays ([[Overlays]]) instead and keeps only the `_applied` mark
+  * and the [[recover]] of a crashed commit from here.
   *
   * Protocol (all mutation of live partitions happens in step 3):
   *
@@ -39,7 +42,7 @@ import org.apache.spark.sql.SparkSession
   * marker (nothing was applied — recompute from the intact table) or
   * finds the marker and completes the apply phase verbatim. The one
   * caller obligation is to [[recover]] BEFORE reading the table to
-  * compute a new batch (both [[MaintainedAgg]] entry points do), so a
+  * compute a new batch ([[ViewTable.refresh]] does), so a
   * predecessor's half-applied refresh is finished first.
   *
   * Single-writer assumption throughout, as every maintenance op in

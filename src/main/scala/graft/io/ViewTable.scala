@@ -82,19 +82,8 @@ object ViewTable {
   def read(spark: SparkSession, root: String): DataFrame = {
     val live = GenTable.live(spark, root)
     PartCommit.recover(spark, live)
-    readKeyed(spark, live).drop("agg_part")
+    SchemaFile.read(spark, live).drop("agg_part")
   }
-
-  /** Schema-pinned read including the layout column: total on a
-    * fully-emptied view (zero parquet files → empty frame, not a
-    * schema-inference error). Falls back to inference for tables
-    * written before the schema file existed.
-    */
-  private def readKeyed(spark: SparkSession, dir: String): DataFrame =
-    SchemaFile.read(spark, dir) match {
-      case Some(s) => spark.read.schema(s).parquet(dir)
-      case None    => spark.read.parquet(dir)
-    }
 
   /** One view's CDC batch against the live table: the touched
     * `agg_part` values, and the merge that turns the touched slice
@@ -159,7 +148,7 @@ object ViewTable {
       return
     }
     val merged = b.merge(
-      readKeyed(spark, live).filter(col("agg_part").isin(b.parts: _*)))
+      SchemaFile.read(spark, live).filter(col("agg_part").isin(b.parts: _*)))
     // the staged write reads the live slice files and writes OUTSIDE
     // the visible tree, so no materialization barrier is needed; the
     // merge shuffled on the group, so re-align on agg_part to stage

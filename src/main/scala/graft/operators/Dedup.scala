@@ -880,11 +880,11 @@ object Dedup {
   // "touched-partition rewrite" degenerates to a full-table rewrite
   // (~1.2 TB of signatures at the 100 TB corpus): O(corpus) per
   // forget. The deferred path is O(batch): the delete lands as a
-  // TOMBSTONE id list under `_tombstones/batch_id=<id>` (underscore
-  // dir — invisible to base-table scans), committed by one `_done`
-  // marker ([[graft.io.AtomicIo.publishFile]] — all-or-nothing on
-  // both backend worlds); readers apply committed tombstones with an
-  // anti-join, and [[compactSignatures]] folds them into the base.
+  // TOMBSTONE id list under `_tombstones/batch_id=<id>-<fingerprint>`,
+  // one batch of the [[graft.io.Overlays]] log (one parquet file,
+  // committed by its `_done` marker); readers apply committed
+  // tombstones with an anti-join, and [[compactSignatures]] folds
+  // them into the base.
   //
   // Contract: tombstone bulk is bounded by deletes-since-compaction
   // (compact before it rivals the table); single-writer per table,
@@ -902,26 +902,17 @@ object Dedup {
   // [[graft.io.ViewTable]] delta protocol is NOT reused here: delta
   // batches are additive FOLD VALUES whose exactly-once hangs on a
   // monotone `_folded` high-water mark (an era assumption), whereas
-  // an id-set's natural key is its content.
+  // an id-set's natural key is its content — so the tombstones take
+  // the [[graft.io.Overlays]] log, whose batch key is the caller's.
 
-  private val TombstoneDir = "_tombstones"
-
-  private def committedTombstonePaths(spark: SparkSession,
-                                      live: String): Seq[String] = {
-    val d = new org.apache.hadoop.fs.Path(s"$live/$TombstoneDir")
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).filter(_.isDirectory).map(_.getPath)
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_done")))
-      .map(_.toString).toSeq
-  }
+  private val Tombstones = graft.io.Overlays("_tombstones")
 
   /** The union of committed tombstone batches' ids (one column, named
     * as written), or None when no tombstones are pending.
     */
   private def pendingTombstoneIds(spark: SparkSession,
                                   live: String): Option[DataFrame] = {
-    val paths = committedTombstonePaths(spark, live)
+    val paths = Tombstones.committed(spark, live).map(_._2)
     if (paths.isEmpty) None
     else {
       val ts = spark.read.parquet(paths: _*)
@@ -953,11 +944,13 @@ object Dedup {
     * the base with [[compactSignatures]].
     *
     * MAY COMPACT: once the committed tombstone batches reach the
-    * auto-compaction bound, this call runs [[compactSignatures]]
-    * itself. That replaces the table (a new generation on gen-rooted
-    * tables, a staged swap on flat ones), so a DataFrame a caller
-    * opened on the table before this call can lose its files — re-read
-    * after any forget, do not hold readers across it.
+    * auto-compaction bound ([[graft.io.Overlays.foldIfDue]]), this
+    * call runs [[compactSignatures]] itself — a committed replay
+    * included, so replaying a batch whose fold crashed finishes it.
+    * That replaces the table (a new generation on gen-rooted tables,
+    * a staged swap on flat ones), so a DataFrame a caller opened on
+    * the table before this call can lose its files — re-read after
+    * any forget, do not hold readers across it.
     */
   def deleteSignaturesDeferred(spark: SparkSession, rootPath: String,
                                ids: DataFrame, idCol: String,
@@ -970,33 +963,24 @@ object Dedup {
     val fp = del
       .agg(expr(s"bit_xor(xxhash64(CAST(`$idCol` AS STRING)))"))
       .head.get(0) match { case null => 0L; case v => v.asInstanceOf[Long] }
-    val dir = s"$live/$TombstoneDir/batch_id=$batchId-${java.lang.Long.toHexString(fp)}"
-    val done = new org.apache.hadoop.fs.Path(dir, "_done")
-    val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(done)) return // committed replay: exactly-once no-op
-    // one table, one id column: a second name would silently null out
-    // under the multi-dir read's first-file schema — fail loudly
-    pendingTombstoneIds(spark, live).foreach { ts =>
-      require(ts.columns.head == idCol,
-        s"deleteSignaturesDeferred: tombstones at $live/$TombstoneDir " +
-          s"were written with id column '${ts.columns.head}', got '$idCol'")
+    val key = s"$batchId-${java.lang.Long.toHexString(fp)}"
+    // a committed replay publishes nothing (exactly-once no-op)
+    if (!Tombstones.isCommitted(spark, live, key)) {
+      // one table, one id column: a second name would silently null
+      // out under the multi-dir read's first-file schema — fail loudly
+      pendingTombstoneIds(spark, live).foreach { ts =>
+        require(ts.columns.head == idCol,
+          s"deleteSignaturesDeferred: tombstones at $live/" +
+            s"${Tombstones.dir} were written with id column " +
+            s"'${ts.columns.head}', got '$idCol'")
+      }
+      Tombstones.publish(spark, live, key, batchId)(del)
     }
-    // batch-bounded by contract → one small file, not SigParts shards
-    del.coalesce(1).write.mode("overwrite").parquet(dir)
-    graft.io.AtomicIo.publishFile(fs, done,
-      batchId.toString.getBytes("UTF-8"))
-    // self-triggering compaction — the cadence is code, not a caller
-    // contract (same seam, same bound as the relabel overlays in
-    // [[MaintainedComponents]]): past the threshold the per-read
-    // anti-join tax keeps growing and the "delete-batch-bounded"
-    // assumption behind the merge-on-read shape erodes. The fold runs
-    // AFTER this batch's `_done` (the commit point), so a crash
-    // mid-fold leaves a fully-committed tombstone that the next
-    // maintenance op (or explicit [[compactSignatures]]) folds; the
-    // count check is one directory listing, no Spark job.
-    if (committedTombstonePaths(spark, live).size >=
-        MaintainedComponents.autoCompactPendingBatches(spark))
-      compactSignatures(spark, rootPath)
+    // self-triggering compaction, after the commit point and on a
+    // committed replay too: past the bound the per-read anti-join tax
+    // keeps growing and the "delete-batch-bounded" assumption behind
+    // the merge-on-read shape erodes
+    Tombstones.foldIfDue(spark, live)(compactSignatures(spark, rootPath))
   }
 
   /** Point/subset read of a maintained signature table: the

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
-import graft.io.{PartCommit, SchemaFile}
+import graft.io.{Overlays, PartCommit, SchemaFile}
 
 /** The STORED component-label lifecycle — the disk-resident twin of
   * [[Dedup.mergeComponents]]/[[Dedup.forgetDocs]], which take the
@@ -184,10 +184,9 @@ object MaintainedComponents {
   // (4.8 s), and partition-count increases cannot fix it (touched
   // parts = min(#components, CompParts)). Same shape, same cure as the
   // signature tombstones: each batch appends its (touched-component
-  // mask, relabeled rows) as ONE small overlay dir under `_relabels`
-  // (underscore dir — invisible to base scans), committed by one
-  // `_done` marker ([[graft.io.AtomicIo.publishFile]] — all-or-nothing
-  // on both backend worlds). Readers apply committed overlays in
+  // mask, relabeled rows) as ONE small overlay dir under `_relabels`,
+  // committed and auto-folded through the same [[graft.io.Overlays]]
+  // log as the tombstones. Readers apply committed overlays in
   // BATCH-ID ORDER (mask the touched components, union the relabeled
   // rows); [[compactLabels]] folds them into the base and rebuilds the
   // bloom sidecars in the same atomic swap.
@@ -203,34 +202,14 @@ object MaintainedComponents {
   // when an era reset is already a contract violation for ordered
   // state). Crash windows: the overlay publishes (invisible until
   // `_done`), then `_done` (the commit point), then `_applied`
-  // advances; a replay from any window finds either no committed
-  // overlay (recompute — deterministic, the read excludes the
-  // uncommitted dir) or the committed overlay (skip straight to the
-  // mark). The bloom sidecars stay BASE-only: an id that lives only in
-  // an overlay is found by the overlay union, so a probe can never
-  // false-negative on it.
+  // advances, then the fold runs if due; a replay from any window
+  // finds either no committed overlay (recompute — deterministic, the
+  // read excludes the uncommitted dir) or the committed overlay (skip
+  // straight to the mark), and folds if due. The bloom sidecars stay
+  // BASE-only: an id that lives only in an overlay is found by the
+  // overlay union, so a probe can never false-negative on it.
 
-  private val RelabelDir = "_relabels"
-
-  /** Pending-batch bound past which merge/forget fold their own
-    * overlays ([[compactLabels]]) before returning — the compaction
-    * cadence is CODE, not a caller contract: without it a long-running
-    * ingest that never compacts degrades every read by one broadcast
-    * anti-join + union per pending batch and, past the broadcast
-    * threshold, quietly breaks the "batch-bounded ⇒ broadcastable"
-    * assumption in [[applyRelabels]]. 8 bounds the read tax at ≤8
-    * batch-sized joins while amortizing each fold (one table write)
-    * over 8 O(batch) maintenance ops; production tables with larger
-    * batch-to-table ratios can lower it (`spark.graft
-    * .autoCompactPendingBatches`), streams with tiny batches raise it.
-    * Shared with the signature tombstones ([[Dedup
-    * .deleteSignaturesDeferred]]) — the same merge-on-read seam.
-    */
-  private[operators] def autoCompactPendingBatches(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.autoCompactPendingBatches", "8").toInt
-
-  private def relabelBatchDir(live: String, batchId: Long): Path =
-    new Path(s"$live/$RelabelDir", s"batch_id=$batchId")
+  private val Relabels = Overlays("_relabels")
 
   /** Committed overlay dirs in ascending batch order. Fails loudly on
     * a duplicated batch id — two committed dirs for one id would make
@@ -239,18 +218,10 @@ object MaintainedComponents {
     */
   private def committedRelabels(spark: SparkSession,
                                 live: String): Seq[(Long, String)] = {
-    val d = new Path(s"$live/$RelabelDir")
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(d)) return Seq.empty
-    val dirs = fs.listStatus(d).filter(_.isDirectory)
-      .filter(st => fs.exists(new Path(st.getPath, "_done")))
-      .map { st =>
-        val id = st.getPath.getName.stripPrefix("batch_id=").toLong
-        id -> st.getPath.toString
-      }.toSeq.sortBy(_._1)
+    val dirs = Relabels.committed(spark, live)
     require(dirs.map(_._1).distinct.size == dirs.size,
-      s"relabel overlays at $live/$RelabelDir carry duplicated batch " +
-        s"ids — apply order is ambiguous: ${dirs.map(_._1)}")
+      s"relabel overlays at $live/${Relabels.dir} carry duplicated " +
+        s"batch ids — apply order is ambiguous: ${dirs.map(_._1)}")
     dirs
   }
 
@@ -279,37 +250,6 @@ object MaintainedComponents {
     folded.select(base.columns.map(col): _*)
   }
 
-  /** Publish one batch's (touched mask, relabeled rows) as a committed
-    * overlay — O(batch) regardless of how many partitions the touched
-    * components hash into. Null-id rows encode the mask (a fully-
-    * forgotten component has no relabeled row to learn it from).
-    */
-  private def appendRelabel(spark: SparkSession, live: String,
-                            idCol: String, batchId: Long,
-                            touched: DataFrame,
-                            relabeled: DataFrame): Unit = {
-    val idType = relabeled.schema(idCol).dataType
-    val payload = touched
-      .select(lit(null).cast(idType).as(idCol), col("component"))
-      .unionByName(relabeled.select(col(idCol), col("component")))
-    val dir = relabelBatchDir(live, batchId)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // batch-bounded by contract → one small file, like the tombstones
-    payload.coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    graft.io.AtomicIo.publishFile(fs, new Path(dir, "_done"),
-      batchId.toString.getBytes("UTF-8"))
-  }
-
-  /** Has `batchId`'s overlay already committed? (The crash window
-    * between its `_done` and the `_applied` advance — the replay must
-    * not recompute against a state that already contains the overlay.)
-    */
-  private def relabelCommitted(spark: SparkSession, live: String,
-                               batchId: Long): Boolean = {
-    val done = new Path(relabelBatchDir(live, batchId), "_done")
-    done.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(done)
-  }
-
   /** Fold pending relabel overlays into the base table, rebuilding the
     * schema file and bloom sidecars in the SAME atomic swap (gen-
     * pointer flip on object-store backends, staged rename swap on
@@ -322,11 +262,10 @@ object MaintainedComponents {
     val live0 = graft.io.GenTable.live(spark, rootPath)
     if (committedRelabels(spark, live0).isEmpty) return
     val applied = PartCommit.lastApplied(spark, live0)
-    val idCol = readKeyed(spark, live0).columns
-      .filterNot(c => c == "component" || c == "comp_part").head
+    val idCol = idColOf(spark, live0)
     def fold(stage: String): Unit = {
       val state = applyRelabels(spark, live0,
-        readKeyed(spark, live0).drop("comp_part"), idCol)(identity)
+        SchemaFile.read(spark, live0).drop("comp_part"), idCol)(identity)
       val keyed = withCompPart(state)
       keyed.repartition(CompParts, col("comp_part"))
         .write.mode("overwrite").partitionBy("comp_part").parquet(stage)
@@ -343,17 +282,17 @@ object MaintainedComponents {
   def read(spark: SparkSession, rootPath: String): DataFrame = {
     val path = graft.io.GenTable.live(spark, rootPath)
     PartCommit.recover(spark, path)
-    val idCol = readKeyed(spark, path).columns
-      .filterNot(c => c == "component" || c == "comp_part").head
+    val idCol = idColOf(spark, path)
     applyRelabels(spark, path,
-      readKeyed(spark, path).drop("comp_part"), idCol)(identity)
+      SchemaFile.read(spark, path).drop("comp_part"), idCol)(identity)
   }
 
-  private def readKeyed(spark: SparkSession, path: String): DataFrame =
-    SchemaFile.read(spark, path) match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None    => spark.read.parquet(path)
-    }
+  /** The id column of the stored labeling at `live`: its one column
+    * besides `component` and the layout column.
+    */
+  private def idColOf(spark: SparkSession, live: String): String =
+    SchemaFile.read(spark, live).columns
+      .filterNot(c => c == "component" || c == "comp_part").head
 
   /** id→label probe, bloom-pruned: the batch ids (batch-bounded by
     * contract — the same bound that lets them broadcast) are tested
@@ -376,7 +315,7 @@ object MaintainedComponents {
       if (!fs.exists(new Path(path))) Array.empty[org.apache.hadoop.fs.FileStatus]
       else fs.listStatus(new Path(path))
         .filter(_.getPath.getName.startsWith("comp_part="))
-    val keyed = readKeyed(spark, path)
+    val keyed = SchemaFile.read(spark, path)
     val probe =
       if (partDirs.isEmpty) keyed
       else {
@@ -425,13 +364,13 @@ object MaintainedComponents {
     val path = graft.io.GenTable.live(spark, rootPath)
     val keyed = withCompPart(components.select("component").distinct())
       .localCheckpoint() // feeds the part list AND the semi-join once
-    val idCol = readKeyed(spark, path).columns
-      .filterNot(c => c == "component" || c == "comp_part").head
+    val idCol = idColOf(spark, path)
     val parts = keyed.select("comp_part").distinct()
       .collect().map(_.getInt(0)).toSeq
     val base =
-      if (parts.isEmpty) readKeyed(spark, path).limit(0).drop("comp_part")
-      else readKeyed(spark, path)
+      if (parts.isEmpty) SchemaFile.read(spark, path).limit(0)
+        .drop("comp_part")
+      else SchemaFile.read(spark, path)
         .filter(col("comp_part").isin(parts: _*))
         .join(broadcast(keyed), Seq("comp_part", "component"), "left_semi")
         .drop("comp_part")
@@ -446,40 +385,38 @@ object MaintainedComponents {
   /** Merge a batch's near-dup edges (batch–batch and batch–corpus,
     * either orientation) plus its vertices into the stored labeling.
     * Semantics ≡ [[Dedup.mergeComponents]] over the stored table;
-    * cost: one label-table scan (probe) + touched/CompParts read +
-    * batch-sized closure + touched-partition rewrite.
+    * cost: one bloom-pruned id→label probe + touched/CompParts read +
+    * batch-sized closure + one O(batch) relabel overlay.
     */
   def merge(spark: SparkSession, rootPath: String, newEdges: DataFrame,
-            newVertices: DataFrame, idCol: String, batchId: Long): Unit = {
-    val path = graft.io.GenTable.live(spark, rootPath)
-    PartCommit.recover(spark, path)
-    if (batchId <= PartCommit.lastApplied(spark, path)) return
-    if (relabelCommitted(spark, path, batchId)) {
-      // crashed between the overlay's `_done` and the applied mark:
-      // the state already contains this batch — recomputing against
-      // it would derive a DIFFERENT overlay for the same id
-      PartCommit.markApplied(spark, path, batchId)
-      return
+            newVertices: DataFrame, idCol: String, batchId: Long): Unit =
+    maintain(spark, rootPath, batchId) { path =>
+      commitRelabel(spark, path, idCol, batchId) {
+        val edges = newEdges.select(col("id_a"), col("id_b"))
+          .localCheckpoint()
+        val verts = newVertices.select(col(idCol)).distinct()
+          .localCheckpoint()
+        val probeIds = edges
+          .select(explode(array(col("id_a"), col("id_b"))).as(idCol))
+          .union(verts.select(col(idCol)))
+          .distinct()
+        // one probe serves the touched set AND the fresh-vertex anti-join
+        val probed = labelsFor(spark, path, probeIds, idCol)
+          .localCheckpoint()
+        val touched = probed.select("component").distinct()
+          .localCheckpoint()
+        val touchedLabels = membersOf(spark, path, touched)
+          .localCheckpoint()
+        val starEdges = touchedLabels.filter(col(idCol) =!= col("component"))
+          .select(col(idCol).as("id_a"), col("component").as("id_b"))
+        val freshVerts = verts.join(probed.select(idCol), Seq(idCol),
+          "left_anti")
+        val subVerts = touchedLabels.select(idCol).union(freshVerts)
+          .distinct()
+        (touched, Dedup.connectedComponents(starEdges.union(edges),
+          subVerts, idCol))
+      }
     }
-    val edges = newEdges.select(col("id_a"), col("id_b")).localCheckpoint()
-    val verts = newVertices.select(col(idCol)).distinct().localCheckpoint()
-    val probeIds = edges
-      .select(explode(array(col("id_a"), col("id_b"))).as(idCol))
-      .union(verts.select(col(idCol)))
-      .distinct()
-    // one probe serves the touched set AND the fresh-vertex anti-join
-    val probed = labelsFor(spark, path, probeIds, idCol).localCheckpoint()
-    val touched = probed.select("component").distinct().localCheckpoint()
-    val touchedLabels = membersOf(spark, path, touched).localCheckpoint()
-    val starEdges = touchedLabels.filter(col(idCol) =!= col("component"))
-      .select(col(idCol).as("id_a"), col("component").as("id_b"))
-    val freshVerts = verts.join(probed.select(idCol), Seq(idCol), "left_anti")
-    val subVerts = touchedLabels.select(idCol).union(freshVerts).distinct()
-    val sub = Dedup.connectedComponents(starEdges.union(edges), subVerts,
-      idCol)
-    commitRelabel(spark, path, idCol, batchId, touched, sub)
-    maybeAutoCompact(spark, rootPath)
-  }
 
   /** Forget documents: drop them from the labeling and repair the
     * components they leave (deletes can SPLIT — the stars are not
@@ -505,103 +442,107 @@ object MaintainedComponents {
     */
   def forget(spark: SparkSession, rootPath: String, sigPath: String,
              deleteIds: DataFrame, idCol: String, batchId: Long,
-             threshold: Double = 0.5): Unit = {
+             threshold: Double = 0.5): Unit =
+    maintain(spark, rootPath, batchId) { path =>
+      val del = deleteIds.select(col(idCol)).distinct().localCheckpoint()
+      // sig-store tombstone first (survivor reads below anti-join it,
+      // and survivors are disjoint from `del` by construction); the
+      // tombstone is content-keyed and idempotent, so re-publishing it
+      // on an overlay-committed replay is safe
+      Dedup.deleteSignaturesDeferred(spark, sigPath, del, idCol, batchId)
+      commitRelabel(spark, path, idCol, batchId) {
+        val touched = labelsFor(spark, path, del, idCol)
+          .select("component").distinct().localCheckpoint()
+        val touchedLabels = membersOf(spark, path, touched)
+          .localCheckpoint()
+        // survivors WITH their old component label: the label both
+        // classifies repair work and keys the within-component band join
+        val survivorsC = touchedLabels.join(del, Seq(idCol), "left_anti")
+          .localCheckpoint()
+        // A component with ≤1 survivor cannot split further: its
+        // survivor relabels to itself (the closure's min-id convention
+        // over a singleton), no signature fetch, no band join, no
+        // closure. In a near-dup corpus most clusters are pairs and
+        // most touched components land here, so the expensive path
+        // below runs over the few MULTI-survivor components only
+        // (measured: the r14 verdict's forget-vs-merge gap came almost
+        // entirely from banding+closure over survivors that could
+        // never split).
+        val multiComps = survivorsC.groupBy(col("component"))
+          .agg(count(lit(1L)).as("__n")).filter(col("__n") >= 2)
+          .select("component")
+        val multiSurv = survivorsC.join(multiComps, Seq("component"),
+          "left_semi").localCheckpoint()
+        val singleLabels = survivorsC.join(multiComps, Seq("component"),
+          "left_anti").select(col(idCol), col(idCol).as("component"))
+        // survivor signatures: partition-pruned fetch over the MULTI
+        // survivors only, materialized once (they feed the band join
+        // AND the scoring join — the incrementalDedup caller contract)
+        val survSigs = Dedup.readSignaturesFor(spark, sigPath,
+            multiSurv.select(idCol), idCol)
+          .join(multiSurv, Seq(idCol))
+          .localCheckpoint()
+        // deletes can only SPLIT components (no new edge appears), so
+        // candidate pairs need only be sought WITHIN each old component
+        // — exact under the labeling's banded-closure invariant
+        // ([[Dedup.lshCandidatePairsWithin]] states the argument)
+        val pairs = Dedup.estimatedJaccard(
+          Dedup.lshCandidatePairsWithin(survSigs, idCol, "component"),
+          survSigs.drop("component"), idCol)
+          .filter(col("est_jaccard") >= threshold)
+          .select("id_a", "id_b")
+        val repaired = Dedup.connectedComponents(pairs,
+          multiSurv.select(idCol), idCol)
+        (touched, repaired.select(col(idCol), col("component"))
+          .unionByName(singleLabels))
+      }
+    }
+
+  /** One maintenance batch under the table's exactly-once gate:
+    * recover a predecessor's crashed legacy PartCommit, skip a batch
+    * at or below the applied mark, else run `apply` on the live dir;
+    * then fold the overlays if due ([[graft.io.Overlays.foldIfDue]]) —
+    * on a replay too, so replaying a batch whose fold crashed finishes
+    * the fold. The fold is content-preserving and atomic (gen flip /
+    * staged swap) and carries the applied mark, so a crash mid-fold
+    * leaves a fully-committed batch plus pending overlays.
+    */
+  private def maintain(spark: SparkSession, rootPath: String,
+                       batchId: Long)(apply: String => Unit): Unit = {
     val path = graft.io.GenTable.live(spark, rootPath)
     PartCommit.recover(spark, path)
-    if (batchId <= PartCommit.lastApplied(spark, path)) return
-    val del = deleteIds.select(col(idCol)).distinct().localCheckpoint()
-    // sig-store tombstone first (survivor reads below anti-join it,
-    // and survivors are disjoint from `del` by construction); the
-    // tombstone is content-keyed and idempotent, so re-publishing it
-    // on an overlay-committed replay is safe
-    Dedup.deleteSignaturesDeferred(spark, sigPath, del, idCol, batchId)
-    if (relabelCommitted(spark, path, batchId)) {
-      // crashed between the label overlay's `_done` and the applied
-      // mark — see the merge twin
-      PartCommit.markApplied(spark, path, batchId)
-      return
-    }
-    val touched = labelsFor(spark, path, del, idCol)
-      .select("component").distinct().localCheckpoint()
-    val touchedLabels = membersOf(spark, path, touched).localCheckpoint()
-    // survivors WITH their old component label: the label both
-    // classifies repair work and keys the within-component band join
-    val survivorsC = touchedLabels.join(del, Seq(idCol), "left_anti")
-      .localCheckpoint()
-    // A component with ≤1 survivor cannot split further: its survivor
-    // relabels to itself (the closure's min-id convention over a
-    // singleton), no signature fetch, no band join, no closure. In a
-    // near-dup corpus most clusters are pairs and most touched
-    // components land here, so the expensive path below runs over the
-    // few MULTI-survivor components only (measured: the r14 verdict's
-    // forget-vs-merge gap came almost entirely from banding+closure
-    // over survivors that could never split).
-    val multiComps = survivorsC.groupBy(col("component"))
-      .agg(count(lit(1L)).as("__n")).filter(col("__n") >= 2)
-      .select("component")
-    val multiSurv = survivorsC.join(multiComps, Seq("component"),
-      "left_semi").localCheckpoint()
-    val singleLabels = survivorsC.join(multiComps, Seq("component"),
-      "left_anti").select(col(idCol), col(idCol).as("component"))
-    // survivor signatures: partition-pruned fetch over the MULTI
-    // survivors only, materialized once (they feed the band join AND
-    // the scoring join — the incrementalDedup caller contract)
-    val survSigs = Dedup.readSignaturesFor(spark, sigPath,
-        multiSurv.select(idCol), idCol)
-      .join(multiSurv, Seq(idCol))
-      .localCheckpoint()
-    // deletes can only SPLIT components (no new edge appears), so
-    // candidate pairs need only be sought WITHIN each old component —
-    // exact under the labeling's banded-closure invariant
-    // ([[Dedup.lshCandidatePairsWithin]] states the argument)
-    val pairs = Dedup.estimatedJaccard(
-      Dedup.lshCandidatePairsWithin(survSigs, idCol, "component"),
-      survSigs.drop("component"), idCol)
-      .filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b")
-    val repaired = Dedup.connectedComponents(pairs,
-      multiSurv.select(idCol), idCol)
-    commitRelabel(spark, path, idCol, batchId, touched,
-      repaired.select(col(idCol), col("component"))
-        .unionByName(singleLabels))
-    maybeAutoCompact(spark, rootPath)
+    if (batchId > PartCommit.lastApplied(spark, path)) apply(path)
+    Relabels.foldIfDue(spark, path)(compactLabels(spark, rootPath))
   }
 
   /** Commit one batch's label maintenance: publish the (touched mask,
-    * relabeled rows) overlay, then advance the applied mark. O(batch)
-    * regardless of how many comp_parts the touched components hash
-    * into — the rewrite this replaces degenerated to a full-table
-    * write past ~CompParts touched components (the measured frontier).
-    * The empty batch (nothing touched, nothing relabeled) skips the
-    * overlay and only marks.
+    * relabeled rows) overlay `relabel` derives, then advance the
+    * applied mark. O(batch) regardless of how many comp_parts the
+    * touched components hash into — the rewrite this replaces
+    * degenerated to a full-table write past ~CompParts touched
+    * components (the measured frontier). The empty batch (nothing
+    * touched, nothing relabeled) skips the overlay and only marks.
+    * When the overlay already committed (a crash between its `_done`
+    * and the mark) only the mark advances: recomputing against a
+    * state that already contains the overlay would derive a DIFFERENT
+    * overlay for the same id.
     */
   private def commitRelabel(spark: SparkSession, path: String,
-                            idCol: String, batchId: Long,
-                            touched: DataFrame,
-                            relabeled: DataFrame): Unit = {
-    val rel = relabeled.select(col(idCol), col("component"))
-      .localCheckpoint()
-    if (touched.isEmpty && rel.isEmpty) {
-      PartCommit.markApplied(spark, path, batchId)
-      return
+                            idCol: String, batchId: Long)
+                           (relabel: => (DataFrame, DataFrame)): Unit = {
+    if (!Relabels.isCommitted(spark, path, batchId.toString)) {
+      val (touched, relabeled) = relabel
+      val rel = relabeled.select(col(idCol), col("component"))
+        .localCheckpoint()
+      if (!(touched.isEmpty && rel.isEmpty)) {
+        // null-id rows encode the mask (a fully-forgotten component
+        // has no relabeled row to learn it from)
+        val idType = rel.schema(idCol).dataType
+        Relabels.publish(spark, path, batchId.toString, batchId)(touched
+          .select(lit(null).cast(idType).as(idCol), col("component"))
+          .unionByName(rel))
+      }
     }
-    appendRelabel(spark, path, idCol, batchId, touched, rel)
     PartCommit.markApplied(spark, path, batchId)
-  }
-
-  /** Self-triggering compaction: fold when the pending overlay count
-    * reaches the bound. Runs AFTER the batch's applied mark, so a
-    * crash mid-fold leaves a fully-committed batch plus pending
-    * overlays — the next maintenance op (or an explicit
-    * [[compactLabels]]) simply folds them then; no replay ambiguity,
-    * the fold is content-preserving and atomic (gen flip / staged
-    * swap). The count check is one directory listing, no Spark job.
-    */
-  private def maybeAutoCompact(spark: SparkSession,
-                               rootPath: String): Unit = {
-    val live = graft.io.GenTable.live(spark, rootPath)
-    if (committedRelabels(spark, live).size >=
-        autoCompactPendingBatches(spark))
-      compactLabels(spark, rootPath)
   }
 }

@@ -250,7 +250,7 @@ object DedupQueries {
     // Dedup.mergeComponents alone against the DuckDB closure, with
     // the stored state as an in-memory stand-in, so a regression here
     // isolates to the star-contraction algebra; q_comp_lifecycle runs
-    // the same merge THROUGH the parquet store + PartCommit, so a
+    // the same merge THROUGH the parquet store + relabel overlay, so a
     // regression there that this query doesn't show isolates to the
     // storage/commit layer. The bench pair also prices the storage
     // layer's overhead as (lifecycle − operator) per round. The
@@ -312,8 +312,8 @@ object DedupQueries {
     // keep their state in-memory as the operator-identity stand-ins;
     // this is the real thing): base labels + signatures persisted as
     // hash-partitioned parquet, one ingest batch MERGED through the
-    // stored table (partition-pruned member expansion, touched-
-    // partition rewrite under PartCommit), the batch sigs appended,
+    // stored table (partition-pruned member expansion, one committed
+    // relabel overlay — io/Overlays), the batch sigs appended,
     // then a forget batch REPAIRED from the stored signature table —
     // final labeling read back from disk must equal the full closure
     // over the surviving corpus (merge∘forget ≡ recompute)

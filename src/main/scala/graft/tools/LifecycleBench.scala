@@ -184,6 +184,11 @@ object LifecycleBench {
       MaintainedComponents.read(spark, labelPath)
         .queryExecution.toRdd.count()
     }
+    // the read-side price of the tombstones the forgets left pending
+    // (those past the auto-compaction bound are already folded)
+    once("sig_serve") {
+      Dedup.readSignatures(spark, sigPath).queryExecution.toRdd.count()
+    }
     // the deferred cost the tombstone forgets accumulate: one periodic
     // fold absorbs all N rounds' tombstones (honest amortized pricing
     // — the eager delete this replaced paid a comparable rewrite EVERY
@@ -191,22 +196,13 @@ object LifecycleBench {
     once("sig_compact_after_forgets") {
       Dedup.compactSignatures(spark, sigPath)
     }
-    // label-overlay fold pricing (the r15 relabel overlay). Reflection
-    // guard: the interleaved A/B runs this tool against OLDER jars
-    // whose MaintainedComponents lacks compactLabels — the untaken
-    // branch keeps the call site unresolved there, so A legs simply
-    // omit these rows instead of dying on linkage.
-    val hasCompactLabels = scala.util.Try(
-      MaintainedComponents.getClass.getMethod("compactLabels",
-        classOf[SparkSession], classOf[String])).isSuccess
-    if (hasCompactLabels) {
-      once("label_compact_after_ops") {
-        MaintainedComponents.compactLabels(spark, labelPath)
-      }
-      once("comp_serve_folded") {
-        MaintainedComponents.read(spark, labelPath)
-          .queryExecution.toRdd.count()
-      }
+    // label-overlay fold pricing (the r15 relabel overlay)
+    once("label_compact_after_ops") {
+      MaintainedComponents.compactLabels(spark, labelPath)
+    }
+    once("comp_serve_folded") {
+      MaintainedComponents.read(spark, labelPath)
+        .queryExecution.toRdd.count()
     }
 
     // ---- PQ index ----

@@ -306,13 +306,15 @@ class ObjectStoreCommitSpec extends SparkSpec {
     SimFs.disarm()
   }
 
-  test("forget crash matrix: labels AND signatures jointly converge " +
-      "at every window") {
-    // the window the eager ordering left open: sig delete LAST meant a
-    // crash after the label rewrite's apply mark made the replay no-op
-    // before ever touching the signature table — forgotten docs' stale
-    // signatures then band-joined future batches through a ghost. The
-    // tombstone-first ordering must land BOTH stores from any window.
+  /** Seed a label store and a signature table at `root`, forget docs
+    * 1 and 10 as batch 1 with a crash injected at every in-scope
+    * mutation in turn, replay the same batch id unattended, and check
+    * both stores after each window. `bound` sets the auto-compaction
+    * bound for the forget and its replay; at 1 the tombstone commit
+    * and the relabel commit each fold their store, and nothing may be
+    * left pending. Returns the number of crashed windows.
+    */
+  private def forgetMatrix(bound: Option[Int]): Int = {
     import graft.operators.{Dedup, MaintainedComponents}
     val t1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val t2 = "one two three four five six seven eight nine ten eleven"
@@ -330,9 +332,18 @@ class ObjectStoreCommitSpec extends SparkSpec {
         Dedup.connectedComponents(pairs, docs.select("doc_id"), "doc_id"),
         "doc_id", root + "/labels")
     }
-    def forgetOnce(root: String): Unit =
-      MaintainedComponents.forget(spark, root + "/labels", root + "/sigs",
-        Seq(1L, 10L).toDF("doc_id"), "doc_id", batchId = 1L)
+    def forgetOnce(root: String): Unit = {
+      bound.foreach(b =>
+        spark.conf.set("spark.graft.autoCompactPendingBatches", b.toString))
+      try MaintainedComponents.forget(spark, root + "/labels",
+        root + "/sigs", Seq(1L, 10L).toDF("doc_id"), "doc_id", batchId = 1L)
+      finally spark.conf.unset("spark.graft.autoCompactPendingBatches")
+    }
+    def pending(table: String, dir: String): Seq[String] = {
+      val d = new org.apache.hadoop.fs.Path(GenTable.live(spark, table), dir)
+      val fs = d.getFileSystem(hconf)
+      if (!fs.exists(d)) Nil else fs.listStatus(d).map(_.getPath.getName).toSeq
+    }
     val renames0 = SimFs.renamesInScope.get()
     var k = 1L
     var uncrashed = false
@@ -356,6 +367,11 @@ class ObjectStoreCommitSpec extends SparkSpec {
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(sigIds == Set(2L, 3L, 11L),
         s"window #$k signature store diverged: $sigIds")
+      if (bound.contains(1)) {
+        val left = pending(root + "/labels", "_relabels") ++
+          pending(root + "/sigs", "_tombstones")
+        assert(left.isEmpty, s"window #$k left batches pending: $left")
+      }
       // folding the tombstones lands the same state physically
       Dedup.compactSignatures(spark, root + "/sigs")
       val folded = Dedup.readSignatures(spark, root + "/sigs")
@@ -368,14 +384,37 @@ class ObjectStoreCommitSpec extends SparkSpec {
       k += 1
     }
     assert(uncrashed, "matrix never ran past the last mutation (raise the cap)")
+    assert(SimFs.renamesInScope.get() == renames0,
+      "the forget protocol must never rename in scope")
+    windows
+  }
+
+  test("forget crash matrix: labels AND signatures jointly converge " +
+      "at every window") {
+    // the window the eager ordering left open: sig delete LAST meant a
+    // crash after the label rewrite's apply mark made the replay no-op
+    // before ever touching the signature table — forgotten docs' stale
+    // signatures then band-joined future batches through a ghost. The
+    // tombstone-first ordering must land BOTH stores from any window.
+    val windows = forgetMatrix(bound = None)
     // the relabel-overlay protocol has exactly 5 in-scope mutations
     // (tombstone parquet commit, tombstone `_done`, overlay parquet
     // commit, overlay `_done`, `_applied` mark) — down from the
     // replaced PartCommit rewrite's ≥6, which is the O(batch) win
     // measured in op count; the floor keeps the matrix probative
     assert(windows >= 5, s"too few crash windows exercised: $windows")
-    assert(SimFs.renamesInScope.get() == renames0,
-      "the forget protocol must never rename in scope")
+  }
+
+  test("auto-fold crash matrix: both folds of a forget converge and " +
+      "leave nothing pending at every window") {
+    // bound 1: the tombstone commit folds the signature table and the
+    // relabel commit folds the label store, so the windows include
+    // every mutation of both generation swaps; a replay of the same
+    // batch id must finish a crashed fold, not leave it pending
+    val windows = forgetMatrix(bound = Some(1))
+    // the 5 windows of the fold-free protocol plus the mutations of
+    // two generation swaps (17 in all today)
+    assert(windows >= 10, s"too few crash windows exercised: $windows")
   }
 
   test("StagedSwap crash matrix: old-or-new at every window; retry lands new") {

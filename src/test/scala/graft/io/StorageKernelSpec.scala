@@ -8,9 +8,10 @@ import scala.util.matching.Regex
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One place per storage decision: the generation-root-or-flat and
-  * pointer-flip-or-rename choices live only in [[GenTable]], and the
+  * pointer-flip-or-rename choices live only in [[GenTable]], the
   * agg_part views' delta directory, touched-partition commit and
-  * dirty-key driver hop only in [[ViewTable]].
+  * dirty-key driver hop only in [[ViewTable]], and the overlay batch
+  * commit marker and auto-compaction bound only in [[Overlays]].
   */
 class StorageKernelSpec extends AnyFunSuite {
 
@@ -49,5 +50,11 @@ class StorageKernelSpec extends AnyFunSuite {
       Seq("\"_deltas\"".r, """replaceParts\([^)]*"agg_part"""".r,
         """createDataFrame\(\s*java\.util\.Arrays\.asList""".r))
     assert(bad.isEmpty, s"agg_part view storage outside ViewTable: $bad")
+  }
+
+  test("only Overlays owns the _done marker and the auto-compaction bound") {
+    val bad = offenders("io/Overlays.scala",
+      Seq("\"_done\"".r, """spark\.graft\.autoCompactPendingBatches""".r))
+    assert(bad.isEmpty, s"overlay commit or bound outside Overlays: $bad")
   }
 }
