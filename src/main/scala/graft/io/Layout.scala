@@ -120,7 +120,7 @@ object Layout {
     * ~`targetBytes`-sized files (append-heavy tables accumulate one
     * file per write — at 100 TB the resulting listing/open overhead
     * dominates scans long before data volume does). Swap semantics:
-    * [[StagedSwap]].
+    * [[GenTable.replace]].
     */
   def compactDir(spark: org.apache.spark.sql.SparkSession, path: String,
                  targetBytes: Long = 128L * 1024 * 1024): Unit = {
@@ -129,7 +129,7 @@ object Layout {
     val fs = target.getFileSystem(conf)
     val totalBytes = fs.getContentSummary(target).getLength
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    StagedSwap.swap(spark, path) { stage =>
+    GenTable.replace(spark, path) { stage =>
       spark.read.parquet(path)
         .repartition(nFiles)
         .write.mode("overwrite").parquet(stage)

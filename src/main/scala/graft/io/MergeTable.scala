@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   *   - `deleteCol` true         → REMOVE the base row, insert nothing
   *     (NULL flag = not deleted, like SQL `WHEN MATCHED AND <cond>`)
   *
-  * The rewrite is staged-then-swap via [[StagedSwap]] — see there for
-  * the reader-visibility and crash-recovery contract.
+  * The rewrite is staged-then-swap via [[GenTable.replace]] — see
+  * [[StagedSwap]] for the reader-visibility and crash-recovery
+  * contract.
   *
   * Scale shape: one left_anti join of base against the update KEYS
   * (shuffle carries the keys, not the update payloads) plus a union —
@@ -55,7 +56,7 @@ object MergeTable {
       upserts.write.mode("overwrite").parquet(path)
       return
     }
-    StagedSwap.swap(spark, path) { stage =>
+    GenTable.replace(spark, path) { stage =>
       spark.read.parquet(path)
         .join(touchedKeys, keyCols, "left_anti")
         .unionByName(upserts)

@@ -3,9 +3,12 @@ package graft.io
 import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.Path
 
-/** The ONE staged-rewrite swap used by every file-level table
-  * maintenance op ([[MergeTable.merge]], [[Layout.compactDir]],
-  * [[graft.operators.Dedup.compactSignatures]]): materialize the
+/** The staged-rewrite swap of a FLAT (not generation-rooted) table,
+  * reached only through [[GenTable.replace]] — the one whole-table
+  * replace every file-level maintenance op calls
+  * ([[MergeTable.merge]], [[Layout.compactDir]], the signature and
+  * label compactions, the vector-index rebuild); [[MergeTable]] also
+  * runs [[recover]] before its existence check. Materialize the
   * replacement at `path__stage` while the live table stays readable
   * (parquet can't overwrite a path it is lazily reading), then swap by
   * RENAMES — move the live table aside to `path__old`, move staging
@@ -22,7 +25,7 @@ import org.apache.hadoop.fs.Path
   * throughout; reach for Iceberg/Delta when concurrent writers or a
   * zero-gap reader contract are required.
   */
-object StagedSwap {
+private[io] object StagedSwap {
 
   /** Replace the table at `path` with whatever `write` materializes at
     * the staging path it is handed. `write` must fully produce the new

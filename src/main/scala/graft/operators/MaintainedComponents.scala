@@ -287,6 +287,17 @@ object MaintainedComponents {
       SchemaFile.read(spark, path).drop("comp_part"), idCol)(identity)
   }
 
+  /** The batch id the next [[merge]]/[[forget]] should carry: the
+    * applied mark + 1, read after crash recovery. For callers whose own
+    * batch ids cannot key the store, such as streams that share it or
+    * restart their ids at 0 on a fresh checkpoint.
+    */
+  def nextBatchId(spark: SparkSession, rootPath: String): Long = {
+    val path = graft.io.GenTable.live(spark, rootPath)
+    PartCommit.recover(spark, path)
+    PartCommit.lastApplied(spark, path) + 1
+  }
+
   /** The id column of the stored labeling at `live`: its one column
     * besides `component` and the layout column.
     */
@@ -425,8 +436,8 @@ object MaintainedComponents {
     * sig_part-PRUNED point read). Also removes the ids from the
     * signature table, keeping the two stores consistent — as an
     * O(batch) DEFERRED tombstone ([[Dedup.deleteSignaturesDeferred]]),
-    * not the eager rewrite: a mixed forget batch hashes into every
-    * sig_part, so the eager path rewrites the whole signature table
+    * not an eager rewrite: a mixed forget batch hashes into every
+    * sig_part, so an eager delete rewrites the whole signature table
     * (O(corpus) at 100 TB); the tombstone is one small file + marker,
     * folded at the next [[Dedup.compactSignatures]].
     *

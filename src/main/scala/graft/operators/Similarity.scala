@@ -505,8 +505,8 @@ object Similarity {
     * piles into few cells, so probe pruning reads ever-larger slices).
     * The rebuild re-assigns every stored vector to the new centroids
     * and swaps the WHOLE index (centroids + cell-partitioned vectors)
-    * atomically ([[graft.io.StagedSwap]] — readers see the old index
-    * until the rename; a crash leaves old or new, never a mix of
+    * atomically ([[graft.io.GenTable.replace]] — readers see the old
+    * index until the swap; a crash leaves old or new, never a mix of
     * cells under mismatched centroids). Cost: one pass over the
     * stored vectors (broadcast-centroid argmin, the assign shape) +
     * one partitioned write — at 100 TB, schedule it like compaction,
@@ -522,7 +522,7 @@ object Similarity {
     val reassigned = routeVectors(
       readVectorIndex(spark, path).drop("cell"), idCol, vecCol, cents)
       .localCheckpoint()
-    graft.io.StagedSwap.swap(spark, path) { stage =>
+    graft.io.GenTable.replace(spark, path) { stage =>
       cents.write.parquet(s"$stage/centroids")
       reassigned.write.partitionBy("cell").parquet(s"$stage/vectors")
     }

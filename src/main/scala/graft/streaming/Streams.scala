@@ -563,36 +563,36 @@ object Streams {
     * lifecycle twin of [[signatureMaintainingIngest]]: between
     * micro-batches the corpus's near-dup clustering lives as two
     * stored tables, the MinHash signature table (candidate
-    * generation) and the (id, component) LABEL table. Each batch
+    * generation) and the component store at `labelPath`
+    * ([[graft.operators.MaintainedComponents]]). Each batch
     *   1. builds the batch's signatures;
     *   2. derives its near-dup edges — batch–corpus via an LSH cross
     *      join against the STORED signatures, batch–batch via the
     *      banded self-join (the corpus text is never re-read);
-    *   3. merges the edges into the STORED labels with
-    *      [[graft.operators.Dedup.mergeComponents]] — closure cost ∝
-    *      batch + touched component stars, never the corpus — and
-    *      swaps the label table atomically
-    *      ([[graft.io.StagedSwap]]: readers see old or new, never a
-    *      torn table; a crash mid-swap recovers);
+    *   3. bootstraps the store from the batch's closure
+    *      ([[graft.operators.MaintainedComponents.write]]) when none
+    *      exists, else merges the edges into it
+    *      ([[graft.operators.MaintainedComponents.merge]] — cost ∝
+    *      batch + touched components, one O(batch) relabel overlay);
     *   4. appends the batch's signatures.
     * Unlike the dedup ingest no document is dropped: this maintains
     * the labeling OF every ingested doc — canonical-doc selection,
     * leakage-safe splits ([[graft.operators.Curation
     * .leakageSafeSplit]]) and cluster caps all read it between
-    * batches.
+    * batches, through [[graft.operators.MaintainedComponents.read]].
     *
     * Stream ≡ batch: by the star-contraction identity applied
-    * inductively over batches, the final label table equals the
+    * inductively over batches, the stored labeling equals the
     * full-corpus closure REGARDLESS of how docs are batched
     * (spec-pinned, including a different batch order).
     *
-    * Exactly-once caveat (same shape as [[signatureMaintainingIngest]],
-    * opposite benignity): the label swap and the signature append are
-    * not one atomic commit. The swap runs FIRST — labels merged twice
-    * (a replay after a crash between the steps) are a no-op
-    * (mergeComponents is idempotent on already-labeled ids), while a
-    * replayed signature append only duplicates signature rows, which
-    * candidate-DISTINCT absorbs; compaction removes the dead weight.
+    * Store batch ids: each merge carries the store's own next id
+    * ([[graft.operators.MaintainedComponents.nextBatchId]]), never the
+    * micro-batch id — the forget driver shares the store, and a fresh
+    * checkpoint restarts micro-batch ids at 0. Labels commit before
+    * the signatures: a micro-batch replayed after a crash between the
+    * two re-merges its edges under the store's next id, a no-op on
+    * the labels (merge is idempotent on labeled ids), then appends.
     */
   def componentMaintainingIngest(docs: DataFrame, idCol: String,
                                  textCol: String, sigPath: String,
@@ -600,20 +600,17 @@ object Streams {
                                  options: Map[String, String] = Map.empty,
                                  k: Int = 3, threshold: Double = 0.5)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, MaintainedComponents}
     docs.writeStream
       .outputMode("append")
       .options(options)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
-        val conf = spark.sparkContext.hadoopConfiguration
-        val sigP = new org.apache.hadoop.fs.Path(sigPath)
-        val fs = sigP.getFileSystem(conf)
         val b = batch.localCheckpoint()
         // streaming can fire an empty batch (e.g. at start) — a no-op
         // here, and skipping it keeps bootstrap tied to REAL data
         if (!b.isEmpty) {
-          val bootstrap = !fs.exists(sigP)
+          val bootstrap = !exists(spark, sigPath)
           val newSigs = Dedup.minhashSignatures(
             Dedup.docShingles(b, idCol, textCol, k, dedup = false), idCol)
             .localCheckpoint()
@@ -631,26 +628,16 @@ object Streams {
                 .select("id_a", "id_b")
                 .unionByName(intra)
             }
-          // label-table existence is decided AFTER crash recovery, and
-          // independently of the signature bootstrap — the two steps
-          // are not atomic, so a crash can leave one table a batch
-          // ahead of the other
-          graft.io.StagedSwap.recover(spark, labelPath)
-          val labelP = new org.apache.hadoop.fs.Path(labelPath)
-          val haveLabels = labelP.getFileSystem(conf).exists(labelP)
-          val labels =
-            if (haveLabels) spark.read.parquet(labelPath)
-            else b.select(col(idCol), col(idCol).as("component")).limit(0)
-          val merged = Dedup.mergeComponents(labels, edges,
-            b.select(col(idCol)), idCol)
-          // the swap's staged write materializes `merged` while the
-          // old label table is still intact, THEN renames — no
-          // read-your-own-overwrite hazard; first batch writes direct
-          // (swap's move-aside needs an existing table)
-          if (haveLabels)
-            graft.io.StagedSwap.swap(spark, labelPath)(tmp =>
-              merged.write.parquet(tmp))
-          else merged.write.parquet(labelPath)
+          val verts = b.select(col(idCol))
+          // store existence is decided independently of the signature
+          // bootstrap: a crash between the two steps leaves the store
+          // a batch ahead of the signatures
+          if (!exists(spark, labelPath))
+            MaintainedComponents.write(
+              Dedup.connectedComponents(edges, verts, idCol), idCol,
+              labelPath)
+          else MaintainedComponents.merge(spark, labelPath, edges, verts,
+            idCol, MaintainedComponents.nextBatchId(spark, labelPath))
           if (bootstrap) Dedup.writeSignatures(newSigs, idCol, sigPath)
           else Dedup.appendSignatures(newSigs, idCol, sigPath)
         }
@@ -661,59 +648,43 @@ object Streams {
   /** Streaming deletion propagation — the right-to-be-forgotten twin
     * of [[componentMaintainingIngest]]: each micro-batch of delete
     * requests (rows of `idCol`) is applied to the SAME stored state
-    * that ingest maintains — the component labels are repaired via
-    * [[graft.operators.Dedup.forgetDocs]] (signature-derived edges, so
-    * bridge deletions SPLIT components correctly) and the deleted ids'
-    * signatures are removed as an O(batch) merge-on-read tombstone
-    * ([[graft.operators.Dedup.deleteSignaturesDeferred]], keyed by the
-    * micro-batch id — a mixed delete batch hashes into every
-    * sig_part, so the eager rewrite this replaces was O(corpus); the
-    * tombstones fold at the next
-    * [[graft.operators.Dedup.compactSignatures]]).
-    *
-    * Signatures tombstone first, labels swap second: the two steps
-    * are not atomic (the componentMaintainingIngest caveat), but both
-    * are idempotent under the micro-batch id — a replayed committed
-    * tombstone no-ops, and forgetting an id already gone from labels
-    * touches no component — so at-least-once batch re-delivery
-    * converges to the same state, with no window where the labels
-    * dropped a doc whose stale signature could still band-join a
-    * future batch. Missing tables (nothing ingested yet) make the
-    * batch a no-op. Tombstone batch dirs are keyed by (batch id,
-    * CONTENT fingerprint), so even a replaced checkpoint whose batch
-    * ids restart from 0 cannot collide a new delete into an old
-    * batch's `_done` — the new-era delete lands as its own tombstone.
+    * that ingest maintains, through
+    * [[graft.operators.MaintainedComponents.forget]]: the deleted ids'
+    * signatures are tombstoned first (an O(batch) merge-on-read
+    * overlay, folded at [[graft.operators.Dedup.compactSignatures]]),
+    * then the components they leave are repaired from the signatures
+    * (bridge deletions SPLIT components) and committed as one relabel
+    * overlay. Each batch carries the store's next id
+    * ([[graft.operators.MaintainedComponents.nextBatchId]]), as in the
+    * ingest driver. A replayed micro-batch re-applies under that id:
+    * its tombstone is content-keyed, and forgetting ids already gone
+    * from the labels touches no component, so re-delivery converges
+    * to the same state. Missing tables (nothing ingested yet) make
+    * the batch a no-op.
     */
   def forgetMaintainingIngest(deletes: DataFrame, idCol: String,
                               sigPath: String, labelPath: String,
                               options: Map[String, String] = Map.empty,
                               threshold: Double = 0.5)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Dedup
+    import graft.operators.MaintainedComponents
     deletes.writeStream
       .outputMode("append")
       .options(options)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
-        val conf = spark.sparkContext.hadoopConfiguration
-        val sigP = new org.apache.hadoop.fs.Path(sigPath)
-        val fs = sigP.getFileSystem(conf)
         val del = batch.select(col(idCol)).distinct().localCheckpoint()
-        graft.io.StagedSwap.recover(spark, labelPath)
-        val labelP = new org.apache.hadoop.fs.Path(labelPath)
-        if (!del.isEmpty && fs.exists(sigP) &&
-            labelP.getFileSystem(conf).exists(labelP)) {
-          Dedup.deleteSignaturesDeferred(spark, sigPath, del, idCol,
-            batchId)
-          val labels = spark.read.parquet(labelPath)
-          val sigs = Dedup.readSignatures(spark, sigPath)
-          val repaired = Dedup.forgetDocs(labels, sigs, del, idCol,
-            threshold)
-          graft.io.StagedSwap.swap(spark, labelPath)(tmp =>
-            repaired.write.parquet(tmp))
-        }
+        if (!del.isEmpty && exists(spark, sigPath) &&
+            exists(spark, labelPath))
+          MaintainedComponents.forget(spark, labelPath, sigPath, del, idCol,
+            MaintainedComponents.nextBatchId(spark, labelPath), threshold)
       }
       .start()
+  }
+
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Streaming distribution-drift monitor — the serving-time twin of

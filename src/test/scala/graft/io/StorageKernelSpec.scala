@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One place per storage decision: the generation-root-or-flat and
   * pointer-flip-or-rename choices live only in [[GenTable]], the
   * agg_part views' delta directory, touched-partition commit and
-  * dirty-key driver hop only in [[ViewTable]], and the overlay batch
-  * commit marker and auto-compaction bound only in [[Overlays]].
+  * dirty-key driver hop only in [[ViewTable]], the overlay batch
+  * commit marker and auto-compaction bound only in [[Overlays]], and
+  * the whole-table swap only behind [[GenTable.replace]].
   */
 class StorageKernelSpec extends AnyFunSuite {
 
@@ -56,5 +57,10 @@ class StorageKernelSpec extends AnyFunSuite {
     val bad = offenders("io/Overlays.scala",
       Seq("\"_done\"".r, """spark\.graft\.autoCompactPendingBatches""".r))
     assert(bad.isEmpty, s"overlay commit or bound outside Overlays: $bad")
+  }
+
+  test("only GenTable.replace runs the staged whole-table swap") {
+    val bad = offenders("io/GenTable.scala", Seq("""StagedSwap\.swap\(""".r))
+    assert(bad.isEmpty, s"StagedSwap.swap called outside GenTable: $bad")
   }
 }

@@ -369,7 +369,7 @@ class StreamsSpec extends SparkSpec {
         Map("checkpointLocation" -> s"$base/graft_cmi_ckpt_$tag"))
       try order.foreach { b => in.addData(b: _*); q.processAllAvailable() }
       finally q.stop()
-      spark.read.parquet(labelPath).collect()
+      graft.operators.MaintainedComponents.read(spark, labelPath).collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("component")))
         .sorted.toSeq
     }
@@ -380,6 +380,47 @@ class StreamsSpec extends SparkSpec {
       "stream ≠ batch for forward batching")
     assert(run(docs.reverse.grouped(50).toSeq) == full,
       "stream ≠ batch for reversed batching")
+  }
+
+  test("component-maintaining ingest across the auto-fold: store ≡ closure, ≤1 overlay pending") {
+    import graft.operators.{Dedup, MaintainedComponents}
+    implicit val sqlCtx = spark.sqlContext
+    val docs = graft.model.Tables.documents(spark, sf)
+      .select("doc_id", "text").as[(Long, String)]
+      .collect().toSeq.sortBy(_._1).take(120)
+    val full = {
+      val df = docs.toDF("doc_id", "text")
+      val pairs = Dedup.minhashNearDups(df, "doc_id", "text", 3,
+        threshold = 0.5).select("id_a", "id_b")
+      Dedup.connectedComponents(pairs, df.select("doc_id"), "doc_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    }
+    assert(full.exists(t => t._1 != t._2),
+      "fixture must contain at least one non-trivial cluster")
+    val tag = System.nanoTime()
+    val base = sys.props("java.io.tmpdir")
+    val labelPath = s"$base/graft_cmi_fold_lbl_$tag"
+    val in = MemoryStream[(Long, String)]
+    // bound 2: the store folds its relabel overlays at every second merge
+    spark.conf.set("spark.graft.autoCompactPendingBatches", "2")
+    try {
+      val q = Streams.componentMaintainingIngest(
+        in.toDF().toDF("doc_id", "text"), "doc_id", "text",
+        s"$base/graft_cmi_fold_sig_$tag", labelPath,
+        Map("checkpointLocation" -> s"$base/graft_cmi_fold_ckpt_$tag"))
+      // 4 micro-batches: one bootstrap write, then 3 merges — the
+      // second merge folds, the third leaves one overlay pending
+      try docs.grouped(30).foreach { b =>
+        in.addData(b: _*); q.processAllAvailable()
+      } finally q.stop()
+    } finally spark.conf.unset("spark.graft.autoCompactPendingBatches")
+    val got = MaintainedComponents.read(spark, labelPath).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("component")))
+      .sorted.toSeq
+    assert(got == full, "stream ≠ batch across the auto-fold")
+    val pending = graft.io.Overlays("_relabels")
+      .committed(spark, graft.io.GenTable.live(spark, labelPath))
+    assert(pending.size <= 1, s"overlays left pending: $pending")
   }
 
   test("row-local minhash signature is bit-identical to the batch form") {
@@ -1008,10 +1049,11 @@ class StreamsSpec extends SparkSpec {
     val labelPath = s"${sys.props("java.io.tmpdir")}/graft_forget_lab_$tag"
     val ckpt = s"${sys.props("java.io.tmpdir")}/graft_forget_ck_$tag"
     Dedup.writeSignatures(sigs, "doc_id", sigPath)
-    Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L), (20L, 20L))
-      .toDF("doc_id", "component").write.parquet(labelPath)
-    def labelsNow = spark.read.parquet(labelPath).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    graft.operators.MaintainedComponents.write(
+      Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L), (20L, 20L))
+        .toDF("doc_id", "component"), "doc_id", labelPath)
+    def labelsNow = graft.operators.MaintainedComponents.read(spark, labelPath)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val in = MemoryStream[Long]
     val q = Streams.forgetMaintainingIngest(
       in.toDF().toDF("doc_id"), "doc_id", sigPath, labelPath,
@@ -1067,8 +1109,8 @@ class StreamsSpec extends SparkSpec {
       (3L, doc("alpha"))))          // {1,3} near-dup, 2 alone
     runForget(Seq(1L))              // {3} relabels to 3
     runIngest(Seq((4L, doc("alpha")), (5L, doc("gamma")))) // 4 joins 3
-    val got = spark.read.parquet(labelPath).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = graft.operators.MaintainedComponents.read(spark, labelPath)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // reference: one-shot closure over exactly the surviving docs
     val surv = Seq((2L, doc("beta")), (3L, doc("alpha")),
       (4L, doc("alpha")), (5L, doc("gamma")))
