@@ -19,11 +19,6 @@ object Scalars {
       regexp_replace(regexp_replace(c, "(?U)[^\\w\\s-]", ""), "\\s+", "_"),
       1, maxLen)
 
-  /** X3 — the reference's run-date format (dd-MM-yyyy,
-    * steps/step1_scraper.py:31).
-    */
-  def runDate(): Column = date_format(current_date(), "dd-MM-yyyy")
-
   /** X5 — NaN→NULL normalization before sinks that treat NaN as a
     * value (steps/step6_upload_to_db.py:60). Spark distinguishes NaN
     * from null; JDBC/CSV sinks should see null.
@@ -37,12 +32,6 @@ object Scalars {
     */
   def pct(part: Column, total: Column, scale: Int = 2): Column =
     round(try_divide(part.cast("double"), total.cast("double")) * 100, scale)
-
-  /** X2 — prefix/suffix predicates are Column.startsWith/endsWith;
-    * re-exported here so the §2.7 surface is complete in one place.
-    */
-  def hasPrefix(c: Column, p: String): Column = c.startsWith(p)
-  def hasSuffix(c: Column, s: String): Column = c.endsWith(s)
 
   /** Deterministic keyed pseudonymization: salted SHA-256, first 16
     * hex chars — the privacy-pipeline primitive for sharing joinable

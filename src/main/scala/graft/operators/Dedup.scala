@@ -874,7 +874,7 @@ object Dedup {
 
   // ---- deferred (merge-on-read) signature deletion ----
   //
-  // [[deleteSignatures]] rewrites every hash partition the deleted ids
+  // An eager delete would rewrite every hash partition the deleted ids
   // can live in — but ids hash UNIFORMLY over sig_part, so any
   // realistically-mixed forget batch touches ALL partitions and the
   // "touched-partition rewrite" degenerates to a full-table rewrite
@@ -1010,61 +1010,13 @@ object Dedup {
         .drop("sig_part"))
   }
 
-  /** Remove ids from a maintained signature table — the deletion
-    * counterpart of [[appendSignatures]]. Rewrites ONLY the hash
-    * partitions the deleted ids can live in (their `sig_part` is
-    * recomputable reader-side, the [[readSignaturesFor]] trick):
-    * touched partitions' survivors are materialized FIRST
-    * (localCheckpoint — dynamic partition overwrite would otherwise
-    * read the very files it replaces), written back under dynamic
-    * partition-overwrite, and a partition whose every row was deleted
-    * is removed explicitly (an empty partition produces no output
-    * files, so the dynamic overwrite alone would leave it stale).
-    * Idempotent: re-deleting absent ids is a no-op rewrite.
-    *
-    * SCALE CAVEAT — prefer [[deleteSignaturesDeferred]] for forget
-    * batches: ids hash uniformly over sig_part, so a mixed batch
-    * touches ALL partitions and this eager path rewrites the whole
-    * table (O(corpus) per delete at 100 TB). The eager form remains
-    * for the skewed case (ids known to land in few partitions) and
-    * for callers that need their ids physically gone without a
-    * compaction. Composes with pending tombstones: rows they mask
-    * stay masked (reads apply tombstones regardless of which files a
-    * rewrite produced) until [[compactSignatures]] folds them.
-    */
-  def deleteSignatures(spark: SparkSession, rootPath: String,
-                       ids: DataFrame, idCol: String): Unit = {
-    val path = graft.io.GenTable.live(spark, rootPath)
-    val keyed = withSigPart(ids.select(col(idCol)).distinct(), idCol)
-      .localCheckpoint()
-    val parts = keyed.select("sig_part").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    if (parts.nonEmpty) {
-      val survivors = spark.read.parquet(path)
-        .filter(col("sig_part").isin(parts: _*))
-        .join(broadcast(keyed.select(idCol)), Seq(idCol), "left_anti")
-        .localCheckpoint()
-      val survivedParts = survivors.select("sig_part").distinct()
-        .collect().map(_.getInt(0)).toSet
-      if (survivedParts.nonEmpty)
-        survivors.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("sig_part").parquet(path)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      parts.filterNot(survivedParts).foreach { p =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/sig_part=$p"), true)
-      }
-    }
-  }
-
   /** Rewrite a signature table to one file per partition, collapsing
     * the per-append small files and FOLDING pending deferred-deletion
     * tombstones into the base (the staged/generation dir starts
     * tombstone-free, so the fold and the tombstone clear commit in
     * the same atomic swap — no window where a fold landed but its
     * tombstones still subtract). Swap semantics (reader visibility,
-    * crash recovery, single-writer): [[graft.io.StagedSwap]].
+    * crash recovery, single-writer): [[graft.io.GenTable.replace]].
     */
   def compactSignatures(spark: SparkSession, path: String): Unit = {
     val live = graft.io.GenTable.live(spark, path)

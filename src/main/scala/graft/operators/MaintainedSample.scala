@@ -158,11 +158,6 @@ object MaintainedSample {
   def read(spark: SparkSession, rootPath: String): DataFrame =
     ViewTable.read(spark, rootPath)
 
-  /** Percentile estimates served from the store. */
-  def readQuantiles(spark: SparkSession, path: String, groupCol: String,
-                    pcts: Seq[Int] = Seq(50, 90, 99)): DataFrame =
-    Sketches.sketchQuantiles(read(spark, path), groupCol, pcts)
-
   /** Apply a CDC batch. `removed`/`added` carry per-row
     * (groupCol, keyCol, valueCol) contributions. `recompute` receives
     * the distinct DIRTY group keys (batch-bounded, on the driver —

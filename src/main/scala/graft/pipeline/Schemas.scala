@@ -52,14 +52,6 @@ object Schemas {
 
   val valueColumn = "Value"
 
-  /** First present period column, probe order fixed. */
-  def findPeriodColumn(df: DataFrame): Option[String] =
-    periodColumns.find(df.columns.contains)
-
-  /** Label column for a given period column, variant probe order fixed. */
-  def findPeriodLabel(df: DataFrame, periodCol: String): Option[String] =
-    periodLabelVariants.getOrElse(periodCol, Nil).find(df.columns.contains)
-
   /** Station column: known list first, then fallback scan for any
     * other `DTI_`-prefixed column that isn't the period column
     * (mirrors steps/step4_filter_stations.py:42-66). `known` defaults
@@ -71,16 +63,4 @@ object Schemas {
                         known: Seq[String] = stationColumns): Option[String] =
     known.find(df.columns.contains).orElse(
       df.columns.find(c => c.startsWith("DTI_") && !periodColumns.contains(c)))
-
-  /** Station label = the non-DTI column right after the station code
-    * in header order, if any (INE convention: code, label adjacency).
-    */
-  def findStationLabel(df: DataFrame, stationCol: String): Option[String] = {
-    val idx = df.columns.indexOf(stationCol)
-    if (idx >= 0 && idx + 1 < df.columns.length) {
-      val cand = df.columns(idx + 1)
-      if (!cand.startsWith("DTI_") && cand != valueColumn &&
-        !flagColumns.contains(cand)) Some(cand) else None
-    } else None
-  }
 }
