@@ -2,6 +2,9 @@ package graft.io
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.json4s.{JArray, JLong, JObject, JString}
+import org.json4s.jackson.JsonMethods
 
 /** Minimal versioned table log: manifest-listed parquet snapshots with
   * time travel and vacuum — the single-writer slice of what
@@ -49,37 +52,36 @@ object Versioned {
       .sorted
   }
 
-  private def manifestFiles(spark: SparkSession, path: String,
-                            version: Long): Seq[String] = {
-    val f = fs(spark, path)
-    val p = new Path(manifestDir(path), f"v$version%05d.json")
-    val in = f.open(p)
-    val json = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
-    // manifest schema is ours and flat — a full JSON parser would be
-    // the only use of one in the engine; extract the files array
-    "\"([^\"]+\\.parquet)\"".r.findAllMatchIn(json).map(_.group(1)).toSeq
+  private def manifestPath(path: String, version: Long) =
+    new Path(manifestDir(path), f"v$version%05d.json")
+
+  /** A published manifest: its idempotence token, the snapshot's full
+    * file list and its commit-time schema (None only for pre-schema
+    * manifests, none of which are written anymore).
+    */
+  private case class Manifest(txn: Option[String], files: Seq[String],
+                              schema: Option[StructType])
+
+  private def manifest(spark: SparkSession, path: String,
+                       version: Long): Manifest = {
+    val in = fs(spark, path).open(manifestPath(path, version))
+    val json =
+      try JsonMethods.parse(new String(in.readAllBytes(), "UTF-8"))
+      finally in.close()
+    def str(field: String): Option[String] = json \ field match {
+      case JString(v) => Some(v)
+      case _          => None
+    }
+    Manifest(str("txn"),
+      (json \ "files").children.collect { case JString(f) => f },
+      str("schemaB64").map(b => DataType.fromJson(new String(
+        java.util.Base64.getDecoder.decode(b), "UTF-8"))
+        .asInstanceOf[StructType]))
   }
 
   /** Transaction ids already committed (for idempotent re-commits). */
-  def committedTxns(spark: SparkSession, path: String): Set[String] = {
-    val f = fs(spark, path)
-    versions(spark, path).flatMap { v =>
-      val p = new Path(manifestDir(path), f"v$v%05d.json")
-      val in = f.open(p)
-      val head = try {
-        val chunk = new Array[Byte](512) // txn field leads the manifest
-        val n = in.read(chunk)
-        new String(chunk, 0, n.max(0), "UTF-8")
-      } finally in.close()
-      "\"txn\":\"([^\"]*)\"".r.findFirstMatchIn(head).map(_.group(1))
-    }.toSet
-  }
+  def committedTxns(spark: SparkSession, path: String): Set[String] =
+    versions(spark, path).flatMap(manifest(spark, path, _).txn).toSet
 
   /** Commit `df` as the next version. `mode` is `overwrite` (snapshot
     * = this data only) or `append` (snapshot = previous + this).
@@ -95,7 +97,8 @@ object Versioned {
              mode: String = "overwrite",
              txn: Option[String] = None): Long = {
     require(mode == "overwrite" || mode == "append", s"bad mode $mode")
-    require(txn.forall(t => !t.contains("\"")), "txn token must be quote-free")
+    require(txn.forall(t => !t.contains("\"") && !t.contains("\\")),
+      "txn token must be free of quotes and backslashes")
     val f = fs(spark, path)
     if (txn.exists(committedTxns(spark, path).contains))
       versions(spark, path).last // replay: already durable, skip
@@ -128,12 +131,10 @@ object Versioned {
       s"batch publish rename failed for b$next")
     val newFiles = f.listStatus(batchDir).toSeq.map(_.getPath)
       .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
-    val carried =
-      if (mode == "append" && existing.nonEmpty)
-        manifestFiles(spark, path, existing.last)
-      else Seq.empty
-    val all = carried ++ newFiles
-    val txnField = txn.fold("")(t => s""""txn":"$t",""")
+    val prev =
+      if (mode == "append") existing.lastOption.map(manifest(spark, path, _))
+      else None
+    val all = prev.fold(Seq.empty[String])(_.files) ++ newFiles
     // snapshot schema: an APPEND's snapshot is carried + new files, so
     // its schema is the UNION of the previous version's schema and the
     // batch's — an appended column widens the snapshot (old files
@@ -141,33 +142,30 @@ object Versioned {
     // (batch files null-fill). Same-name fields must agree on type:
     // silently coercing would corrupt either side. Overwrites snapshot
     // exactly the batch schema.
-    val snapshotSchema =
-      if (mode == "append" && existing.nonEmpty)
-        manifestSchema(spark, path, existing.last) match {
-          case Some(prev) =>
-            val byName = df.schema.map(f => f.name -> f).toMap
-            prev.foreach { pf =>
-              byName.get(pf.name).foreach(nf =>
-                require(nf.dataType == pf.dataType,
-                  s"schema evolution type conflict on '${pf.name}': " +
-                    s"${pf.dataType} vs ${nf.dataType}"))
-            }
-            val prevNames = prev.fieldNames.toSet
-            org.apache.spark.sql.types.StructType(
-              prev.fields ++ df.schema.fields.filterNot(f =>
-                prevNames.contains(f.name)))
-          case None => df.schema
+    val snapshotSchema = prev.flatMap(_.schema) match {
+      case Some(old) =>
+        val byName = df.schema.map(f => f.name -> f).toMap
+        old.foreach { pf =>
+          byName.get(pf.name).foreach(nf =>
+            require(nf.dataType == pf.dataType,
+              s"schema evolution type conflict on '${pf.name}': " +
+                s"${pf.dataType} vs ${nf.dataType}"))
         }
-      else df.schema
+        val oldNames = old.fieldNames.toSet
+        StructType(old.fields ++ df.schema.fields.filterNot(f =>
+          oldNames.contains(f.name)))
+      case None => df.schema
+    }
     // persist the snapshot schema so an empty snapshot (0-partition
-    // commit) still reads back as a typed empty frame; base64 keeps the
-    // schema JSON's quotes/field names out of the regex-parsed manifest
+    // commit) still reads back as a typed empty frame; every published
+    // manifest carries it base64-encoded under `schemaB64`
     val schemaB64 = java.util.Base64.getEncoder.encodeToString(
       snapshotSchema.json.getBytes("UTF-8"))
-    val json = all.map(p => "\"" + p + "\"")
-      .mkString(
-        s"""{$txnField"version":$next,"mode":"$mode","schemaB64":"$schemaB64","files":[""",
-        ",", "]}")
+    val json = JsonMethods.compact(JsonMethods.render(JObject(
+      txn.map(t => "txn" -> JString(t)).toList ++ List(
+        "version" -> JLong(next), "mode" -> JString(mode),
+        "schemaB64" -> JString(schemaB64),
+        "files" -> JArray(all.map(JString(_)).toList)))))
     val mDir = manifestDir(path)
     f.mkdirs(mDir)
     // the publish point, all-or-nothing on every backend (tmp+rename
@@ -179,7 +177,7 @@ object Versioned {
     // partial b<next> that no manifest references and the replayed
     // commit deletes), because readers resolve files through the
     // MANIFEST, never by listing data/.
-    AtomicIo.publishFile(f, new Path(mDir, f"v$next%05d.json"),
+    AtomicIo.publishFile(f, manifestPath(path, next),
       json.getBytes("UTF-8"))
     next
   }
@@ -191,12 +189,13 @@ object Versioned {
     */
   def snapshot(spark: SparkSession, path: String,
                asOf: Option[Long] = None)
-      : (Seq[String], Option[org.apache.spark.sql.types.StructType]) = {
+      : (Seq[String], Option[StructType]) = {
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"no committed versions at $path")
     val v = asOf.getOrElse(vs.last)
     require(vs.contains(v), s"version $v not in $vs")
-    (manifestFiles(spark, path, v), manifestSchema(spark, path, v))
+    val m = manifest(spark, path, v)
+    (m.files, m.schema)
   }
 
   /** Read a snapshot: the latest version, or `asOf` for time travel. */
@@ -218,25 +217,6 @@ object Versioned {
     }
   }
 
-  private def manifestSchema(spark: SparkSession, path: String,
-                             version: Long): Option[org.apache.spark.sql.types.StructType] = {
-    val f = fs(spark, path)
-    val p = new Path(manifestDir(path), f"v$version%05d.json")
-    val in = f.open(p)
-    val json = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
-    "\"schemaB64\":\"([^\"]+)\"".r.findFirstMatchIn(json).map { m =>
-      org.apache.spark.sql.types.DataType.fromJson(new String(
-        java.util.Base64.getDecoder.decode(m.group(1)), "UTF-8"))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-    }
-  }
-
   /** Drop manifests older than the newest `keepLast` and delete data
     * files no kept manifest references. Returns deleted file count.
     */
@@ -245,11 +225,10 @@ object Versioned {
     val f = fs(spark, path)
     val vs = versions(spark, path)
     val (drop, keep) = vs.splitAt((vs.size - keepLast).max(0))
-    val live = keep.flatMap(manifestFiles(spark, path, _)).toSet
-    val dead = drop.flatMap(manifestFiles(spark, path, _)).toSet -- live
+    val live = keep.flatMap(manifest(spark, path, _).files).toSet
+    val dead = drop.flatMap(manifest(spark, path, _).files).toSet -- live
     dead.foreach(p => f.delete(new Path(p), false))
-    drop.foreach(v =>
-      f.delete(new Path(manifestDir(path), f"v$v%05d.json"), false))
+    drop.foreach(v => f.delete(manifestPath(path, v), false))
     // empty batch dirs left behind are cosmetic; clear them if
     // drained. Dead writers' private temp dirs (.b*.tmp-*) are
     // unreferenced by construction — sweep them too.

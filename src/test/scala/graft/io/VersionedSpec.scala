@@ -80,6 +80,31 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.committedTxns(spark, p) == Set("batch-0", "batch-1"))
   }
 
+  test("a long txn token still makes its replay a no-op; manifest bytes pinned") {
+    val p = freshPath
+    // 600 characters: the token's closing quote lands past the
+    // manifest's first 512 bytes
+    val tok = "t" * 600
+    val df = Seq((1L, "a")).toDF("k", "v")
+    val v0 = Versioned.commit(spark, p, df, "append", txn = Some(tok))
+    val vReplay = Versioned.commit(spark, p, df, "append", txn = Some(tok))
+    assert((v0, vReplay) == (0L, 0L), s"replay minted a version: $vReplay")
+    assert(Versioned.versions(spark, p) == Seq(0L))
+    assert(Versioned.committedTxns(spark, p) == Set(tok))
+    val (files, schema) = Versioned.snapshot(spark, p)
+    val b64 = java.util.Base64.getEncoder.encodeToString(
+      schema.get.json.getBytes("UTF-8"))
+    val want = s"""{"txn":"$tok","version":0,"mode":"append",""" +
+      s""""schemaB64":"$b64","files":[""" +
+      files.map(f => "\"" + f + "\"").mkString(",") + "]}"
+    val got = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$p/_manifests/v00000.json")), "UTF-8")
+    assert(got == want)
+    intercept[IllegalArgumentException] {
+      Versioned.commit(spark, p, df, "append", txn = Some("a\\b"))
+    }
+  }
+
   test("orphaned batch dir from a crashed commit does not block the retry") {
     val p = freshPath
     Versioned.commit(spark, p, Seq((1L, "a")).toDF("k", "v")) // v0
