@@ -341,22 +341,27 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("component-maintaining ingest: stored labels ≡ full closure, any batch order") {
+  /** 120 documents and the ground truth a stream-maintained component
+    * store must reproduce: their one-shot closure.
+    */
+  private def clusteredDocs(): (Seq[(Long, String)], Seq[(Long, Long)]) = {
     import graft.operators.Dedup
-    implicit val sqlCtx = spark.sqlContext
     val docs = graft.model.Tables.documents(spark, sf)
       .select("doc_id", "text").as[(Long, String)]
       .collect().toSeq.sortBy(_._1).take(120)
-    // the ground truth: one-shot closure over the whole corpus
-    val full = {
-      val df = docs.toDF("doc_id", "text")
-      val pairs = Dedup.minhashNearDups(df, "doc_id", "text", 3,
-        threshold = 0.5).select("id_a", "id_b")
-      Dedup.connectedComponents(pairs, df.select("doc_id"), "doc_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    }
+    val df = docs.toDF("doc_id", "text")
+    val pairs = Dedup.minhashNearDups(df, "doc_id", "text", 3,
+      threshold = 0.5).select("id_a", "id_b")
+    val full = Dedup.connectedComponents(pairs, df.select("doc_id"), "doc_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(full.exists(t => t._1 != t._2),
       "fixture must contain at least one non-trivial cluster")
+    (docs, full)
+  }
+
+  test("component-maintaining ingest: stored labels ≡ full closure, any batch order") {
+    implicit val sqlCtx = spark.sqlContext
+    val (docs, full) = clusteredDocs()
     def run(order: Seq[Seq[(Long, String)]]): Seq[(Long, Long)] = {
       val tag = System.nanoTime()
       val base = sys.props("java.io.tmpdir")
@@ -383,20 +388,9 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("component-maintaining ingest across the auto-fold: store ≡ closure, ≤1 overlay pending") {
-    import graft.operators.{Dedup, MaintainedComponents}
+    import graft.operators.MaintainedComponents
     implicit val sqlCtx = spark.sqlContext
-    val docs = graft.model.Tables.documents(spark, sf)
-      .select("doc_id", "text").as[(Long, String)]
-      .collect().toSeq.sortBy(_._1).take(120)
-    val full = {
-      val df = docs.toDF("doc_id", "text")
-      val pairs = Dedup.minhashNearDups(df, "doc_id", "text", 3,
-        threshold = 0.5).select("id_a", "id_b")
-      Dedup.connectedComponents(pairs, df.select("doc_id"), "doc_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    }
-    assert(full.exists(t => t._1 != t._2),
-      "fixture must contain at least one non-trivial cluster")
+    val (docs, full) = clusteredDocs()
     val tag = System.nanoTime()
     val base = sys.props("java.io.tmpdir")
     val labelPath = s"$base/graft_cmi_fold_lbl_$tag"
