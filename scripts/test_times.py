@@ -3,36 +3,31 @@
 
 Reads every target/test-reports/TEST-*.xml (the JUnit reports sbt
 writes per suite), prints the total suite seconds as a share of the
-tier-1 timeout, then the slowest suites.
+tier-1 timeout, then the 10 slowest suites.
 
-usage: test_times.py [reportDir] [--top N] [--timeout SECONDS]
+usage: python3 scripts/test_times.py   (from the repo root)
 """
-import argparse
 import glob
-import os
 import xml.etree.ElementTree as ET
 
+REPORTS = "target/test-reports/TEST-*.xml"
 TIER1_TIMEOUT_S = 2670
+TOP = 10
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("reports", nargs="?", default="target/test-reports")
-    ap.add_argument("--top", type=int, default=10)
-    ap.add_argument("--timeout", type=float, default=TIER1_TIMEOUT_S)
-    args = ap.parse_args()
     suites = []
-    for path in glob.glob(os.path.join(args.reports, "TEST-*.xml")):
+    for path in glob.glob(REPORTS):
         root = ET.parse(path).getroot()
         suites.append((float(root.get("time", 0)), root.get("name"),
                        int(root.get("tests", 0))))
     if not suites:
-        raise SystemExit(f"no TEST-*.xml under {args.reports}")
+        raise SystemExit(f"no reports match {REPORTS}")
     total = sum(t for t, _, _ in suites)
     tests = sum(n for _, _, n in suites)
     print(f"{len(suites)} suites, {tests} tests: {total:.0f} s of "
-          f"{args.timeout:.0f} s timeout ({100 * total / args.timeout:.0f} %)")
-    for t, name, n in sorted(suites, reverse=True)[:args.top]:
+          f"{TIER1_TIMEOUT_S} s timeout ({100 * total / TIER1_TIMEOUT_S:.0f} %)")
+    for t, name, n in sorted(suites, reverse=True)[:TOP]:
         print(f"{t:8.1f} s  {n:4d}  {name}")
 
 
