@@ -287,15 +287,22 @@ object MaintainedComponents {
       SchemaFile.read(spark, path).drop("comp_part"), idCol)(identity)
   }
 
-  /** The batch id the next [[merge]]/[[forget]] should carry: the
-    * applied mark + 1, read after crash recovery. For callers whose own
-    * batch ids cannot key the store, such as streams that share it or
-    * restart their ids at 0 on a fresh checkpoint.
+  /** The batch id the next [[merge]]/[[forget]] should carry: one past
+    * both the applied mark and the highest committed relabel overlay,
+    * read after crash recovery. For callers whose own batch ids cannot
+    * key the store, such as streams that share it or restart their ids
+    * at 0 on a fresh checkpoint. The overlays count because the mark
+    * can lag them: a crash between an overlay's `_done` and the mark,
+    * or between the delete and the rename of an atomic-rename mark
+    * publish, would otherwise hand the next batch an id whose
+    * committed overlay makes it skip its own relabel, or an id below
+    * pending overlays that then applies out of order.
     */
   def nextBatchId(spark: SparkSession, rootPath: String): Long = {
     val path = graft.io.GenTable.live(spark, rootPath)
     PartCommit.recover(spark, path)
-    PartCommit.lastApplied(spark, path) + 1
+    (PartCommit.lastApplied(spark, path) +:
+      committedRelabels(spark, path).map(_._1)).max + 1
   }
 
   /** The id column of the stored labeling at `live`: its one column

@@ -587,7 +587,8 @@ object Streams {
     * (spec-pinned, including a different batch order).
     *
     * Store batch ids: each merge carries the store's own next id
-    * ([[graft.operators.MaintainedComponents.nextBatchId]]), never the
+    * ([[graft.operators.MaintainedComponents.nextBatchId]]: one past
+    * its applied mark and its committed overlays), never the
     * micro-batch id — the forget driver shares the store, and a fresh
     * checkpoint restarts micro-batch ids at 0. Labels commit before
     * the signatures: a micro-batch replayed after a crash between the

@@ -1119,6 +1119,93 @@ class StreamsSpec extends SparkSpec {
     assert(sigIds == Set(2L, 3L, 4L, 5L), sigIds.toString)
   }
 
+  test("component drivers keep every label when the store's applied mark lags its overlays") {
+    import graft.io.{GenTable, SimFs}
+    import graft.operators.{Dedup, MaintainedComponents}
+    implicit val sqlCtx = spark.sqlContext
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.simfs.impl", classOf[SimFs].getName)
+    def doc(tag: String): String =
+      (1 to 24).map(i => s"${tag}_w$i").mkString(" ")
+    def labels(labelPath: String): Map[Long, Long] =
+      MaintainedComponents.read(spark, labelPath).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def closure(docs: Seq[(Long, String)]): Map[Long, Long] = {
+      val df = docs.toDF("doc_id", "text")
+      val pairs = Dedup.minhashNearDups(df, "doc_id", "text", 3,
+        threshold = 0.5).select("id_a", "id_b")
+      Dedup.connectedComponents(pairs, df.select("doc_id"), "doc_id")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    def sigIds(sigPath: String): Set[Long] =
+      Dedup.readSignatures(spark, sigPath).select("doc_id").as[Long]
+        .collect().toSet
+    def ingest(in: MemoryStream[(Long, String)], sigPath: String,
+               labelPath: String, ckpt: String) =
+      Streams.componentMaintainingIngest(
+        in.toDF().toDF("doc_id", "text"), "doc_id", "text",
+        sigPath, labelPath, Map("checkpointLocation" -> ckpt))
+    val base = sys.props("java.io.tmpdir")
+
+    // (a) an ingest micro-batch dies between its relabel overlay's
+    // `_done` and the applied mark (a simfs crash at the mark's first
+    // write); the forget driver runs before the ingest replays. The
+    // forget must not inherit the committed overlay's id, or it skips
+    // its own relabel and the forgotten doc keeps its label.
+    {
+      val tag = System.nanoTime()
+      val sigPath = s"$base/graft_lag_a_sig_$tag"
+      val labelPath = s"simfs://$base/graft_lag_a_lbl_$tag"
+      val ckpt = s"$base/graft_lag_a_ck_$tag"
+      val in = MemoryStream[(Long, String)]
+      val q1 = ingest(in, sigPath, labelPath, ckpt)
+      try {
+        in.addData((1L, doc("alpha")), (2L, doc("beta")))
+        q1.processAllAvailable()                      // bootstrap write
+        val live = new org.apache.hadoop.fs.Path(
+          GenTable.live(spark, labelPath)).toUri.getPath
+        SimFs.arm(s"$live/_applied", failFrom = 1)
+        in.addData((3L, doc("alpha")))                // merge: 3 joins 1
+        assert(scala.util.Try(q1.processAllAvailable()).isFailure,
+          "the injected crash must fail the micro-batch")
+      } finally { q1.stop(); SimFs.disarm() }
+      val fin = MemoryStream[Long]
+      val qf = Streams.forgetMaintainingIngest(
+        fin.toDF().toDF("doc_id"), "doc_id", sigPath, labelPath,
+        Map("checkpointLocation" -> s"$base/graft_lag_a_fck_$tag"))
+      try { fin.addData(1L); qf.processAllAvailable() } finally qf.stop()
+      val q2 = ingest(in, sigPath, labelPath, ckpt)   // replays doc 3
+      try q2.processAllAvailable() finally q2.stop()
+      val want = closure(Seq((2L, doc("beta")), (3L, doc("alpha"))))
+      assert(labels(labelPath) == want, s"${labels(labelPath)} vs $want")
+      assert(sigIds(sigPath) == Set(2L, 3L), sigIds(sigPath).toString)
+    }
+
+    // (b) an atomic-rename mark publish deletes `_applied` before it
+    // renames the new one into place; a crash between the two leaves
+    // two overlays pending and no mark. The next batch must not reuse
+    // a pending overlay's id.
+    {
+      val tag = System.nanoTime()
+      val sigPath = s"$base/graft_lag_b_sig_$tag"
+      val labelPath = s"$base/graft_lag_b_lbl_$tag"
+      val in = MemoryStream[(Long, String)]
+      val q = ingest(in, sigPath, labelPath, s"$base/graft_lag_b_ck_$tag")
+      val all = Seq((1L, doc("alpha")), (2L, doc("beta")),
+        (3L, doc("alpha")), (4L, doc("gamma")), (5L, doc("beta")))
+      try {
+        all.take(4).foreach { d => in.addData(d); q.processAllAvailable() }
+        val mark = new org.apache.hadoop.fs.Path(
+          GenTable.live(spark, labelPath), "_applied")
+        assert(mark.getFileSystem(hconf).delete(mark, false),
+          s"no applied mark at $mark")
+        in.addData(all(4)); q.processAllAvailable()  // 5 joins 2
+      } finally q.stop()
+      val want = closure(all)
+      assert(labels(labelPath) == want, s"${labels(labelPath)} vs $want")
+    }
+  }
+
   test("driftMonitoringIngest: frozen reference, report ≡ batch categoricalDrift") {
     implicit val sqlCtx = spark.sqlContext
     val tag = System.nanoTime()
