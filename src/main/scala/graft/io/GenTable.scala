@@ -55,22 +55,11 @@ object GenTable {
   private def fsOf(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def genMark(root: String) = new Path(root, "_gen")
+  private val GenMark = "_gen"
 
   /** Current generation number, if `root` is a generation root. */
-  def currentGen(spark: SparkSession, root: String): Option[Long] = {
-    val fs = fsOf(spark, root)
-    if (!fs.exists(genMark(root))) None
-    else {
-      val in = fs.open(genMark(root))
-      val s = try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        new String(buf, 0, n.max(0), "UTF-8").trim
-      } finally in.close()
-      Some(s.toLong)
-    }
-  }
+  def currentGen(spark: SparkSession, root: String): Option[Long] =
+    Some(Marks.readLong(spark, root, GenMark)).filter(_ >= 0)
 
   /** The LIVE table dir: `root/g<N>` for a generation root, `root`
     * itself for a legacy flat table. Every view-level entry point
@@ -89,7 +78,7 @@ object GenTable {
     */
   private def shouldGen(spark: SparkSession, root: String): Boolean = {
     val fs = fsOf(spark, root)
-    !AtomicIo.renameIsAtomic(fs) || fs.exists(genMark(root))
+    !AtomicIo.renameIsAtomic(fs) || fs.exists(new Path(root, GenMark))
   }
 
   /** Replace the table with whatever `write` materializes at the next
@@ -107,8 +96,7 @@ object GenTable {
     write(nextDir.toString)
     // the commit point: readers resolve g<cur> before this PUT and
     // g<next> after it — never anything partial
-    AtomicIo.publishFile(fs, genMark(root),
-      next.toString.getBytes("UTF-8"))
+    Marks.writeLong(spark, root, GenMark, next)
     // sweep EVERYTHING stale, not just g<cur>: (a) a writer that died
     // between a previous flip and its cleanup left its old generation
     // behind, and per-flip cur-only deletion would orphan it forever;
@@ -120,7 +108,7 @@ object GenTable {
     // never loses its snapshot mid-commit.
     fs.listStatus(new Path(root)).foreach { st =>
       val n = st.getPath.getName
-      if (n != s"g$next" && n != "_gen") fs.delete(st.getPath, true)
+      if (n != s"g$next" && n != GenMark) fs.delete(st.getPath, true)
     }
   }
 

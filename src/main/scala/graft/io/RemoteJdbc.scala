@@ -240,6 +240,12 @@ object RemoteJdbc {
               val result =
                 if (call.target == 0L && call.method == "connect")
                   DriverManager.getConnection(embeddedUrl)
+                else if (call.method == "close" &&
+                    !objects.containsKey(call.target))
+                  // closing a closed object is a no-op in JDBC: Spark's
+                  // JDBC read closes each ResultSet twice (its row
+                  // iterator, then JDBCRDD.close)
+                  null
                 else {
                   val target = objects.get(call.target)
                   require(target != null, s"stale handle ${call.target}")

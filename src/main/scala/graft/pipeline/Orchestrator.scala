@@ -2,7 +2,8 @@ package graft.pipeline
 
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.Par
 import graft.io.Csv
@@ -96,23 +97,22 @@ object Orchestrator {
   }
 
   /** Run stages 3–5 over a loader (table name → raw DataFrame),
-    * writing each view as CSV under `outDir/views`. `filterStations`
-    * applies step 4 semantics before consolidation, as the pipeline
-    * order prescribes (step 4 runs before step 5).
+    * writing each view as CSV under `outDir/views`. Every loaded table
+    * takes step 3 and, when it has a station column, step 4 before
+    * consolidation, as the pipeline order prescribes (step 4 runs
+    * before step 5); both report per file.
     *
     * `dictDir` (the reference's dictionary/ folder) enables the
     * dictionary-driven pieces: the `v_estaciones` station catalog (the
     * 33rd view, steps/step5_create_views.py:503-548) and the
-    * data-driven station-column probe list. `detailedStats` adds the
-    * reference's per-file step-4 metrics to the report (two extra
-    * small jobs per file — off by default, never on the hot path).
+    * data-driven station-column probe list.
     *
     * Throughput design (87 files / 33 views on one session):
     * - cleaned members are persisted and memoized — each member feeds
     *   the spine, label maps, and pivot (3–4 plan subtrees), and
     *   re-scanning CSV per subtree dominated the wall-clock;
-    * - each view DataFrame is persisted so the CSV write and the
-    *   report count() execute the plan once, not twice;
+    * - each view is written once, and its row count is observed on
+    *   that write rather than taken by a second action;
     * - all views (consolidated, simple, both catalogs) are one task
     *   list run by one [[graft.Par.map]] of width `parallelism`: the
     *   per-view jobs are small, so `parallelism` views in flight keep
@@ -127,10 +127,8 @@ object Orchestrator {
     * frames are released in a finally block.
     */
   def run(spark: SparkSession, loadRaw: String => Option[DataFrame],
-          outDir: String, filterStations: Boolean = true,
-          singleFileCsv: Boolean = false, parallelism: Int = 8,
-          dictDir: Option[String] = None,
-          detailedStats: Boolean = false): RunReport = {
+          outDir: String, singleFileCsv: Boolean = false,
+          parallelism: Int = 8, dictDir: Option[String] = None): RunReport = {
     val catalog = dictDir.map(Catalogs.load)
     // reference probe order: the table's mapped station column first,
     // then the registry in dictionary order (step4:42-66); without a
@@ -142,46 +140,52 @@ object Orchestrator {
       new scala.collection.concurrent.TrieMap[String, Steps.FilterStats]
     val removeMap =
       new scala.collection.concurrent.TrieMap[String, Steps.RemoveStats]
-    // computeIfAbsent, not TrieMap.getOrElseUpdate: the latter can
-    // evaluate the thunk in two racing view threads and orphan one
-    // persist()ed DataFrame (never unpersisted, table read twice)
-    val cache =
-      new java.util.concurrent.ConcurrentHashMap[String, Option[DataFrame]]
-    val load: String => Option[DataFrame] = name =>
-      cache.computeIfAbsent(name, _ =>
-        loadRaw(name).map { df =>
-          // step-3 detail is schema-only (no jobs) — always collected
-          val (noFlags, rmStats) = Steps.removeFlagColumnsWithStats(df, name)
-          removeMap.put(name, rmStats)
-          if (detailedStats)
-            Steps.sparseStationStats(noFlags, name, known = knownFor(name))
-              .foreach(statsMap.put(name, _))
-          val cleaned =
-            if (filterStations)
-              Steps.filterSparseStations(noFlags, known = knownFor(name))._1
-            else noFlags
-          cleaned.persist()
-        })
+    val persisted = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
 
-    /** One persisted view → CSV + counted result, errors captured.
+    /** One table's cleaned member, loaded once, on first use.
+      * `computeIfAbsent` makes exactly one holder per table
+      * (`TrieMap.getOrElseUpdate` may run its thunk twice and orphan a
+      * persisted frame); the load — header discovery and the step-4
+      * aggregate, both Spark actions — runs outside the mapping
+      * function, where it would block every table hashed to the same
+      * bin. A load that throws is tried again by the next view.
+      */
+    final class Member(name: String) {
+      lazy val df: Option[DataFrame] = loadRaw(name).map { raw =>
+        val (noFlags, rmStats) = Steps.removeFlagColumnsWithStats(raw, name)
+        removeMap.put(name, rmStats)
+        val (kept, _, stats) = Steps.filterSparseStations(noFlags,
+          known = knownFor(name), table = name)
+        stats.foreach(statsMap.put(name, _))
+        val cleaned = kept.persist()
+        persisted.add(cleaned)
+        cleaned
+      }
+    }
+    val members = new java.util.concurrent.ConcurrentHashMap[String, Member]
+    val load: String => Option[DataFrame] =
+      name => members.computeIfAbsent(name, new Member(_)).df
+
+    /** One view → CSV + counted result, errors captured. The row count
+      * is observed on the write itself, so the view's plan runs once.
       * Single-file mode writes exactly `{view}.csv` like the reference
       * (steps/step5_create_views.py:416-423); multi-part mode writes a
       * directory per view (the scale path). The Try wraps the WHOLE
-      * task — plan building AND the write/count actions, where Spark
-      * failures actually surface — so one bad view degrades to a
-      * status=error row instead of aborting the run.
+      * task — plan building AND the write, where Spark failures
+      * actually surface — so one bad view degrades to a status=error
+      * row instead of aborting the run.
       */
     def emit(name: String, built: => Option[DataFrame]): ViewResult =
       Try {
-        built.map { df0 =>
-          val df = df0.persist()
-          try {
-            val target =
-              if (singleFileCsv) s"$outDir/views/$name.csv"
-              else s"$outDir/views/$name"
-            Csv.write(df, target, singleFileCsv)
-            ViewResult(name, "success", df.count(), df.columns.toSeq)
-          } finally df.unpersist(blocking = false)
+        built.map { df =>
+          val rows = Observation()
+          val target =
+            if (singleFileCsv) s"$outDir/views/$name.csv"
+            else s"$outDir/views/$name"
+          Csv.write(df.observe(rows, count(lit(1)).as("rows")), target,
+            singleFileCsv)
+          ViewResult(name, "success", rows.get("rows").asInstanceOf[Long],
+            df.columns.toSeq)
         }
       } match {
         case Success(Some(r)) => r
@@ -216,10 +220,7 @@ object Orchestrator {
         },
         statsMap.values.toSeq.sortBy(_.table),
         removeMap.values.toSeq.sortBy(_.table))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      cache.values.asScala.flatten.foreach(_.unpersist(blocking = false))
-    }
+    } finally persisted.forEach(_.unpersist(blocking = false))
   }
 
   /** Catalog-driven entry: table names resolve to CSV paths under
@@ -229,9 +230,8 @@ object Orchestrator {
     */
   def runWithCatalog(spark: SparkSession, catalog: TableCatalog,
                      rawDir: String, outDir: String, dictDir: String,
-                     filterStations: Boolean = true,
-                     singleFileCsv: Boolean = false, parallelism: Int = 8,
-                     detailedStats: Boolean = false): RunReport = {
+                     singleFileCsv: Boolean = false,
+                     parallelism: Int = 8): RunReport = {
     val loader: String => Option[DataFrame] = name => {
       val path = catalog.pathFor(rawDir, name)
       val fs = new org.apache.hadoop.fs.Path(path)
@@ -240,7 +240,6 @@ object Orchestrator {
         Some(Csv.readLongTable(spark, path))
       else None
     }
-    run(spark, loader, outDir, filterStations, singleFileCsv, parallelism,
-      Some(dictDir), detailedStats)
+    run(spark, loader, outDir, singleFileCsv, parallelism, Some(dictDir))
   }
 }

@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
 
-/** Stage transformations mirroring reference steps 3–4, as lazy
-  * DataFrame combinators (the reference materializes a CSV per step;
-  * here each step is a plan fragment and Catalyst fuses the lot into
-  * one scan — checkpoint to a stage directory only when you want
-  * restartability).
+/** Stage transformations mirroring reference steps 3–4 (the
+  * reference materializes a CSV per step). Step 3 is a lazy plan
+  * fragment; step 4 runs one aggregate action per table, whose result
+  * is both its filter and its report, and returns the kept rows as a
+  * lazy plan fragment Catalyst fuses into the views that read it.
   */
 object Steps {
 
@@ -23,9 +23,8 @@ object Steps {
   /** Step-3 per-file metrics, mirroring the reference's report detail
     * (steps/step3_remove_columns.py:52-82: columnas_originales /
     * eliminadas / finales per file). Schema-only — costs zero Spark
-    * jobs, so unlike the step-4 stats it is always collected. The
-    * reference's byte-size fields (size_original/size_final) are
-    * deliberately absent: they are properties of its CSV-per-step
+    * jobs. The reference's byte-size fields (size_original/size_final)
+    * are deliberately absent: they are properties of its CSV-per-step
     * materialization, which the fused lazy plan never creates.
     */
   final case class RemoveStats(table: String, colsOriginal: Seq[String],
@@ -40,66 +39,54 @@ object Steps {
     (out, RemoveStats(table, before, before.diff(out.columns.toSeq)))
   }
 
-  /** Step 4 — eliminate sparse stations: a station is eliminated when
-    * it has fewer than `minRecords` NON-NULL `Value` rows
-    * (steps/step4_filter_stations.py:39-40,116-119; pandas count() is
-    * the non-null count). Rows with null/empty station codes are
-    * dropped first (:106-110). Returns (filtered, eliminatedStations).
-    *
-    * Scale: the reference collects the sparse list into memory
-    * (:142); here it stays distributed — agg + left_anti join, with
-    * the aggregated side small enough for AQE to broadcast.
-    */
-  val MinRecords = 3L
-
-  def filterSparseStations(df: DataFrame, minRecords: Long = MinRecords,
-                           known: Seq[String] = Schemas.stationColumns)
-      : (DataFrame, DataFrame) =
-    Schemas.findStationColumn(df, known) match {
-      case None => (df, df.sparkSession.emptyDataFrame)
-      case Some(scol) =>
-        val valid = Relational.filterNonEmpty(df, scol)
-        val counts = valid.groupBy(col(scol))
-          .agg(count(col(Schemas.valueColumn)).as("n_obs"))
-        val sparse = counts.filter(col("n_obs") < minRecords).select(col(scol))
-        (valid.join(sparse, Seq(scol), "left_anti"), sparse)
-    }
-
   /** Step-4 per-file metrics, mirroring the reference's report fields
     * (steps/step4_filter_stations.py:247-295: registros originales /
-    * eliminados / null, estaciones antes / eliminadas). Costs two
-    * extra jobs per file (a count + one scalar aggregate over the
-    * per-station counts) — the orchestrator only runs it when detailed
-    * reporting is requested; never on the hot path.
+    * eliminados / null, estaciones antes / eliminadas).
     */
   final case class FilterStats(table: String, rowsBefore: Long,
                                nullStationRows: Long, rowsEliminated: Long,
                                rowsAfter: Long, stationsBefore: Long,
                                stationsEliminated: Long, stationsAfter: Long)
 
-  def sparseStationStats(df: DataFrame, table: String,
-                         minRecords: Long = MinRecords,
-                         known: Seq[String] = Schemas.stationColumns)
-      : Option[FilterStats] =
-    Schemas.findStationColumn(df, known).map { scol =>
-      val valid = Relational.filterNonEmpty(df, scol)
-      val perStation = valid.groupBy(col(scol))
-        .agg(count(lit(1)).as("n_rows"),
-          count(col(Schemas.valueColumn)).as("n_obs"))
-      val sparseRow = when(col("n_obs") < minRecords, col("n_rows"))
-      val r = perStation.agg(
-        coalesce(sum(col("n_rows")), lit(0L)).as("valid_rows"),
-        count(lit(1)).as("stations"),
-        coalesce(sum(sparseRow), lit(0L)).as("sparse_rows"),
-        count(sparseRow).as("sparse_stations")).collect()(0)
-      val total = df.count()
-      val validRows = r.getAs[Long]("valid_rows")
-      val sparseRows = r.getAs[Long]("sparse_rows")
-      val stations = r.getAs[Long]("stations")
-      val sparseStations = r.getAs[Long]("sparse_stations")
-      FilterStats(table, total, total - validRows, sparseRows,
-        validRows - sparseRows, stations, sparseStations,
-        stations - sparseStations)
+  val MinRecords = 3L
+
+  /** Step 4 — eliminate sparse stations: a station is eliminated when
+    * it has fewer than `minRecords` NON-NULL `Value` rows
+    * (steps/step4_filter_stations.py:39-40,116-119; pandas count() is
+    * the non-null count). Rows with null/empty station codes are
+    * dropped first (:106-110). Returns (kept rows, eliminated station
+    * codes, the file's report); a table with no station column passes
+    * through with neither.
+    *
+    * One action: a `groupBy(station)` over every row, null and empty
+    * codes included as their own groups, collected to the driver. The
+    * collect holds one row per distinct station code of the table —
+    * the same driver hop as the reference's sparse list (:142) — and
+    * yields both the report and the list; the kept rows are then a
+    * lazy `filterNonEmpty` + `NOT IN` over that list.
+    */
+  def filterSparseStations(df: DataFrame, minRecords: Long = MinRecords,
+                           known: Seq[String] = Schemas.stationColumns,
+                           table: String = "")
+      : (DataFrame, Seq[String], Option[FilterStats]) =
+    Schemas.findStationColumn(df, known) match {
+      case None => (df, Nil, None)
+      case Some(scol) =>
+        // (code, rows, non-null values) per station code
+        val groups = df.groupBy(col(scol))
+          .agg(count(lit(1)), count(col(Schemas.valueColumn))).collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        val valid = groups.filter { case (s, _, _) => s != null && s.nonEmpty }
+        val sparse = valid.filter(_._3 < minRecords)
+        val rows = groups.map(_._2).sum
+        val validRows = valid.map(_._2).sum
+        val sparseRows = sparse.map(_._2).sum
+        val codes = sparse.map(_._1).sorted.toSeq
+        (Relational.filterNonEmpty(df, scol).filter(!col(scol).isin(codes: _*)),
+          codes,
+          Some(FilterStats(table, rows, rows - validRows, sparseRows,
+            validRows - sparseRows, valid.length, sparse.length,
+            valid.length - sparse.length)))
     }
 
   /** Step 6's type coercion (steps/step6_upload_to_db.py:63-72): every

@@ -165,6 +165,23 @@ class RemoteJdbcSpec extends SparkSpec {
     }
   }
 
+  test("closing a closed result set succeeds and keeps the session") {
+    withServer { (_, port) =>
+      val conn = new RemoteJdbcDriver()
+        .connect(s"jdbc:graftremote://localhost:$port/", null)
+      try {
+        val st = conn.createStatement()
+        st.executeUpdate("CREATE TABLE tc (x INT)")
+        val rs = st.executeQuery("SELECT * FROM tc")
+        // Spark's JDBC read closes a ResultSet twice
+        rs.close()
+        rs.close()
+        st.close()
+        assert(!conn.createStatement().executeQuery("SELECT * FROM tc").next())
+      } finally conn.close()
+    }
+  }
+
   test("driver URL contract: foreign URLs yield null, ours parse") {
     val d = new RemoteJdbcDriver()
     assert(d.acceptsURL("jdbc:graftremote://h:1/"))

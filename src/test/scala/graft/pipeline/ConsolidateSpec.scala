@@ -121,10 +121,11 @@ class ConsolidateSpec extends SparkSpec {
       ("m1", "l1", "S2", "b", 4.0), ("m2", "l2", "S2", "b", null),
       ("m3", "l3", "S2", "b", 5.0),
       ("m1", "l1", "S2", "b", 6.0)))
-    val (kept, sparse) = Steps.filterSparseStations(df)
+    val (kept, sparse, _) = Steps.filterSparseStations(df)
     val stations = kept.select("DTI_CL_ESTACIONES_METEO")
       .distinct().as[String].collect().toSet
     assert(stations == Set("S1", "S2"), "S2 has 3 non-null → borderline keep")
+    assert(sparse.isEmpty)
     // lower the data: S2 with only 2 non-null must go
     val df2 = f1(Seq(
       ("m1", "l1", "S1", "a", 1.0), ("m2", "l2", "S1", "a", 2.0),
@@ -132,11 +133,11 @@ class ConsolidateSpec extends SparkSpec {
       ("m1", "l1", "S2", "b", 4.0), ("m2", "l2", "S2", "b", null),
       ("m3", "l3", "S2", "b", 5.0)))
     // S2: rows m1=4.0, m2=null, m3=5.0 → 2 non-null → eliminated
-    val (kept2, sparse2) = Steps.filterSparseStations(df2, minRecords = 3L)
+    val (kept2, sparse2, _) = Steps.filterSparseStations(df2, minRecords = 3L)
     val st2 = kept2.select("DTI_CL_ESTACIONES_METEO")
       .distinct().as[String].collect().toSet
     assert(st2 == Set("S1"))
-    assert(sparse2.as[String].collect().toSeq == Seq("S2"))
+    assert(sparse2 == Seq("S2"))
   }
 
   test("empty/null station codes dropped before counting") {
@@ -144,8 +145,19 @@ class ConsolidateSpec extends SparkSpec {
       ("m1", "l1", "", "x", 1.0), ("m1", "l1", null, "y", 2.0),
       ("m1", "l1", "S1", "a", 1.0), ("m2", "l2", "S1", "a", 2.0),
       ("m3", "l3", "S1", "a", 3.0)))
-    val (kept, _) = Steps.filterSparseStations(df)
+    val (kept, _, stats) = Steps.filterSparseStations(df)
     assert(kept.count() == 3)
+    // the two code-less rows are reported as null-station rows
+    assert(stats.map(s => (s.rowsBefore, s.nullStationRows, s.rowsAfter,
+      s.stationsBefore)).contains((5L, 2L, 3L, 1L)))
+  }
+
+  test("a table with no station column passes step 4 unfiltered, unreported") {
+    val df = Seq(("d1", "día 1", "Embalse Uno", 7.5), ("d2", "día 2", "", 1.0))
+      .toDF("DTI_CL_DIA", "Día", "Embalse", "Value")
+    val (kept, sparse, stats) = Steps.filterSparseStations(df)
+    assert(kept eq df)
+    assert(sparse.isEmpty && stats.isEmpty)
   }
 
   test("simple water view drops flags and DTI_ columns") {
@@ -183,11 +195,11 @@ class ConsolidateSpec extends SparkSpec {
   test("extra-dim POAL table: station filter counts across params") {
     // station P1 has 3 non-null values (2 params × d1 + d2) → kept;
     // P2 has 1 → eliminated. The param dim must not fragment the count.
-    val (kept, sparse) = Steps.filterSparseStations(
+    val (kept, sparse, _) = Steps.filterSparseStations(
       Steps.removeFlagColumns(metales))
     assert(kept.select("DTI_CL_T013EST_POAL").distinct()
       .as[String].collect().toSet == Set("P1"))
-    assert(sparse.as[String].collect().toSeq == Seq("P2"))
+    assert(sparse == Seq("P2"))
   }
 
   test("extra-dim member in a consolidated view: pivot-duplicate policy") {
@@ -227,8 +239,8 @@ class ConsolidateSpec extends SparkSpec {
     // wrong column would keep everything (AC1 has 4).
     assert(Schemas.findStationColumn(caudal).contains(
       "DTI_CL_ESTACIONES_FLUVIOMETRICAS"))
-    val (kept, sparse) = Steps.filterSparseStations(caudal)
-    assert(sparse.as[String].collect().toSeq == Seq("F2"))
+    val (kept, sparse, _) = Steps.filterSparseStations(caudal)
+    assert(sparse == Seq("F2"))
     assert(kept.count() == 3)
     // same answer through the dictionary-driven probe list
     val cat = graft.model.Catalogs.load("/root/reference/dictionary")

@@ -54,8 +54,7 @@ class OrchestratorSpec extends SparkSpec {
 
   test("orchestrator produces views + report over fixture CSVs") {
     val outDir = Files.createTempDirectory("graft_ine_out").toString
-    val report = Orchestrator.run(spark, load, outDir, filterStations = true,
-      singleFileCsv = true)
+    val report = Orchestrator.run(spark, load, outDir, singleFileCsv = true)
     val byName = report.views.map(v => v.name -> v).toMap
 
     // consolidated air view present with the two member columns
@@ -90,9 +89,9 @@ class OrchestratorSpec extends SparkSpec {
 
   test("dictionary run: v_estaciones emitted, detailed step-4/7 report") {
     val outDir = Files.createTempDirectory("graft_ine_out2").toString
-    val report = Orchestrator.run(spark, load, outDir, filterStations = true,
+    val report = Orchestrator.run(spark, load, outDir,
       singleFileCsv = true, dictDir = Some("/root/reference/dictionary"),
-      detailedStats = true)
+    )
     val byName = report.views.map(v => v.name -> v).toMap
 
     // the 33rd view: station catalog in exact reference column order
@@ -127,8 +126,7 @@ class OrchestratorSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft_reports_e2e").toString
     val today = java.time.LocalDate.of(2026, 8, 12)
     val report = Orchestrator.run(spark, load,
-      RunPaths.runDir(base, today), filterStations = true,
-      singleFileCsv = true, detailedStats = true)
+      RunPaths.runDir(base, today), singleFileCsv = true)
 
     // step-3 detail collected schema-only: the fixture files all carry
     // "Flag Codes"/"Flags"
@@ -186,7 +184,7 @@ class OrchestratorSpec extends SparkSpec {
     def runOnce(): Orchestrator.RunReport = {
       RunPaths.cleanRun(spark, base, today) // limpiar_ejecucion_previa
       Orchestrator.run(spark, load, RunPaths.runDir(base, today),
-        filterStations = true, singleFileCsv = true)
+        singleFileCsv = true)
     }
     val first = runOnce()
     val marker = java.nio.file.Paths.get(
@@ -209,7 +207,7 @@ class OrchestratorSpec extends SparkSpec {
       case name => load(name)
     }
     val report = Orchestrator.run(spark, poison, outDir,
-      filterStations = true, singleFileCsv = true)
+      singleFileCsv = true)
     val byName = report.views.map(v => v.name -> v).toMap
     assert(byName("v_temperatura").status == "error")
     assert(byName("v_temperatura").error.exists(_.contains("boom")))
@@ -229,7 +227,7 @@ class OrchestratorSpec extends SparkSpec {
       case name => load(name)
     }
     val report = Orchestrator.run(spark, poison, outDir,
-      filterStations = true, singleFileCsv = true)
+      singleFileCsv = true)
     val byName = report.views.map(v => v.name -> v).toMap
     assert(byName("v_temperatura").status == "error",
       "runtime task failures must degrade to an error row, not abort")
@@ -244,12 +242,31 @@ class OrchestratorSpec extends SparkSpec {
         r.at("/error").asText == error))
   }
 
+  test("a default run reports every view's written rows and every table's step 4") {
+    val outDir = Files.createTempDirectory("graft_ine_default").toString
+    val report = Orchestrator.run(spark, load, outDir, singleFileCsv = true,
+      parallelism = 4)
+    val ok = report.successes
+    assert(ok.nonEmpty)
+    // the row count observed on the write is the file's data lines
+    ok.foreach { v =>
+      val lines = Files.readAllLines(
+        java.nio.file.Paths.get(s"$outDir/views/${v.name}.csv")).size
+      assert(v.rows == lines - 1, s"${v.name}: ${v.rows} rows, $lines lines")
+    }
+    // every loaded table with a station column carries its step-4 report
+    val loaded = report.removeStats.map(_.table)
+    assert(loaded.nonEmpty)
+    val withStation = loaded.filter(t =>
+      Schemas.findStationColumn(load(t).get).isDefined)
+    assert(report.filterStats.map(_.table) == withStation.sorted)
+  }
+
   test("one-thread and four-thread schedules give the same report") {
     def runWith(parallelism: Int): Orchestrator.RunReport =
       Orchestrator.run(spark, load,
         Files.createTempDirectory(s"graft_ine_par$parallelism").toString,
-        filterStations = true, singleFileCsv = true,
-        parallelism = parallelism, detailedStats = true)
+        singleFileCsv = true, parallelism = parallelism)
     def shape(r: Orchestrator.RunReport) =
       r.views.map(v => (v.name, v.status, v.rows, v.columns))
     val serial = runWith(1)
