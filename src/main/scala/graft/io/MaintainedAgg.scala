@@ -264,17 +264,17 @@ object MaintainedAgg {
       })
     }
 
-  // ---- streaming ingest: per-batch delta partitions ----
+  // ---- streaming ingest: per-batch deltas ----
   //
-  // Each micro-batch's per-group sums land under their own
-  // `_deltas/batch_id=<id>` partition, serving merges base ⊎ deltas on
+  // Each micro-batch's per-group sums commit as its batch of the
+  // view's `_deltas` log, serving merges base ⊎ committed deltas on
   // read, and compaction folds them into the base — the shared
   // protocol of [[ViewTable.writeDelta]] / [[ViewTable.compact]].
 
   /** One micro-batch's delta write (factored out so replay
     * idempotence is testable without a stream): `added` rows carry
-    * the per-row measure contributions; the per-group delta lands
-    * under this batch's own partition ([[ViewTable.writeDelta]]).
+    * the per-row measure contributions; the per-group delta commits
+    * as this batch of the `_deltas` log ([[ViewTable.writeDelta]]).
     */
   def writeDeltaPartial(added: DataFrame, batchId: Long,
                         groupCols: Seq[String], measureCols: Seq[String],

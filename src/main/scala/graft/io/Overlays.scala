@@ -5,8 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The committed batch overlays of a live table, kept under one
   * `_`-prefixed dir (invisible to the table's own parquet scans) —
-  * the merge-on-read log behind the component store's relabel
-  * overlays and the signature table's deletion tombstones:
+  * the per-batch log behind the component store's relabel overlays,
+  * the signature table's deletion tombstones, the agg_part views'
+  * streaming `_deltas` ([[ViewTable]]) and the stream drivers' AMS
+  * partials and trending counts:
   *
   *   - NAMING: batch `key` lives at `<live>/<dir>/batch_id=<key>`,
   *     where `key` is the batch id, optionally followed by `-<tag>`.
@@ -62,6 +64,31 @@ final case class Overlays(dir: String) {
     rows.coalesce(1).write.mode("overwrite").parquet(d.toString)
     AtomicIo.publishFile(fsOf(spark, live), doneOf(d),
       batchId.toString.getBytes("UTF-8"))
+  }
+
+  /** Commit micro-batch `batchId` (keyed by the id alone) at most
+    * once: a batch that has committed no-ops, and so does an empty
+    * one. `rows` is materialized once — the emptiness check and the
+    * write are two actions, and without it a micro-batch source is
+    * read twice — and `fold` turns it into the batch's rows. Returns
+    * whether the batch has committed.
+    */
+  def commitBatch(spark: SparkSession, live: String, batchId: Long)
+                 (rows: DataFrame)(fold: DataFrame => DataFrame): Boolean =
+    isCommitted(spark, live, batchId.toString) || {
+      val b = rows.localCheckpoint()
+      !b.isEmpty && {
+        publish(spark, live, batchId.toString, batchId)(fold(b))
+        true
+      }
+    }
+
+  /** The rows of every committed batch, or None when none has
+    * committed.
+    */
+  def read(spark: SparkSession, live: String): Option[DataFrame] = {
+    val paths = committed(spark, live).map(_._2)
+    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
   }
 
   /** Run `fold` (the owner's compaction, which must leave no committed

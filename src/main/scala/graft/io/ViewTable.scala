@@ -1,6 +1,5 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -25,7 +24,8 @@ import org.apache.spark.sql.types.StructType
   *     batch, exactly-once under retry keyed by batch id
   *     ([[PartCommit]]).
   *   - DELTAS ([[writeDelta]], [[readWithDeltas]], [[compact]]): the
-  *     streaming twin's merge-on-read protocol.
+  *     streaming twin's merge-on-read log, the `_deltas` batches of
+  *     [[Overlays]] folded under the `_folded` high-water mark.
   */
 object ViewTable {
 
@@ -103,7 +103,7 @@ object ViewTable {
     *      recovery, so a predecessor that crashed past its commit
     *      marker has advanced the mark first and this call's batch is
     *      applied on top of it, not mistaken for a replay;
-    *   4. refuse pending streaming `_deltas` (below);
+    *   4. refuse committed streaming `_deltas` (below);
     *   5. `batch` supplies the touched parts (evaluated only now);
     *   6. an empty batch still advances the mark, so its replay stays
     *      a no-op;
@@ -140,7 +140,7 @@ object ViewTable {
     val id = batchId.getOrElse(applied + 1)
     if (id <= applied) return
     require(!hasDeltas(spark, live),
-      s"deltaRefresh($live): pending streaming _deltas — a CDC refresh " +
+      s"deltaRefresh($live): committed streaming _deltas — a CDC refresh " +
         "cannot compose with unfolded deltas; run compactDeltas first")
     val b = batch
     if (b.parts.isEmpty) {
@@ -191,66 +191,49 @@ object ViewTable {
   //
   // A micro-batch cannot refresh in place: a replayed batch (restart
   // after a crash between sink write and offset commit) would fold
-  // twice. Instead each batch's per-group delta lands under its OWN
-  // `_deltas/batch_id=<id>` partition (overwrite-in-place, so a replay
-  // rewrites the same bytes), serving merges base ⊎ deltas on read,
-  // and compaction folds them into the base in one table swap that
-  // also publishes the `_folded` high-water mark.
+  // twice. Instead each batch's per-group delta commits as one batch
+  // of the `_deltas` overlay log ([[Overlays]], keyed by the batch
+  // id), serving merges base ⊎ committed deltas on read, and
+  // compaction folds them into the base in one table swap that also
+  // publishes the `_folded` high-water mark.
 
-  private val DeltasDir = "_deltas"
+  private val Deltas = Overlays("_deltas")
 
-  private def deltaDir(live: String): String = s"$live/$DeltasDir"
-
-  private[io] def hasDeltas(spark: SparkSession, live: String): Boolean = {
-    val d = new Path(deltaDir(live))
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(d) && fs.listStatus(d).nonEmpty
-  }
-
-  private def deltaBatchIds(spark: SparkSession, live: String): Seq[Long] = {
-    val d = new Path(deltaDir(live))
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).map(_.getPath.getName)
-      .collect { case n if n.startsWith("batch_id=") =>
-        n.stripPrefix("batch_id=").toLong }.toSeq
-  }
+  private[io] def hasDeltas(spark: SparkSession, live: String): Boolean =
+    Deltas.committed(spark, live).nonEmpty
 
   /** One micro-batch's delta: `fold` turns the batch's rows into its
-    * per-group delta, written under this batch's own partition. A
+    * per-group delta, committed as this batch of the `_deltas` log. A
     * batch at or below the `_folded` mark is already in the base (the
     * crash window between compaction and the stream's offset commit)
-    * and no-ops — recreating its delta would count it twice.
+    * and no-ops — recreating its delta would count it twice; so does
+    * a batch whose delta has committed, and an empty one. A delta
+    * whose write failed before its commit point is invisible to every
+    * reader and to [[compact]], and its replay writes it again.
     */
   def writeDelta(added: DataFrame, batchId: Long, root: String)
                 (fold: DataFrame => DataFrame): Unit = {
     val spark = added.sparkSession
     val live = GenTable.live(spark, root)
-    if (batchId <= Marks.readLong(spark, live, "_folded")) return
-    // materialize once: isEmpty is an action and the write is another
-    // — without the checkpoint the micro-batch source is read twice
-    val b = added.localCheckpoint()
-    if (!b.isEmpty)
-      fold(b).write.mode("overwrite")
-        .parquet(s"${deltaDir(live)}/batch_id=$batchId")
+    if (batchId > Marks.readLong(spark, live, "_folded"))
+      Deltas.commitBatch(spark, live, batchId)(added)(fold)
   }
 
-  /** The served view: the stored base, or — when deltas are pending —
-    * `merge` over base ⊎ every delta's `cols`.
+  /** The served view: the stored base, or — when deltas have
+    * committed — `merge` over base ⊎ every committed delta's `cols`.
     */
   def readWithDeltas(spark: SparkSession, root: String, cols: Seq[String])
                     (merge: DataFrame => DataFrame): DataFrame = {
     val live = GenTable.live(spark, root)
     val base = read(spark, live)
-    if (!hasDeltas(spark, live)) base
-    else merge(base.unionByName(
-      spark.read.parquet(deltaDir(live)).select(cols.map(col): _*)))
+    Deltas.read(spark, live).fold(base)(d =>
+      merge(base.unionByName(d.select(cols.map(col): _*))))
   }
 
-  /** Fold pending deltas into the base ATOMICALLY: `folded` (the fully
+  /** Fold committed deltas into the base ATOMICALLY: `folded` (the fully
     * merged view, typically the view's readWithDeltas) is materialized
     * and written as a complete new table together with the `_folded`
-    * mark of every absorbed batch id and the carried `_applied`
+    * mark of every committed batch id and the carried `_applied`
     * refresh mark, then published by one table swap
     * ([[GenTable.replace]]): a generation root flips its `_gen`
     * pointer to the new generation (zero copies, no reader gap); a
@@ -269,7 +252,7 @@ object ViewTable {
   def compact(spark: SparkSession, root: String, groupCols: Seq[String])
              (folded: => DataFrame): Unit = {
     val live = GenTable.live(spark, root)
-    val mark = (deltaBatchIds(spark, live) :+
+    val mark = (Deltas.committed(spark, live).map(_._1) :+
       Marks.readLong(spark, live, "_folded")).max
     val applied = PartCommit.lastApplied(spark, live)
     GenTable.replace(spark, root) { stage =>

@@ -880,30 +880,29 @@ object Dedup {
   // "touched-partition rewrite" degenerates to a full-table rewrite
   // (~1.2 TB of signatures at the 100 TB corpus): O(corpus) per
   // forget. The deferred path is O(batch): the delete lands as a
-  // TOMBSTONE id list under `_tombstones/batch_id=<id>-<fingerprint>`,
-  // one batch of the [[graft.io.Overlays]] log (one parquet file,
-  // committed by its `_done` marker); readers apply committed
-  // tombstones with an anti-join, and [[compactSignatures]] folds
-  // them into the base.
+  // TOMBSTONE id list, one batch of the [[graft.io.Overlays]] log (one
+  // parquet file, committed by its `_done` marker); readers apply
+  // committed tombstones with an anti-join, and [[compactSignatures]]
+  // folds them into the base.
   //
   // Contract: tombstone bulk is bounded by deletes-since-compaction
   // (compact before it rivals the table); single-writer per table,
   // the package-wide rule; EXTERNAL raw-parquet readers (the stored
   // SQL namespace) see the base only — compact before raw serving,
   // the same pending-state contract the maintained views' `_deltas`
-  // carry. Batch dirs are keyed by (batchId, CONTENT fingerprint),
-  // not batchId alone: exactly-once must survive a batch-id "era
-  // reset" (a replaced stream checkpoint, a re-bootstrapped label
-  // store) — with id-only keying a new era's batch N would find the
-  // old era's `_done` and silently skip a real delete, while
-  // content-keying sends it to a fresh dir and both eras' deletes
-  // stand (tombstones are idempotent SETS — union is always correct
-  // for ids that were each genuinely deleted). This is also why the
-  // [[graft.io.ViewTable]] delta protocol is NOT reused here: delta
-  // batches are additive FOLD VALUES whose exactly-once hangs on a
+  // carry. Batches are keyed by (batchId, CONTENT fingerprint), not
+  // batchId alone: exactly-once must survive a batch-id "era reset"
+  // (a replaced stream checkpoint, a re-bootstrapped label store) —
+  // with id-only keying a new era's batch N would find the old era's
+  // `_done` and silently skip a real delete, while content-keying
+  // sends it to a fresh batch and both eras' deletes stand
+  // (tombstones are idempotent SETS — union is always correct for ids
+  // that were each genuinely deleted). This is where the tombstones
+  // differ from the views' `_deltas`, which share the same log: delta
+  // batches are additive FOLD VALUES keyed by the batch id alone, and
+  // a delta already folded into the base is recognized by the
   // monotone `_folded` high-water mark (an era assumption), whereas
-  // an id-set's natural key is its content — so the tombstones take
-  // the [[graft.io.Overlays]] log, whose batch key is the caller's.
+  // an id-set's natural key is its content.
 
   private val Tombstones = graft.io.Overlays("_tombstones")
 
@@ -911,14 +910,9 @@ object Dedup {
     * as written), or None when no tombstones are pending.
     */
   private def pendingTombstoneIds(spark: SparkSession,
-                                  live: String): Option[DataFrame] = {
-    val paths = Tombstones.committed(spark, live).map(_._2)
-    if (paths.isEmpty) None
-    else {
-      val ts = spark.read.parquet(paths: _*)
-      Some(ts.select(ts.columns.head).distinct())
-    }
-  }
+                                  live: String): Option[DataFrame] =
+    Tombstones.read(spark, live)
+      .map(ts => ts.select(ts.columns.head).distinct())
 
   private def minusTombstones(spark: SparkSession, live: String,
                               base: DataFrame): DataFrame =

@@ -182,7 +182,7 @@ object MaintainedDistinct {
       })
     }
 
-  // ---- streaming ingest: per-batch register-delta partitions ----
+  // ---- streaming ingest: per-batch register deltas ----
   //
   // The shared delta protocol ([[graft.io.ViewTable.writeDelta]]),
   // made SAFER by the sketch's algebra: because the register merge is
@@ -192,7 +192,7 @@ object MaintainedDistinct {
 
   /** One micro-batch's delta write: `added` rows carry
     * (groupCols ++ keyCol); the per-group register block + row count
-    * land under this batch's own partition.
+    * commit as this batch of the `_deltas` log.
     */
   def writeDeltaPartial(added: DataFrame, batchId: Long,
                         groupCols: Seq[String], keyCol: String,

@@ -243,7 +243,7 @@ object MaintainedSample {
       })
     }
 
-  // ---- streaming ingest: per-batch sample-delta partitions ----
+  // ---- streaming ingest: per-batch sample deltas ----
   //
   // The shared delta protocol ([[graft.io.ViewTable.writeDelta]]), and
   // like the distinct view's registers the sample's algebra makes it SAFER
@@ -252,8 +252,9 @@ object MaintainedSample {
   // folded twice yields the same sample. The batch-id marks exist for
   // IO hygiene (skip known-folded work), not correctness.
 
-  /** One micro-batch's delta: the batch's OWN bottom-m sketch under
-    * its own partition (replay rewrites the same bytes).
+  /** One micro-batch's delta: the batch's OWN bottom-m sketch,
+    * committed as this batch of the `_deltas` log (a committed
+    * batch's replay no-ops).
     */
   def writeDeltaPartial(added: DataFrame, batchId: Long,
                         groupCol: String, keyCol: String,

@@ -100,18 +100,23 @@ object Relational {
 
   /** J4 (scale form) — wide view via single-shuffle pivot: union the
     * long members with a source tag, then groupBy(keys).pivot(tag).
-    * Equivalent to [[wideViewJoin]] when (keys, tag) is unique —
-    * asserted by tests; policy on duplicates: `first` wins (SURVEY
-    * §2.10 / "What's hard").
+    * Equivalent to [[wideViewJoin]] over the [[spine]] when (keys, tag)
+    * is unique — asserted by tests; policy on duplicates: `first` wins
+    * (SURVEY §2.10 / "What's hard"). The pivot's groups are the spine:
+    * a member without `valueCol` adds its keys only (untagged, so it
+    * gets no column), and a null key keeps its values.
     */
   def wideViewPivot(members: Seq[(String, DataFrame)], keys: Seq[String],
                     valueCol: String): DataFrame = {
+    val valued = members.filter(_._2.columns.contains(valueCol))
     val tagged = members.map { case (name, df) =>
-      df.select(keys.map(col) :+ col(valueCol).as("__value"): _*)
-        .withColumn("__src", lit(name))
+      val (value, tag) =
+        if (df.columns.contains(valueCol)) (col(valueCol), lit(name))
+        else (lit(null), lit(null).cast("string"))
+      df.select(keys.map(col) :+ value.as("__value") :+ tag.as("__src"): _*)
     }.reduce(_ unionByName _)
     tagged.groupBy(keys.map(col): _*)
-      .pivot("__src", members.map(_._1))
+      .pivot("__src", valued.map(_._1))
       .agg(first(col("__value"), ignoreNulls = true))
   }
 

@@ -1303,8 +1303,8 @@ object TextOps {
   // enforces this with a fail-fast guard).
 
   /** One micro-batch of NEW docs: append its term-stat deltas to all
-    * three views. Replay-idempotent per view (own-partition overwrite
-    * + the `_folded` mark).
+    * three views. Replay-idempotent per view (a committed delta batch
+    * and the `_folded` mark both no-op the replay).
     */
   def writeTermStatsDeltaPartial(addedDocs: DataFrame, batchId: Long,
                                  idCol: String, textCol: String,

@@ -9,12 +9,15 @@ import graft.operators.Relational
   * (steps/step5_create_views.py:232-444) re-expressed Spark-first.
   *
   * Shape: members are long tables (period, station, Value); the view
-  * is the wide pivot over the distinct (period, station) spine with
-  * one column per member, labels attached from dimension mappings.
+  * is the wide pivot of their tagged union on (period, station) — its
+  * groups are the spine — with one column per member that has a
+  * Value, labels attached from dimension mappings.
   *
   * Scale: the assembly is ONE shuffle — members union into a tagged
   * long table and pivot on the member tag (Relational.wideViewPivot),
-  * instead of the reference's N sequential left joins (N shuffles).
+  * instead of the reference's N sequential left joins (N shuffles)
+  * onto a distinct spine. A null key keeps its member values, as
+  * pandas' merge in the reference matches null keys.
   * Label maps are tiny → broadcast joins. Policy on duplicate
   * (period, station) rows within a member: pivot's `first` wins
   * (reference data has none; SURVEY.md §2.10).
@@ -77,12 +80,15 @@ object Consolidate {
         if (actual == pcol) m.df else m.df.withColumnRenamed(actual, pcol)
       }
 
-    // spine = distinct (period, station) across members (one shuffle)
-    val spineMembers = members.flatMap(normalized)
-      .filter(df => df.columns.contains(scol))
-      .map(_.select(col(pcol), col(scol)))
-    if (spineMembers.isEmpty) return None
-    val spine = Relational.spine(spineMembers, Seq(pcol, scol))
+    // the spine IS the pivot: the tagged union of every normalized
+    // member with the station column, pivoted on the member tag in ONE
+    // shuffle (scale form of the reference's N sequential left joins);
+    // a member without a Value column adds its keys only
+    val keyed = members.flatMap(m => normalized(m).map(m.name -> _))
+      .filter(_._2.columns.contains(scol))
+    if (keyed.isEmpty) return None
+    val spine =
+      Relational.wideViewPivot(keyed, Seq(pcol, scol), Schemas.valueColumn)
 
     // Label maps must be ONE row per key: the reference builds python
     // DICTS (later entries overwrite), so a conflicting label spelling
@@ -106,7 +112,7 @@ object Consolidate {
     // LAST member listing a station supplies its label (member index
     // carried through a max(struct) aggregation)
     val stationLabel = Some(view.stationName).filter(_.nonEmpty)
-    val withLabels = stationLabel
+    val wide = stationLabel
       .map { lbl =>
         val maps = members.zipWithIndex
           .filter { case (m, _) =>
@@ -123,21 +129,6 @@ object Consolidate {
         }
       }
       .getOrElse(withPeriodLabel)
-
-    // values: tagged union + single-shuffle pivot (scale form of the
-    // reference's N sequential left joins)
-    val valueMembers: Seq[(String, DataFrame)] = members.flatMap { m =>
-      if (!m.df.columns.contains(Schemas.valueColumn)) None
-      else normalized(m)
-        .filter(df => df.columns.contains(scol))
-        .map(df => m.name ->
-          df.select(col(pcol), col(scol), col(Schemas.valueColumn).as("value")))
-    }
-    val wide =
-      if (valueMembers.isEmpty) withLabels
-      else withLabels.join(
-        Relational.wideViewPivot(valueMembers, Seq(pcol, scol), "value"),
-        Seq(pcol, scol), "left")
 
     // final shape: [periodName, estacion, members...], existing only
     val renamed = (periodLabelCol.filter(wide.columns.contains) match {

@@ -740,15 +740,17 @@ object Streams {
     * micro-batches the corpus's per-group join-size sketch
     * ([[graft.operators.Sketches.amsSketch]]) lives as a stored
     * partial-sketch table. Each batch sketches ITS OWN rows (one
-    * map-side-combined agg, ≤ groups × 256 cells) and writes the
-    * partial under `batch_id=<id>` — REPLAY-IDEMPOTENT by
-    * construction: sketch merge is bucket-wise SUM, which unlike the
-    * signature appends is NOT idempotent under at-least-once
-    * delivery, so a re-delivered batch must overwrite its own
-    * partition rather than add again. Readers merge with
-    * [[readAmsSketch]] (the sketch's native ADD), so between batches
-    * a join-volume estimate over everything ingested costs one scan
-    * of ≤ batches × groups × 256 rows — the corpus is never re-read.
+    * map-side-combined agg, ≤ groups × 256 cells) and commits the
+    * partial as this batch of the `_partials` log under the sketch
+    * path ([[graft.io.Overlays]]) — REPLAY-IDEMPOTENT: sketch merge is
+    * bucket-wise SUM, which unlike the signature appends is NOT
+    * idempotent under at-least-once delivery, so a re-delivered batch
+    * whose partial has committed no-ops rather than add again, and
+    * one that crashed before its commit point writes it again.
+    * Readers merge the committed partials with [[readAmsSketch]] (the
+    * sketch's native ADD), so between batches a join-volume estimate
+    * over everything ingested costs one scan of ≤ batches × groups ×
+    * 256 rows — the corpus is never re-read.
     */
   def amsMaintainingIngest(rows: DataFrame, groupCol: String,
                            keyCol: String, sketchPath: String,
@@ -765,10 +767,11 @@ object Streams {
   /** Streaming twin of the STORED materialized aggregate
     * ([[graft.io.MaintainedAgg]], q_incr_joinagg's round-12 engine):
     * each micro-batch's rows — already projected to per-row measure
-    * contributions — fold into a per-group delta written under
-    * `_deltas/batch_id=<id>` (the partial-table discipline: delta
-    * merge is SUM, not idempotent under at-least-once delivery, so a
-    * replayed batch overwrites its OWN partition, never adds twice).
+    * contributions — fold into a per-group delta committed as this
+    * batch of the view's `_deltas` log (the partial-table discipline:
+    * delta merge is SUM, not idempotent under at-least-once delivery,
+    * so a replayed batch whose delta has committed no-ops, never adds
+    * twice).
     * Serving reads base ⊎ deltas ([[graft.io.MaintainedAgg
     * .readWithDeltas]] — batches × groups rows, the facts are never
     * re-read); [[graft.io.MaintainedAgg.compactDeltas]] periodically
@@ -796,11 +799,11 @@ object Streams {
       .start()
 
   /** The distinct-count twin of [[viewMaintainingIngest]]: each
-    * micro-batch's per-group HLL register block lands under its own
-    * `_deltas/batch_id=<id>` partition of the
-    * [[graft.operators.MaintainedDistinct]] view (replay-idempotent
-    * own-partition overwrite; the register merge is itself idempotent
-    * max, so only the row counts even need the batch-id discipline);
+    * micro-batch's per-group HLL register block commits as its batch
+    * of the [[graft.operators.MaintainedDistinct]] view's `_deltas`
+    * log (a committed batch's replay no-ops; the register merge is
+    * itself idempotent max, so only the row counts even need the
+    * batch-id discipline);
     * serve with `MaintainedDistinct.estimatesWithDeltas`, fold with
     * `compactDeltas`.
     */
@@ -818,10 +821,10 @@ object Streams {
       .start()
 
   /** The quantile-sample twin: each micro-batch's bottom-m sketch
-    * lands under its own `_deltas/batch_id=<id>` partition of the
-    * [[graft.operators.MaintainedSample]] view; the sample merge (set
-    * union + keep-bottom-m) is associative AND idempotent, so replay
-    * safety holds by algebra, not bookkeeping. Serve with
+    * commits as its batch of the [[graft.operators.MaintainedSample]]
+    * view's `_deltas` log; the sample merge (set union + keep-bottom-m)
+    * is associative AND idempotent, so replay safety holds by algebra,
+    * not bookkeeping. Serve with
     * `MaintainedSample.readWithDeltas`, fold with `compactDeltas`.
     */
   def sampleMaintainingIngest(rows: DataFrame, groupCol: String,
@@ -863,33 +866,30 @@ object Streams {
       }
       .start()
 
-  /** One micro-batch's partial-sketch write (factored out so the
-    * replay-idempotence contract is testable without a stream):
-    * overwrite-in-place of this batch's OWN partition only.
+  private val Partials = graft.io.Overlays("_partials")
+  private val Counts = graft.io.Overlays("_counts")
+
+  /** One micro-batch's partial-sketch commit (factored out so the
+    * replay-idempotence contract is testable without a stream): a
+    * batch whose partial has committed, or an empty one, no-ops.
     */
   private[streaming] def writeAmsPartial(batch: Dataset[org.apache.spark.sql.Row],
                                          batchId: Long, groupCol: String,
                                          keyCol: String,
-                                         sketchPath: String): Unit = {
-    // materialize once: isEmpty is an action and write is another —
-    // without the checkpoint the micro-batch source is read twice
-    // (the file's established foreachBatch discipline)
-    val b = batch.localCheckpoint()
-    if (!b.isEmpty)
-      graft.operators.Sketches.amsSketch(b, groupCol, keyCol)
-        .write.mode("overwrite")
-        .parquet(s"$sketchPath/batch_id=$batchId")
-  }
+                                         sketchPath: String): Unit =
+    Partials.commitBatch(batch.sparkSession, sketchPath, batchId)(
+      batch.toDF())(graft.operators.Sketches.amsSketch(_, groupCol, keyCol))
 
   /** Streaming trending readout — the serving twin of
     * [[graft.operators.Temporal.trendingItems]]: each micro-batch's
-    * (day, item) counts land under `batch_id=<id>` (the
-    * [[amsMaintainingIngest]] partial-table discipline — counts ADD,
-    * so a replayed batch must overwrite its own partition, never sum
-    * twice), and the per-day top-n surge report over EVERYTHING
-    * ingested so far is handed to the caller after each batch. The
-    * stored table is (batches × active day×item cells) rows — the
-    * report never re-reads raw events.
+    * (day, item) counts commit as this batch of the `_counts` log
+    * under `countsPath` (the [[amsMaintainingIngest]] partial-table
+    * discipline — counts ADD, so a replayed batch whose counts have
+    * committed no-ops, never sums twice), and the per-day top-n surge
+    * report over EVERYTHING ingested so far is handed to the caller
+    * after each non-empty batch, a replayed one included. The stored
+    * table is (batches × active day×item cells) rows — the report
+    * never re-reads raw events.
     */
   def trendingMaintainingIngest(events: DataFrame, tsCol: String,
                                 itemCol: String, countsPath: String,
@@ -900,17 +900,13 @@ object Streams {
       .outputMode("append")
       .options(options)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // materialize the daily cells once — isEmpty and write are
-        // separate actions and would otherwise re-aggregate the batch
-        val daily = batch
+        val spark = batch.sparkSession
+        val cells = batch
           .select(to_date(col(tsCol)).as("day"), col(itemCol).as("item"))
           .filter(col("item").isNotNull)
-          .groupBy("day", "item").agg(count(lit(1)).as("n"))
-          .localCheckpoint()
-        if (!daily.isEmpty) {
-          daily.write.mode("overwrite")
-            .parquet(s"$countsPath/batch_id=$id")
-          val merged = batch.sparkSession.read.parquet(countsPath)
+        if (Counts.commitBatch(spark, countsPath, id)(cells)(
+              _.groupBy("day", "item").agg(count(lit(1)).as("n")))) {
+          val merged = Counts.read(spark, countsPath).get
             .groupBy("day", "item").agg(sum(col("n")).as("n"))
           onReport(graft.operators.Temporal
             .trendingItems(merged, "item", "day", "n"), id)
@@ -919,15 +915,16 @@ object Streams {
       .start()
 
   /** Merged view of a [[amsMaintainingIngest]] sketch table: bucket-
-    * wise SUM over the per-batch partials (partition discovery reads
-    * `batch_id=` from the directory names; the merge drops it). The
-    * result is exactly [[graft.operators.Sketches.amsSketch]] of
-    * every row ingested so far (spec-pinned), ready for the pair
-    * estimate in [[graft.operators.Sketches.amsJoinSize]]'s shape.
+    * wise SUM over the committed per-batch partials. The result is
+    * exactly [[graft.operators.Sketches.amsSketch]] of every row
+    * ingested so far (spec-pinned), ready for the pair estimate in
+    * [[graft.operators.Sketches.amsJoinSize]]'s shape.
     */
   def readAmsSketch(spark: SparkSession, sketchPath: String,
                     groupCol: String): DataFrame =
-    spark.read.parquet(sketchPath)
+    Partials.read(spark, sketchPath)
+      .getOrElse(throw new IllegalArgumentException(
+        s"readAmsSketch($sketchPath): no committed sketch partial"))
       .groupBy(col(groupCol), col("b"))
       .agg(sum(col("xv")).as("xv"))
 

@@ -263,6 +263,52 @@ class ObjectStoreCommitSpec extends SparkSpec {
       "the gen-pointer protocol must never rename in scope")
   }
 
+  test("delta crash matrix: a crash at every mutation of two delta " +
+      "writes, then compaction and replay, serves the from-scratch fold") {
+    // two successive micro-batches under one armed scope; whatever the
+    // crash leaves, the stream's next steps are a compaction (the
+    // operator's) and the replay of both batch ids
+    def deltas(root: String): Unit = {
+      MaintainedAgg.writeDeltaPartial(batch(("a", 2), ("d", 3)), 1L,
+        Seq("k"), Seq("m"), "n", root)
+      MaintainedAgg.writeDeltaPartial(batch(("b", 1), ("e", 4)), 2L,
+        Seq("k"), Seq("m"), "n", root)
+    }
+    def served(root: String): Map[String, (BigDecimal, Long)] =
+      MaintainedAgg.readWithDeltas(spark, root, Seq("k"), Seq("m"), "n")
+        .select(col("k"), col("m").cast("decimal(38,6)"), col("n"))
+        .collect()
+        .map(r => r.getString(0) ->
+          (BigDecimal(r.getDecimal(1)), r.getLong(2))).toMap
+    // the from-scratch fold of the seed rows and both batches
+    val want = Map(
+      "a" -> (BigDecimal(12), 2L), "b" -> (BigDecimal(8), 2L),
+      "c" -> (BigDecimal(5), 1L), "d" -> (BigDecimal(3), 1L),
+      "e" -> (BigDecimal(4), 1L))
+    var k = 1L
+    var uncrashed = false
+    var windows = 0
+    while (!uncrashed && k <= 100) {
+      val root = tmp()
+      seed(root)
+      SimFs.arm(scopeOf(root), failFrom = k)
+      val crashed =
+        try { deltas(root); false }
+        catch { case _: Throwable => true }
+      SimFs.disarm()
+      if (!crashed) uncrashed = true else windows += 1
+      MaintainedAgg.compactDeltas(spark, root, Seq("k"), Seq("m"), "n")
+      deltas(root)
+      assert(served(root) == want, s"window #$k diverged: ${served(root)}")
+      MaintainedAgg.compactDeltas(spark, root, Seq("k"), Seq("m"), "n")
+      assert(served(root) == want, s"window #$k: fold diverged")
+      k += 1
+    }
+    assert(uncrashed, "matrix never ran past the last mutation (raise the cap)")
+    // each delta write commits its parquet file, then its `_done`
+    assert(windows >= 4, s"too few crash windows exercised: $windows")
+  }
+
   test("component + signature lifecycle runs gen-rooted on the " +
       "object-store protocol") {
     import graft.operators.{Dedup, MaintainedComponents}

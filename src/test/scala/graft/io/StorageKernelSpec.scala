@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One place per storage decision: the generation-root-or-flat and
   * pointer-flip-or-rename choices live only in [[GenTable]], the
   * agg_part views' delta directory, touched-partition commit and
-  * dirty-key driver hop only in [[ViewTable]], the overlay batch
-  * commit marker and auto-compaction bound only in [[Overlays]], and
-  * the whole-table swap only behind [[GenTable.replace]].
+  * dirty-key driver hop only in [[ViewTable]], the per-batch dirs, the
+  * batch commit marker and the auto-compaction bound only in
+  * [[Overlays]], and the whole-table swap only behind
+  * [[GenTable.replace]].
   */
 class StorageKernelSpec extends AnyFunSuite {
 
@@ -57,6 +58,11 @@ class StorageKernelSpec extends AnyFunSuite {
     val bad = offenders("io/Overlays.scala",
       Seq("\"_done\"".r, """spark\.graft\.autoCompactPendingBatches""".r))
     assert(bad.isEmpty, s"overlay commit or bound outside Overlays: $bad")
+  }
+
+  test("only Overlays names batch_id= dirs") {
+    val bad = offenders("io/Overlays.scala", Seq("batch_id=".r))
+    assert(bad.isEmpty, s"per-batch dirs named outside Overlays: $bad")
   }
 
   test("only GenTable.replace runs the staged whole-table swap") {

@@ -10,7 +10,8 @@ import graft.operators.{MaintainedDistinct, MaintainedSample}
 /** The on-disk layout of the agg_part view family, pinned file by
   * file: for the sum, min/max, distinct and sample views, the table
   * tree after bootstrap, refresh(1), a streaming delta write (where
-  * the view has one) and compaction, on an atomic-rename filesystem
+  * the view has one: one part file and its `_done` commit marker)
+  * and compaction, on an atomic-rename filesystem
   * (flat table) and on the non-atomic `simfs://` shim (generation
   * root), rendered by [[TableTree]].
   */
@@ -87,6 +88,7 @@ class ViewTableSpec extends SparkSpec {
     "_SUCCESS",
     "_applied=1",
     "_deltas/batch_id=2/_SUCCESS",
+    "_deltas/batch_id=2/_done=2",
     "_deltas/batch_id=2/part-*.snappy.parquet",
     "_schema=k:string?,m:decimal(38,6)?,n:bigint,agg_part:int?",
     "agg_part=18/part-*.snappy.parquet",
@@ -104,6 +106,30 @@ class ViewTableSpec extends SparkSpec {
   test("sum view layout: file:// (flat)") { pin("file://", sumSteps) }
   test("sum view layout: simfs:// (generation root)") {
     pin("simfs://", sumSteps)
+  }
+
+  test("a delta whose write job fails is not folded, and its replay lands") {
+    val path = tmp("file://")
+    sumSteps.take(2).foreach { case (_, run, _, _) => run(path) }
+    MaintainedAgg.writeDeltaPartial(sumRows(("a", 2)), 1L, Seq("k"),
+      Seq("m"), "n", path)
+    // batch 2's write job fails inside its tasks, after the batch dir
+    // exists: a failed job leaves that dir behind, and compaction must
+    // not take it for a delta it has folded
+    intercept[Exception] {
+      ViewTable.writeDelta(sumRows(("e", 4)), 2L, path)(
+        _.select(col("k"),
+          raise_error(concat(lit("fail "), col("k"))).cast("string")))
+    }
+    MaintainedAgg.compactDeltas(spark, path, Seq("k"), Seq("m"), "n")
+    // the stream's replay of batch 2, with a good fold
+    MaintainedAgg.writeDeltaPartial(sumRows(("e", 4)), 2L, Seq("k"),
+      Seq("m"), "n", path)
+    val served = MaintainedAgg.readWithDeltas(spark, path, Seq("k"),
+      Seq("m"), "n").collect()
+      .map(r => r.getString(0) -> r.getLong(2)).toMap
+    assert(served == Map("a" -> 3L, "c" -> 1L, "d" -> 1L, "e" -> 1L),
+      s"batch 2 lost: $served")
   }
 
   // ---- min/max (no delta writer) ----
@@ -180,6 +206,7 @@ class ViewTableSpec extends SparkSpec {
     "_SUCCESS",
     "_applied=1",
     "_deltas/batch_id=2/_SUCCESS",
+    "_deltas/batch_id=2/_done=2",
     "_deltas/batch_id=2/part-*.snappy.parquet",
     "_schema=g:string?,regs:array<int>?,n:bigint,agg_part:int?",
     "agg_part=1/part-*.snappy.parquet",
@@ -242,6 +269,7 @@ class ViewTableSpec extends SparkSpec {
     "_SUCCESS",
     "_applied=1",
     "_deltas/batch_id=2/_SUCCESS",
+    "_deltas/batch_id=2/_done=2",
     "_deltas/batch_id=2/part-*.snappy.parquet",
     "_schema=g:string?,hv:bigint?,key:string?,v:double?,agg_part:int?",
     "agg_part=1/part-*.snappy.parquet",

@@ -53,6 +53,46 @@ class ConsolidateSpec extends SparkSpec {
     assert(rows.size == 5, "spine = distinct pairs across both members")
   }
 
+  test("a null period key keeps its member values, as pandas' merge does") {
+    val withNull = f1(Seq(
+      ("2021-01", "enero 2021", "S1", "Santiago", 30.0),
+      (null, null, "S1", "Santiago", 33.0)))
+    val out = Consolidate.consolidate(view, {
+      case "tempMax" => Some(Steps.removeFlagColumns(withNull))
+      case "tempMin" => Some(Steps.removeFlagColumns(tempMin))
+      case _ => None
+    }).get
+    val nullRows = out.filter(out("mes").isNull && out("tempMax") === 33.0)
+    assert(nullRows.count() == 1, "the null-key row lost its value")
+  }
+
+  test("a member without a Value column adds its keys, not a column") {
+    val keysOnly = Steps.removeFlagColumns(f1(Seq(
+      ("2021-01", "enero 2021", "S1", "Santiago", null),
+      ("2021-05", "mayo 2021", "S4", "Temuco", null)))).drop("Value")
+    val v = ViewDef("v_keys", Seq("tempMax", "keysOnly"), "DTI_CL_MES",
+      "mes", "DTI_CL_ESTACIONES_METEO", "Estaciones meteorológicas DMC",
+      "mensual")
+    val out = Consolidate.consolidate(v, {
+      case "tempMax" => Some(Steps.removeFlagColumns(tempMax))
+      case "keysOnly" => Some(keysOnly)
+      case _ => None
+    }).get
+    assert(out.columns.toSeq == Seq("mes", "estacion", "tempMax"))
+    val rows = out.collect().map(r =>
+      (r.getString(1), Option(r.get(2)))).toSet
+    assert(rows == Set(("Santiago", Some(30.0)), ("Valparaíso", Some(25.0)),
+      ("Santiago", Some(31.0)), ("Temuco", None)), s"rows: $rows")
+    // no member has a Value: the view is its spine
+    val bare = Consolidate.consolidate(
+      v.copy(tables = Seq("keysOnly")), {
+        case "keysOnly" => Some(keysOnly)
+        case _ => None
+      }).get
+    assert(bare.columns.toSeq == Seq("mes", "estacion"))
+    assert(bare.count() == 2)
+  }
+
   test("quirk: period labels only from the FIRST member") {
     val out = Consolidate.consolidate(view, tables).get
     // 2021-03 exists only in tempMin (2nd member) → NULL label; the

@@ -100,20 +100,30 @@ class CodegenAuditSpec extends SparkSpec {
   test("no declared query silently falls out of whole-stage codegen") {
     val bad = scala.collection.mutable.SortedMap[String, Seq[String]]()
     for ((name, q) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)) {
-      val df = q(spark, sf)
-      df.queryExecution.toRdd.foreach(_ => ()) // finalize AQE
-      val main = offenders(df.queryExecution.executedPlan)
-      // subquery plans (scalar/IN) are their own compilation units
-      val subs = df.queryExecution.executedPlan.subqueriesAll
-        .flatMap(s => offenders(s))
-      val all = (main ++ subs).distinct
-      if (all.nonEmpty && !pinned.contains(name)) bad(name) = all
+      // a query that throws is listed with its error and the sweep
+      // goes on, so one failure does not hide the queries after it
+      scala.util.Try {
+        val df = q(spark, sf)
+        df.queryExecution.toRdd.foreach(_ => ()) // finalize AQE
+        val main = offenders(df.queryExecution.executedPlan)
+        // subquery plans (scalar/IN) are their own compilation units
+        val subs = df.queryExecution.executedPlan.subqueriesAll
+          .flatMap(s => offenders(s))
+        (main ++ subs).distinct
+      } match {
+        case scala.util.Success(all) =>
+          if (all.nonEmpty && !pinned.contains(name)) bad(name) = all
+        case scala.util.Failure(e) =>
+          bad(name) = Seq(s"threw ${e.getClass.getSimpleName}: " +
+            String.valueOf(e.getMessage).linesIterator.nextOption()
+              .getOrElse(""))
+      }
       // the Verify-style between-query cleanup: cached plans and dead
       // localCheckpoint blocks must not pressure later queries
       graft.Memo.releaseUnheld(spark)
     }
     assert(bad.isEmpty,
-      s"${bad.size} queries run capable operators interpreted " +
+      s"${bad.size} queries throw or run capable operators interpreted " +
         s"(pin with a reason or fix):\n" +
         bad.map { case (n, ops) => s"  $n: ${ops.mkString(", ")}" }
           .mkString("\n"))

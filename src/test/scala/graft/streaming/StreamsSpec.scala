@@ -1317,8 +1317,9 @@ class StreamsSpec extends SparkSpec {
         (b0 ++ b1).toDF("g", "k"), "g", "k"))
       assert(m(Streams.readAmsSketch(spark, path, "g")) == direct,
         "merged partials must equal the one-shot sketch")
-      // at-least-once replay of batch 1: its partition is OVERWRITTEN,
-      // never summed twice (sketch adds are not idempotent)
+      // at-least-once replay of batch 1: its partial has committed, so
+      // the replay no-ops — never summed twice (sketch adds are not
+      // idempotent)
       Streams.writeAmsPartial(b1.toDF("g", "k"), 1L, "g", "k", path)
       assert(m(Streams.readAmsSketch(spark, path, "g")) == direct,
         "replayed batch must not double-count")
